@@ -90,18 +90,26 @@ def local_frame(spark: SparkSession, data, schema: str):
     (exact under the pandas->Arrow conversion — int64/float64/utf8
     pass through bit-identically); ``schema`` is a DDL string. For
     timestamp/decimal literals keep the plain createDataFrame path.
-    Arrow conversion is enabled at call time (runtime-settable, so a
-    vanilla driver-supplied session gets the fast path too); if Arrow
-    is unavailable createDataFrame falls back to the slow-but-correct
-    path on its own.
+    Arrow conversion is switched on for this one call when the session
+    has it off, then restored (a vanilla driver-supplied session gets
+    the fast path, its conf unchanged); if Arrow is unavailable
+    createDataFrame falls back to the slow-but-correct path on its own.
     """
     import pandas as pd
     from pyspark.sql.types import StructType, _parse_datatype_string
 
     st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:  # noqa: BLE001 - conf may be locked; fallback still works
-        pass
     pdf = pd.DataFrame(data, columns=[f.name for f in st.fields])
-    return spark.createDataFrame(pdf, schema=st)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key, "false")
+    flip = prior.lower() != "true"
+    if flip:
+        try:
+            spark.conf.set(key, "true")
+        except Exception:  # noqa: BLE001 - conf may be locked; fallback still works
+            flip = False
+    try:
+        return spark.createDataFrame(pdf, schema=st)
+    finally:
+        if flip:
+            spark.conf.set(key, prior)

@@ -3,18 +3,15 @@
 The reference logs runs through MLflow (set_experiment / start_run /
 log_params / log_metrics / log_artifact / sklearn.log_model,
 /root/reference/src/training/train.py:131-176) and loads models back
-with ``mlflow.sklearn.load_model`` (src/inference.py:47). ``mlflow``
-is not installed in this environment, so :class:`ModelTracker` keeps
-the exact call shape and delegates to MLflow when it imports;
-otherwise it writes the same logical content to a plain local
-directory tree:
+with ``mlflow.sklearn.load_model`` (src/inference.py:47).
+:class:`ModelTracker` keeps that call shape and writes the same
+logical content to a plain local directory tree:
 
     <root>/<experiment>/run_<NNNN>/
         params.json  metrics.json  artifacts/<files>  model/model.pkl
 
 Run ids are sequential (deterministic); model serialization is
-pickle (the engine's models are pure-numpy dataclasses). Dropping
-mlflow into the environment requires zero call-site changes.
+pickle (the engine's models are pure-numpy dataclasses).
 """
 
 from __future__ import annotations
@@ -26,37 +23,20 @@ from contextlib import contextmanager
 from pathlib import Path
 from typing import Any, Iterator
 
-try:  # pragma: no cover - not present in this environment
-    import mlflow  # noqa: F401
-    import mlflow.sklearn  # noqa: F401
-
-    HAS_MLFLOW = True
-except Exception:  # noqa: BLE001
-    HAS_MLFLOW = False
-
 
 class ModelTracker:
-    """MLflow-call-shaped tracker with a local-directory fallback."""
+    """MLflow-call-shaped tracker over a local directory tree."""
 
-    def __init__(self, root: str | Path = "mlruns-local", use_mlflow: bool | None = None):
+    def __init__(self, root: str | Path = "mlruns-local"):
         self.root = Path(root)
-        self.use_mlflow = HAS_MLFLOW if use_mlflow is None else use_mlflow
         self._experiment = "default"
         self._run_dir: Path | None = None
 
-    # -- mlflow-shaped surface ------------------------------------------------
-
     def set_experiment(self, name: str) -> None:
-        if self.use_mlflow:  # pragma: no cover - env-gated
-            mlflow.set_experiment(name)
         self._experiment = name
 
     @contextmanager
     def start_run(self) -> Iterator["ModelTracker"]:
-        if self.use_mlflow:  # pragma: no cover - env-gated
-            with mlflow.start_run():
-                yield self
-            return
         exp_dir = self.root / self._experiment
         exp_dir.mkdir(parents=True, exist_ok=True)
         n = sum(1 for p in exp_dir.iterdir() if p.name.startswith("run_"))
@@ -68,21 +48,12 @@ class ModelTracker:
             self._run_dir = None
 
     def log_params(self, params: dict[str, Any]) -> None:
-        if self.use_mlflow:  # pragma: no cover - env-gated
-            mlflow.log_params(params)
-            return
         self._merge_json("params.json", {k: str(v) for k, v in params.items()})
 
     def log_metrics(self, metrics: dict[str, float]) -> None:
-        if self.use_mlflow:  # pragma: no cover - env-gated
-            mlflow.log_metrics(metrics)
-            return
         self._merge_json("metrics.json", {k: float(v) for k, v in metrics.items()})
 
     def log_artifact(self, local_path: str) -> None:
-        if self.use_mlflow:  # pragma: no cover - env-gated
-            mlflow.log_artifact(local_path)
-            return
         dst = self._require_run() / "artifacts"
         dst.mkdir(exist_ok=True)
         shutil.copy2(local_path, dst / Path(local_path).name)
@@ -90,13 +61,7 @@ class ModelTracker:
     def log_model(self, model: Any, name: str = "model") -> str:
         """Persist the model under the active run; returns its path
         (mlflow.sklearn.log_model analogue)."""
-        if self.use_mlflow:  # pragma: no cover - env-gated
-            info = mlflow.sklearn.log_model(model, name=name)
-            return info.model_uri
-        out = self._require_run() / name
-        return save_model(model, out)
-
-    # -- fallback internals ---------------------------------------------------
+        return save_model(model, self._require_run() / name)
 
     def _require_run(self) -> Path:
         if self._run_dir is None:
@@ -123,9 +88,6 @@ def save_model(model: Any, path: str | Path) -> str:
 def load_model(path: str | Path) -> Any:
     """Load a model saved by :func:`save_model` /
     :meth:`ModelTracker.log_model` (mlflow.sklearn.load_model
-    analogue; delegates to MLflow for real MLflow URIs)."""
-    p = Path(path)
-    if HAS_MLFLOW and not (p / "model.pkl").exists():  # pragma: no cover
-        return mlflow.sklearn.load_model(str(path))
-    with open(p / "model.pkl", "rb") as f:
+    analogue)."""
+    with open(Path(path) / "model.pkl", "rb") as f:
         return pickle.load(f)

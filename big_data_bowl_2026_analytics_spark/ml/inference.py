@@ -7,6 +7,7 @@ numpy per batch, never per-row Python.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -19,29 +20,16 @@ from .model import LogisticModel
 def score_column(model: LogisticModel, *cols: Column) -> Column:
     """Probability column from feature columns via a pandas UDF.
 
-    Linear models ship only (weights, bias) in the closure and score
-    as one matmul; any other model object (e.g. the gated
-    XGBModelAdapter) is cloudpickled whole and scored through its
-    ``predict_proba`` — same Arrow batching either way, so swapping
-    backends changes nothing at the call sites."""
-    import numpy as np
+    Only (weights, bias) travel in the closure; each Arrow batch
+    scores as one matmul."""
+    weights = model.weights.copy()
+    bias = float(model.bias)
 
-    if hasattr(model, "weights"):
-        weights = model.weights.copy()
-        bias = float(model.bias)
-
-        @F.pandas_udf(DoubleType())
-        def _score(*series: pd.Series) -> pd.Series:
-            X = np.column_stack([s.to_numpy(dtype=float) for s in series])
-            z = X @ weights + bias
-            return pd.Series(1.0 / (1.0 + np.exp(-z)))
-
-    else:
-
-        @F.pandas_udf(DoubleType())
-        def _score(*series: pd.Series) -> pd.Series:
-            X = np.column_stack([s.to_numpy(dtype=float) for s in series])
-            return pd.Series(np.asarray(model.predict_proba(X), dtype=float))
+    @F.pandas_udf(DoubleType())
+    def _score(*series: pd.Series) -> pd.Series:
+        X = np.column_stack([s.to_numpy(dtype=float) for s in series])
+        z = X @ weights + bias
+        return pd.Series(1.0 / (1.0 + np.exp(-z)))
 
     return _score(*cols)
 
@@ -58,11 +46,8 @@ def score_column_native(model: LogisticModel, *cols: Column) -> Column:
     association order as numpy's ``X @ w`` — so the result agrees with
     the pandas-UDF path bit-for-near-bit (last-ulp exp differences
     only; verified 0 of 85k rows differ after the engine's standard
-    6-decimal round). Opaque backends (XGBModelAdapter) have no
-    expression form and must use :func:`score_column`.
+    6-decimal round).
     """
-    if not hasattr(model, "weights"):
-        raise ValueError("native scoring requires a linear (weights) model")
     z: Column = F.lit(float(model.weights[0])) * cols[0]
     for w, c in zip(model.weights[1:], cols[1:]):
         z = z + F.lit(float(w)) * c
@@ -76,11 +61,9 @@ def score_dataframe(
     output_col: str = "probability",
     native: bool = False,
 ) -> DataFrame:
-    """Attach the model probability for ``model.feature_cols``.
-
-    ``native=True`` compiles a linear model to JVM column math
-    (:func:`score_column_native`); the default keeps the Arrow UDF
-    path, which works for every backend."""
+    """Attach the model probability for ``model.feature_cols``: JVM
+    column math with ``native=True`` (:func:`score_column_native`),
+    else the Arrow pandas UDF (:func:`score_column`)."""
     scorer = score_column_native if native else score_column
     return df.withColumn(
         output_col, scorer(model, *[F.col(c) for c in model.feature_cols])

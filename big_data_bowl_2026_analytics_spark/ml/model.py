@@ -1,93 +1,18 @@
 """Classifier for the non-completion-probability task.
 
 The reference trains an XGBoost classifier with a 64-combo grid search
-(/root/reference/src/training/train.py:125-181). XGBoost isn't in this
-environment, so the engine ships a deterministic numpy logistic
-regression with the same role in the pipeline: small training set
-collected to the driver (the reference's train set is 1,941 rows),
-distributed scoring executor-side via a pandas UDF (see
-``inference.py``). The model abstraction is the part that matters for
-the engine — swap in xgboost.spark.SparkXGBClassifier when available
-(guarded import below).
+(reference src/training/train.py:125-181). The engine ships a
+deterministic numpy logistic regression with the same role in the
+pipeline: small training set collected to the driver (the reference's
+train set is 1,941 rows), distributed scoring executor-side (see
+``inference.py``).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
-
-def _import_xgboost():
-    """Resolve xgboost at CALL time (not module-import time), so the
-    backend flips the moment the library appears in the environment —
-    and so tests can exercise the full swap path by installing a mock
-    module in sys.modules with zero engine-code changes."""
-    import xgboost
-
-    return xgboost
-
-
-def has_xgboost() -> bool:
-    try:
-        _import_xgboost()
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-#: Reference XGBoost grid, mirrored verbatim
-#: (/root/reference/src/core/settings.py:110-123; 2^6 = 64 combos).
-XGB_PARAM_GRID: dict[str, tuple] = {
-    "n_estimators": (200, 400),
-    "learning_rate": (0.05, 0.1),
-    "max_depth": (4, 5),
-    "subsample": (0.8, 1.0),
-    "colsample_bytree": (0.8, 1.0),
-    "reg_lambda": (1.0, 2.0),
-}
-
-
-def build_xgb_model(
-    n_estimators: int,
-    learning_rate: float,
-    max_depth: int,
-    subsample: float,
-    colsample_bytree: float,
-    reg_lambda: float,
-    random_state: int = 42,
-):
-    """XGBClassifier with the reference's configuration shape
-    (/root/reference/src/training/model.py:13-58): same validation,
-    same pinned seed, eval_metric='auc'."""
-    if not (0 < subsample <= 1):
-        raise ValueError("subsample must be in the interval ]0, 1].")
-    if not (0 < colsample_bytree <= 1):
-        raise ValueError("colsample_bytree must be in the interval ]0, 1].")
-    xgb = _import_xgboost()
-    return xgb.XGBClassifier(
-        n_estimators=n_estimators,
-        learning_rate=learning_rate,
-        max_depth=max_depth,
-        subsample=subsample,
-        colsample_bytree=colsample_bytree,
-        reg_lambda=reg_lambda,
-        random_state=random_state,
-        eval_metric="auc",
-    )
-
-
-@dataclass
-class XGBModelAdapter:
-    """Uniform scoring surface over a fitted XGBClassifier: the rest
-    of the engine (inference pandas UDF, evaluation, permutation
-    importance) sees the same ``predict_proba(X) -> 1-d probs`` that
-    LogisticModel exposes."""
-
-    booster: object
-    feature_cols: tuple[str, ...]
-
-    def predict_proba(self, X: np.ndarray) -> np.ndarray:
-        return np.asarray(self.booster.predict_proba(X))[:, 1]
 
 
 @dataclass

@@ -83,45 +83,15 @@ def grid_search(
     feature_cols: tuple[str, ...] = FEATURE_COLS,
     label_col: str = "target",
     grid: dict[str, tuple] | None = None,
-    max_workers: int = 8,
-    backend: str = "auto",
 ) -> FitResult:
     """Deterministic grid search: every combo fit on train, scored on
-    validation log loss; best combo wins, first-wins on ties.
-
-    ``backend``: 'auto' uses xgboost when importable (the reference's
-    model family, its 64-combo grid from
-    /root/reference/src/core/settings.py:110-123) and the numpy
-    logistic surrogate otherwise; 'xgboost'/'logistic' force one.
-    Dropping xgboost into the environment changes which branch 'auto'
-    takes — nothing at the call sites."""
-    from .model import XGB_PARAM_GRID, XGBModelAdapter, build_xgb_model, has_xgboost
-
-    if backend == "auto":
-        backend = "xgboost" if has_xgboost() else "logistic"
-    if backend == "xgboost":
-        grid = grid or XGB_PARAM_GRID
-    else:
-        grid = grid or DEFAULT_GRID
+    validation log loss; best combo wins, first-wins on ties."""
+    grid = grid or DEFAULT_GRID
     Xtr, ytr = _to_xy(train_df, feature_cols, label_col)
     Xv, yv = _to_xy(val_df, feature_cols, label_col)
 
     keys = sorted(grid)
     combos = [dict(zip(keys, vals)) for vals in itertools.product(*(grid[k] for k in keys))]
-
-    if backend == "xgboost":
-
-        def fit_xgb(combo: dict) -> FitResult:
-            clf = build_xgb_model(**combo)
-            clf.fit(Xtr, ytr)
-            model = XGBModelAdapter(booster=clf, feature_cols=feature_cols)
-            loss = _log_loss(yv, model.predict_proba(Xv))
-            return FitResult(model=model, params=combo, val_log_loss=loss)
-
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            results = list(pool.map(fit_xgb, combos))
-        best_idx = int(np.argmin([r.val_log_loss for r in results]))
-        return results[best_idx]
 
     def fit(combo: dict) -> FitResult:
         Xt, Xval = Xtr, Xv
@@ -146,7 +116,7 @@ def grid_search(
             model = LogisticModel(weights=w, bias=b, feature_cols=feature_cols)
         return FitResult(model=model, params=combo, val_log_loss=loss)
 
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    with ThreadPoolExecutor(max_workers=8) as pool:
         results = list(pool.map(fit, combos))
     best_idx = int(np.argmin([r.val_log_loss for r in results]))
     return results[best_idx]

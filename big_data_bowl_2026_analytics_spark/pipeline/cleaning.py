@@ -288,24 +288,19 @@ def clean_tracking(
     cleaned_plays: DataFrame,
     raw_plays: DataFrame,
     players: DataFrame,
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The full tracking cleaning DAG (reference tracking.py:456-549),
     over the partitioned tables instead of a per-week driver loop.
     Returns (before_clean, after_clean).
 
-    ``checkpoint`` truncates lineage at the frames each later stage
-    reuses (before-enriched, post-closest-defender, post-filters).
+    Each ``localCheckpoint`` truncates lineage at a frame later stages
+    reuse (before-enriched, post-closest-defender, post-filters).
     Without it, every reuse re-embeds the upstream subtree and the
     logical plan grows combinatorially — Catalyst analysis alone can
     OOM a default-sized driver. This mirrors the reference's CSV
-    materialization between stages; on a cluster swap localCheckpoint
-    for persisted parquet/DISK storage of the stage outputs.
+    materialization between stages; a reliable stage for clusters
+    (checkpoint dir or parquet) is ROADMAP.md direction 2.
     """
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if checkpoint else df
-
     qb = add_team_info(
         add_player_info(
             _core(raw_before.where(F.col("player_role") == "Passer")), players
@@ -314,17 +309,18 @@ def clean_tracking(
     )
 
     before = _core(sync_players(raw_before, raw_after))
-    before = _ckpt(add_team_info(add_player_info(before, players), raw_plays))
+    before = add_team_info(add_player_info(before, players), raw_plays)
+    before = before.localCheckpoint(eager=False)
 
     after = carry_before_cols_to_after(before, raw_after)
-    after = _ckpt(closest_defender(after))
-    before = _ckpt(sync_players(before, after))
+    after = closest_defender(after).localCheckpoint(eager=False)
+    before = sync_players(before, after).localCheckpoint(eager=False)
     after = sync_players(after, before)
 
     after = normalize_direction(after)
     after = add_team_info(add_player_info(after, players), raw_plays)
     after = one_receiver_one_db(after)
-    after = _ckpt(ball_landing_filter(after, cleaned_plays))
+    after = ball_landing_filter(after, cleaned_plays).localCheckpoint(eager=False)
 
     before = sync_players(before, after)
     before = before.unionByName(qb, allowMissingColumns=True)

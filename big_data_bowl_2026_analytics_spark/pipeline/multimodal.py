@@ -3,11 +3,8 @@
 Images/audio/video are opaque ``binary`` columns with typed metadata
 alongside; decode / feature-extract / resize / frame-sample run as
 Arrow-batched ``mapInPandas`` stages so the bytes never round-trip
-through Python row objects. The decode step itself is environment-
-gated: with no imaging/audio libraries in this container, a
-deterministic byte-level fake stands in (clearly marked), while the
-Spark-side plumbing — schema, batch iteration, partitioning, UDF
-signatures — is real and tested.
+through Python row objects. BMP and WAVE blobs decode for real; other
+codecs get a deterministic byte-level fake (see ``_decode``).
 
 Scale notes: blobs dominate partition size, so the media table should
 be written with a small ``maxRecordsPerFile`` / row-group size, and
@@ -26,13 +23,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - not available in this container
-    from PIL import Image  # noqa: F401
-
-    HAS_IMAGING = True  # capability flag for codec formats (PNG/JPEG)
-except Exception:  # noqa: BLE001
-    HAS_IMAGING = False
 
 #: Canonical media-table schema: blob + typed metadata.
 MEDIA_SCHEMA = T.StructType(
@@ -130,8 +120,7 @@ def _decode(blob: bytes, media_type: str) -> np.ndarray:
     BMP and PCM WAVE — dispatched on magic bytes. Anything else
     (PNG/JPEG/MP3/MP4 need codec libraries this container lacks)
     falls back to a DETERMINISTIC FAKE (sha256-seeded bytes, clearly
-    labeled) so the pipeline shape stays fully testable; swap in
-    PIL/librosa/ffmpeg by extending this one function.
+    labeled) so the pipeline shape stays fully testable.
     """
     if media_type == "image" and blob[:2] == b"BM":
         return decode_bmp(blob).astype(np.float64).ravel()

@@ -20,10 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -93,64 +89,6 @@ def running_user_profile(events: DataFrame) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-class RunningProfileProcessor(StatefulProcessor):
-    """``transformWithState`` flavor of the running profile: the same
-    per-key state machine expressed against the Spark 4.x arbitrary-
-    state API, which adds composite state (value/list/map), timers and
-    TTL over what ``applyInPandasWithState`` offers. State lives in the
-    (RocksDB-backed) state store partitioned by key; each micro-batch
-    touches only the keys it contains.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("profile", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues  # noqa: N803
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if self._state.exists():
-            n, total, mx = self._state.get()
-        else:
-            n, total, mx = 0, 0.0, float("-inf")
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            if len(pdf):
-                mx = max(mx, float(pdf["value"].max()))
-        self._state.update((n, total, mx))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "total_value": [round(total, 6)],
-                "max_value": [mx],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_profile_tws(events: DataFrame) -> DataFrame:
-    """Same running profile via ``transformWithStateInPandas``.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``); the legacy
-    HDFS-backed provider does not support transformWithState.
-    """
-    # Same §4.3 pre-projection as running_user_profile: the processor
-    # reads only `value`, so don't ship the other columns into state.
-    return events.select("user_id", "value").groupBy(
-        "user_id"
-    ).transformWithStateInPandas(
-        statefulProcessor=RunningProfileProcessor(),
-        outputStructType=_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -352,135 +290,6 @@ def running_value_records(events: DataFrame) -> DataFrame:
         stateStructType=_RECORD_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_SESSION_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n_events", LongType()),
-        StructField("sum_cents", LongType()),
-    ]
-)
-
-_SESSION_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start_us", LongType()),
-        StructField("session_end_us", LongType()),
-        StructField("n_events", LongType()),
-        StructField("sum_cents", LongType()),
-        StructField("closed_by", StringType()),
-    ]
-)
-
-
-class SessionGapProcessor(StatefulProcessor):
-    """Event-time session window with a gap timeout, as a Spark 4.x
-    ``transformWithState`` processor — the second TWS operator next to
-    RunningProfileProcessor, and the one that exercises what the
-    legacy ``applyInPandasWithState`` API cannot express directly:
-    TIMERS. A session closes either when a later event arrives more
-    than ``gap_us`` after the previous one (emitted inline, closed_by
-    'gap') or when the registered event-time timer fires because the
-    watermark passed session_end + gap with no successor (closed_by
-    'timeout') — so quiet users still flush without waiting for their
-    next visit.
-
-    State is O(1) per key (start, last, count, exact-cents sum —
-    values quantized by ``half_up_cents`` so downstream compares are
-    integer, the q386 rule) plus at most ONE registered timer per key
-    (the previous one is deleted before re-registering). Under the
-    in-order-ingest contract the emitted 'gap' sessions equal the
-    batch gaps-and-islands sessionization (q24 family) exactly;
-    'timeout' rows are the streaming-only tail batch jobs never see.
-    """
-
-    def __init__(self, gap_us: int = 30 * 60 * 1_000_000) -> None:
-        self._gap_us = int(gap_us)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("session", _SESSION_STATE_SCHEMA)
-
-    def _row(self, user_id, start, end, n, cents, why) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "user_id": [int(user_id)],
-                "session_start_us": [int(start)],
-                "session_end_us": [int(end)],
-                "n_events": [int(n)],
-                "sum_cents": [int(cents)],
-                "closed_by": [why],
-            }
-        )
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues  # noqa: N803
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        batch = pd.concat(list(rows), ignore_index=True)
-        if batch.empty:
-            return
-        batch = batch.assign(
-            _us=batch["ts"].astype("datetime64[us]").astype("int64"),
-            _cents=half_up_cents(batch["value"].to_numpy(dtype="float64")),
-        ).sort_values(["_us", "event_id"], kind="mergesort")
-        if self._state.exists():
-            start, last, n, cents = self._state.get()
-        else:
-            start = last = n = cents = None
-        for us, ev_cents in zip(batch["_us"], batch["_cents"]):
-            us, ev_cents = int(us), int(ev_cents)
-            if start is None:
-                start, last, n, cents = us, us, 1, ev_cents
-            elif us - last > self._gap_us:
-                yield self._row(user_id, start, last, n, cents, "gap")
-                start, last, n, cents = us, us, 1, ev_cents
-            else:
-                last, n, cents = max(last, us), n + 1, cents + ev_cents
-        self._state.update((start, last, n, cents))
-        # one live timer per key: the session times out when the
-        # event-time watermark passes last + gap.
-        for t in self._handle.listTimers():
-            self._handle.deleteTimer(t)
-        self._handle.registerTimer((last + self._gap_us) // 1000)
-
-    def handleExpiredTimer(
-        self, key: tuple, timerValues, expiredTimerInfo  # noqa: N803
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if self._state.exists():
-            start, last, n, cents = self._state.get()
-            self._state.clear()
-            yield self._row(user_id, start, last, n, cents, "timeout")
-
-    def close(self) -> None:
-        pass
-
-
-def session_gap_sessions_tws(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "1 hour"
-) -> DataFrame:
-    """Session windows with gap timeout via
-    ``transformWithStateInPandas`` in EventTime mode (timers fire off
-    the watermark). Requires the RocksDB state store provider and the
-    protobuf runtime, like ``running_user_profile_tws``.
-    """
-    # §4.3 pre-projection: the processor reads only ts/event_id/value.
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionGapProcessor(
-                gap_us=gap_minutes * 60 * 1_000_000
-            ),
-            outputStructType=_SESSION_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
     )
 
 

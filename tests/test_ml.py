@@ -67,89 +67,8 @@ def test_calibration_bins(spark):
     assert out[9]["n"] == 3 and out[9]["observed_rate"] == 1.0  # p=1.0 clamps to bin 9
 
 
-def _tiny_train_val(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    X = rng.normal(size=(80, 2))
-    y = (X[:, 0] + 0.5 * X[:, 1] > 0).astype(float)
-    rows = [(float(a), float(b), float(t)) for (a, b), t in zip(X, y)]
-    df = spark.createDataFrame(rows, ["f1", "f2", "target"])
-    return df.limit(60), df.subtract(df.limit(60)) or df
-
-
-def test_xgboost_swap_path_via_mock(spark, monkeypatch):
-    """Install a mock xgboost module and assert grid_search 'auto'
-    routes through it end-to-end — construction with the reference
-    grid's params, fit on the training matrix, predict_proba-based
-    selection, and UDF scoring through the adapter — so dropping the
-    real library into the env requires zero engine changes."""
-    import sys
-    import types
-
-    import numpy as np
-
-    from big_data_bowl_2026_analytics_spark.ml.inference import score_dataframe
-    from big_data_bowl_2026_analytics_spark.ml.model import XGBModelAdapter
-    from big_data_bowl_2026_analytics_spark.ml.train import grid_search
-
-    calls = {"init": [], "fit": []}
-
-    class FakeXGBClassifier:
-        def __init__(self, **params):
-            calls["init"].append(params)
-            self.params = params
-
-        def fit(self, X, y):
-            calls["fit"].append((X.shape, y.shape))
-            self._mean = float(np.mean(y))
-            return self
-
-        def predict_proba(self, X):
-            # deterministic, param-dependent: lower reg_lambda -> probs
-            # closer to the labels' mean (arbitrary but stable)
-            p = np.full(len(X), self._mean / self.params["reg_lambda"])
-            return np.column_stack([1 - p, p])
-
-        def __getstate__(self):
-            return {"params": self.params, "_mean": self._mean}
-
-        def __setstate__(self, state):
-            self.params = state["params"]
-            self._mean = state["_mean"]
-
-    fake = types.ModuleType("xgboost")
-    fake.XGBClassifier = FakeXGBClassifier
-    monkeypatch.setitem(sys.modules, "xgboost", fake)
-
-    train, val = _tiny_train_val(spark)
-    grid = {"n_estimators": (200,), "learning_rate": (0.1,), "max_depth": (4,),
-            "subsample": (0.8, 1.0), "colsample_bytree": (1.0,), "reg_lambda": (1.0, 2.0)}
-    res = grid_search(train, val, feature_cols=("f1", "f2"), grid=grid)
-
-    # routed through the mock: 4 combos constructed + fit, reference
-    # call shape (pinned seed, auc eval) on every construction
-    assert len(calls["init"]) == 4 and len(calls["fit"]) == 4
-    assert all(p["random_state"] == 42 and p["eval_metric"] == "auc" for p in calls["init"])
-    assert isinstance(res.model, XGBModelAdapter)
-    assert res.params["reg_lambda"] in (1.0, 2.0)
-    # the adapter scores through the same pandas-UDF path
-    scored = score_dataframe(val.select("f1", "f2"), res.model)
-    probs = [r["probability"] for r in scored.collect()]
-    assert len(probs) == val.count() and all(0 <= p <= 1 for p in probs)
-
-
-def test_xgb_model_param_validation():
-    from big_data_bowl_2026_analytics_spark.ml.model import build_xgb_model
-
-    with pytest.raises(ValueError):
-        build_xgb_model(200, 0.1, 4, subsample=0.0, colsample_bytree=1.0, reg_lambda=1.0)
-    with pytest.raises(ValueError):
-        build_xgb_model(200, 0.1, 4, subsample=1.0, colsample_bytree=1.5, reg_lambda=1.0)
-
-
 def test_artifact_tracker_roundtrip(tmp_path):
-    """MLflow-shaped tracker fallback: params/metrics/artifacts/model
+    """MLflow-shaped local tracker: params/metrics/artifacts/model
     land in the run dir; the model round-trips bit-identically."""
     import json
 
@@ -167,7 +86,7 @@ def test_artifact_tracker_roundtrip(tmp_path):
     art = tmp_path / "note.txt"
     art.write_text("calibration curve placeholder")
 
-    tracker = ModelTracker(root=tmp_path / "mlruns", use_mlflow=False)
+    tracker = ModelTracker(root=tmp_path / "mlruns")
     tracker.set_experiment("non_completion_probability_classifier")
     with tracker.start_run():
         tracker.log_params({"lr": 0.5, "n_iter": 300})
@@ -191,7 +110,7 @@ def test_artifact_tracker_roundtrip(tmp_path):
 def test_artifact_tracker_sequential_runs(tmp_path):
     from big_data_bowl_2026_analytics_spark.ml.artifacts import ModelTracker
 
-    tracker = ModelTracker(root=tmp_path, use_mlflow=False)
+    tracker = ModelTracker(root=tmp_path)
     tracker.set_experiment("e")
     with tracker.start_run():
         tracker.log_params({"a": 1})

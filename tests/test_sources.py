@@ -213,3 +213,21 @@ def test_parallelize_scan_gates_on_layout(spark):
     else:
         assert out.rdd.getNumPartitions() == target
         assert out.count() == df.count()
+
+
+def test_local_frame_restores_arrow_conf(spark):
+    """On a session with Arrow conversion off, local_frame still builds
+    a JVM LocalRelation and leaves the caller's conf as it found it."""
+    from big_data_bowl_2026_analytics_spark.core.session import local_frame
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = local_frame(spark, [(1, 0.5, "a"), (2, 1.5, "b")], "k long, x double, s string")
+        assert spark.conf.get(key) == "false"
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert [tuple(r) for r in df.orderBy("k").collect()] == [(1, 0.5, "a"), (2, 1.5, "b")]
+    finally:
+        spark.conf.set(key, prior)

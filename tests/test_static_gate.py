@@ -12,12 +12,18 @@ round, so a regression fails CI instead of a verdict:
 3. ``.toPandas()`` only in the deliberately driver-side ML grid
    search (SURVEY §2.9 U6);
 4. no bare ``except:`` (always name the exception class);
-5. every module compiles under ``ast.parse`` (syntax gate).
+5. every module compiles under ``ast.parse`` (syntax gate);
+6. every import names the stdlib, the package itself or a runtime
+   dependency declared in ``pyproject.toml`` — no code path may exist
+   only for a library the package does not depend on.
 """
 
 from __future__ import annotations
 
 import ast
+import re
+import sys
+import tomllib
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / (
@@ -116,3 +122,28 @@ def test_no_bare_except():
             if isinstance(node, ast.ExceptHandler) and node.type is None:
                 offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, f"bare except: {offenders}"
+
+
+def _declared_dependencies() -> set[str]:
+    pyproject = tomllib.loads((PKG.parent / "pyproject.toml").read_text())
+    return {
+        re.match(r"[A-Za-z0-9_.-]+", dep).group(0).replace("-", "_").lower()
+        for dep in pyproject["project"]["dependencies"]
+    }
+
+
+def test_imports_are_stdlib_or_declared_dependencies():
+    allowed = set(sys.stdlib_module_names) | _declared_dependencies() | {PKG.name}
+    offenders = []
+    for rel, tree in _parsed():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module]
+            else:
+                continue
+            for name in names:
+                if name.split(".")[0] not in allowed:
+                    offenders.append(f"{rel}:{node.lineno}:{name}")
+    assert not offenders, f"imports outside the declared dependencies: {offenders}"

@@ -181,62 +181,6 @@ def test_stream_static_join(spark, events_dir):
     assert got == batch
 
 
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark, events_dir):
-    """The Spark 4.x transformWithState processor must drain to the
-    same final per-user profile as the applyInPandasWithState operator
-    (and therefore as the batch aggregate it was already checked
-    against). Needs the RocksDB state store provider, and the
-    TransformWithStateInPySpark driver worker imports google.protobuf
-    for its state-server protocol — skip where that runtime dep is
-    absent (this container has no protobuf and installs are barred).
-    """
-    pytest.importorskip("google.protobuf")
-    from big_data_bowl_2026_analytics_spark.streaming.stateful import (
-        running_user_profile_tws,
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, events_dir)
-        q = (
-            running_user_profile_tws(stream)
-            .writeStream.format("memory")
-            .queryName("profile_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-
-    updates = spark.table("profile_tws").toPandas()
-    final = updates.groupby("user_id").tail(1).set_index("user_id")
-    batch = (
-        read_table(spark, SF, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total_value"),
-            F.max("value").alias("max_value"),
-        )
-        .toPandas()
-        .set_index("user_id")
-    )
-    assert len(final) == len(batch)
-    for uid in batch.index:
-        assert final.loc[uid, "n_events"] == batch.loc[uid, "n_events"]
-        assert abs(final.loc[uid, "total_value"] - batch.loc[uid, "total_value"]) < 1e-6
-        assert final.loc[uid, "max_value"] == batch.loc[uid, "max_value"]
-
 
 def test_stateful_operators_prune_arrow_boundary(spark, events_dir):
     """r13 optimization (guide §4.3): every grouped-state operator
@@ -333,25 +277,6 @@ def test_windowed_agg_operators_prune_props_at_scan(spark, events_dir):
         assert scans, (name, plan)
         for ln in scans:
             assert "props" not in ln, (name, ln)
-
-
-def test_transform_with_state_plan_constructs(spark, events_dir):
-    """Plan-level check that always runs: the transformWithState
-    operator analyzes against a streaming source and declares the
-    documented output schema (execution needs protobuf; analysis
-    doesn't)."""
-    from big_data_bowl_2026_analytics_spark.streaming.stateful import (
-        running_user_profile_tws,
-    )
-
-    out = running_user_profile_tws(read_events_stream(spark, events_dir))
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "user_id",
-        "n_events",
-        "total_value",
-        "max_value",
-    ]
 
 
 def test_stream_merge_upsert_snapshot(spark, events_dir, tmp_path):
@@ -1196,233 +1121,6 @@ def test_half_up_cents_matches_spark_round_on_dyadic_boundaries(spark):
     assert list(got) == list(spark_cents)
     # the boundary pandas half-to-even would flip:
     assert got[0] == 13 and got[2] == -13
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers = []
-
-    def getValueState(self, name, schema):  # noqa: N802
-        return self.state
-
-    def listTimers(self):  # noqa: N802
-        return list(self.timers)
-
-    def deleteTimer(self, t):  # noqa: N802
-        self.timers.remove(t)
-
-    def registerTimer(self, t):  # noqa: N802
-        self.timers.append(t)
-
-
-def _drive_session_processor(batches, gap_us):
-    """Run SessionGapProcessor's state machine directly (no Spark, no
-    protobuf): feed per-user in-order pandas batches, then fire the
-    final timer, and return the emitted session rows."""
-    import pandas as pd
-
-    from big_data_bowl_2026_analytics_spark.streaming.stateful import (
-        SessionGapProcessor,
-    )
-
-    proc = SessionGapProcessor(gap_us=gap_us)
-    handle = _FakeHandle()
-    proc.init(handle)
-    out = []
-    for pdf in batches:
-        out.extend(proc.handleInputRows((7,), iter([pdf]), None))
-    out.extend(proc.handleExpiredTimer((7,), None, None))
-    return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
-
-
-def test_session_gap_processor_matches_brute_force_sessionizer():
-    """The TWS session state machine, driven directly through fake
-    handle/state/timer objects, must emit exactly the sessions a
-    brute-force gaps-and-islands pass over the concatenated event
-    stream produces — logic-level coverage that runs in THIS container
-    (the drain test below needs the protobuf runtime and skips)."""
-    import numpy as np
-    import pandas as pd
-
-    gap_us = 10_000_000  # 10 s
-    rng = np.random.RandomState(42)
-    t, times = 0, []
-    for _ in range(60):
-        t += int(rng.randint(1, 30)) * 1_000_000  # 1-29 s steps
-        times.append(t)
-    values = np.round(rng.uniform(0.0, 20.0, len(times)), 2)
-    ev = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(np.array(times), unit="us"),
-            "event_id": np.arange(len(times), dtype="int64"),
-            "value": values,
-        }
-    )
-    # brute force over the full in-order stream
-    cents = np.floor(values * 100.0 + 0.5).astype("int64")
-    expected = []
-    start = i0 = 0
-    for i in range(1, len(times)):
-        if times[i] - times[i - 1] > gap_us:
-            expected.append(
-                (times[i0], times[i - 1], i - i0, int(cents[i0:i].sum()))
-            )
-            i0 = i
-    expected.append(
-        (times[i0], times[-1], len(times) - i0, int(cents[i0:].sum()))
-    )
-    # drive the processor with 3 arbitrary in-order batch splits
-    got = _drive_session_processor(
-        [ev.iloc[:25], ev.iloc[25:40], ev.iloc[40:]], gap_us
-    )
-    got_t = list(
-        zip(
-            got["session_start_us"],
-            got["session_end_us"],
-            got["n_events"],
-            got["sum_cents"],
-        )
-    )
-    assert got_t == expected
-    assert list(got["closed_by"])[:-1] == ["gap"] * (len(expected) - 1)
-    assert list(got["closed_by"])[-1] == "timeout"
-    assert (got["user_id"] == 7).all()
-
-
-def test_session_gap_processor_timer_hygiene():
-    """At most one live timer per key: every batch deletes the prior
-    registration before arming the new one."""
-    import numpy as np
-    import pandas as pd
-
-    from big_data_bowl_2026_analytics_spark.streaming.stateful import (
-        SessionGapProcessor,
-    )
-
-    proc = SessionGapProcessor(gap_us=5_000_000)
-    handle = _FakeHandle()
-    proc.init(handle)
-    for k in range(4):
-        pdf = pd.DataFrame(
-            {
-                "ts": pd.to_datetime(np.array([k * 1_000_000]), unit="us"),
-                "event_id": np.array([k], dtype="int64"),
-                "value": np.array([1.0]),
-            }
-        )
-        list(proc.handleInputRows((1,), iter([pdf]), None))
-        assert len(handle.timers) == 1
-        assert handle.timers[0] == (k * 1_000_000 + 5_000_000) // 1000
-
-
-def test_session_gap_tws_plan_constructs(spark, events_dir):
-    """Analysis-level check that always runs: the session TWS operator
-    builds a streaming plan with the documented schema (execution
-    needs protobuf)."""
-    from big_data_bowl_2026_analytics_spark.streaming.stateful import (
-        session_gap_sessions_tws,
-    )
-
-    out = session_gap_sessions_tws(read_events_stream(spark, events_dir))
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "user_id",
-        "session_start_us",
-        "session_end_us",
-        "n_events",
-        "sum_cents",
-        "closed_by",
-    ]
-
-
-def test_session_gap_tws_drains_to_batch_sessions(spark, events_dir):
-    """Full drain vs the batch gaps-and-islands sessionization (needs
-    the protobuf runtime for the TWS state server — skipped here)."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql.window import Window
-
-    from big_data_bowl_2026_analytics_spark.streaming.stateful import (
-        session_gap_sessions_tws,
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, events_dir)
-        q = (
-            session_gap_sessions_tws(stream, gap_minutes=30)
-            .writeStream.format("memory")
-            .queryName("sessions_tws")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-
-    got = spark.table("sessions_tws").toPandas()
-    ev = read_table(spark, SF, "events").select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "event_id",
-        "value",
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (
-        F.unix_micros(F.col("ts"))
-        - F.unix_micros(F.lag("ts").over(w))
-    )
-    sess = (
-        ev.withColumn(
-            "new_sess",
-            F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0),
-        )
-        .withColumn("sess_id", F.sum("new_sess").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ))
-        .groupBy("user_id", "sess_id")
-        .agg(
-            F.min(F.unix_micros("ts")).alias("session_start_us"),
-            F.max(F.unix_micros("ts")).alias("session_end_us"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .toPandas()
-    )
-    batch = {
-        (r.user_id, r.session_start_us): (r.session_end_us, r.n_events)
-        for r in sess.itertuples()
-    }
-    stream_rows = {
-        (r.user_id, r.session_start_us): (r.session_end_us, r.n_events)
-        for r in got.itertuples()
-    }
-    assert stream_rows == batch
 
 
 def test_stateful_lateness_audit_matches_batch(spark, tmp_path_factory):
