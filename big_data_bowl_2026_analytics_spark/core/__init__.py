@@ -1,3 +1,3 @@
-from .session import get_spark, local_frame, stop_spark
+from .session import get_spark, local_frame
 
-__all__ = ["get_spark", "local_frame", "stop_spark"]
+__all__ = ["get_spark", "local_frame"]

@@ -67,12 +67,6 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 def local_frame(spark: SparkSession, data, schema: str):
     """A driver-side literal frame as a true JVM **LocalRelation**.
 

@@ -6,7 +6,6 @@ from .scalar import (
     flip_angle,
     flip_coordinate,
     fround,
-    orientation_error,
     piecewise_recovery_score,
     unit_vector,
 )
@@ -19,7 +18,6 @@ __all__ = [
     "flip_angle",
     "flip_coordinate",
     "fround",
-    "orientation_error",
     "piecewise_recovery_score",
     "unit_vector",
 ]

@@ -94,15 +94,6 @@ def closing_speed(
     return -(def_speed * vx * dx + def_speed * vy * dy) / dist
 
 
-def orientation_error(
-    def_x: Column, def_y: Column, def_o_deg: Column, rec_x: Column, rec_y: Column
-) -> Column:
-    """F8 — angular error between the defender's body orientation and
-    the bearing to the receiver; reference features.py:111-112."""
-    bearing = F.degrees(F.atan2(rec_y - def_y, rec_x - def_x))
-    return angle_diff(F.pmod(bearing + 360.0, F.lit(360.0)), def_o_deg)
-
-
 def piecewise_recovery_score(pass_result: Column, prob: Column) -> Column:
     """F15 — piecewise recovery scoring. C -> -p, I -> 1-p,
     IN -> 1.2*(1-p). The interception multiplier is 1.2 as in the

@@ -28,6 +28,21 @@ _MIN_SIZE = 2
 _JUMP = 5
 
 
+def _l2_cost_fns(signal: np.ndarray):
+    """``cost(a, b)``: the L2 cost of segment ``signal[a:b]``. Prefix
+    sums make each call O(1):
+    cost(a, b) = sum(x[a:b]^2) - (sum(x[a:b])^2) / (b - a)."""
+    x = np.asarray(signal, dtype=float)
+    c1 = np.concatenate([[0.0], np.cumsum(x)])
+    c2 = np.concatenate([[0.0], np.cumsum(x * x)])
+
+    def cost(a: int, b: int) -> float:
+        s = c1[b] - c1[a]
+        return (c2[b] - c2[a]) - s * s / (b - a)
+
+    return cost
+
+
 def pelt_l2(signal: np.ndarray, pen: float = _PEN, min_size: int = _MIN_SIZE, jump: int = _JUMP) -> list[int]:
     """PELT with L2 (sum of squared deviations) segment cost.
 
@@ -50,17 +65,8 @@ def pelt_l2(signal: np.ndarray, pen: float = _PEN, min_size: int = _MIN_SIZE, ju
     never-better-than-optimal plus a concrete ruptures-parity
     counterexample for the artifact class.
     """
-    x = np.asarray(signal, dtype=float)
-    n = x.size
-    # Prefix sums make any segment's L2 cost O(1):
-    # cost(a, b) = sum(x[a:b]^2) - (sum(x[a:b])^2) / (b - a)
-    c1 = np.concatenate([[0.0], np.cumsum(x)])
-    c2 = np.concatenate([[0.0], np.cumsum(x * x)])
-
-    def cost(a: int, b: int) -> float:
-        s = c1[b] - c1[a]
-        return (c2[b] - c2[a]) - s * s / (b - a)
-
+    n = len(signal)
+    cost = _l2_cost_fns(signal)
     ends = [k for k in range(0, n, jump) if k >= min_size]
     ends.append(n)
 
@@ -93,18 +99,6 @@ def pelt_l2(signal: np.ndarray, pen: float = _PEN, min_size: int = _MIN_SIZE, ju
         ]
     _, bkps = partitions[n]
     return bkps
-
-
-def _l2_cost_fns(signal: np.ndarray):
-    x = np.asarray(signal, dtype=float)
-    c1 = np.concatenate([[0.0], np.cumsum(x)])
-    c2 = np.concatenate([[0.0], np.cumsum(x * x)])
-
-    def cost(a: int, b: int) -> float:
-        s = c1[b] - c1[a]
-        return (c2[b] - c2[a]) - s * s / (b - a)
-
-    return cost
 
 
 def partition_objective(

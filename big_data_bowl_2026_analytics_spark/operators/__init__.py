@@ -7,7 +7,7 @@ from .dedup import (
     minhash_signatures,
     simhash,
 )
-from .joins import broadcast_left_join, left_anti_keys, left_semi_keys
+from .joins import broadcast_left_join, left_semi_keys
 from .quality import (
     DataQualityError,
     assert_many_to_one,
@@ -17,7 +17,7 @@ from .quality import (
     expect_columns,
     null_audit,
 )
-from .similarity import ann_topk, brute_force_topk, lsh_bucket
+from .similarity import ann_topk, brute_force_topk
 from .skew import salted_aggregation, salted_join
 from .temporal import asof_join, range_join_buckets
 from .textstats import language_id, quality_scores, shingle_fingerprints, token_stats
@@ -37,10 +37,8 @@ __all__ = [
     "expect_columns",
     "jaccard_similar_pairs",
     "language_id",
-    "left_anti_keys",
     "left_semi_keys",
     "lsh_bands",
-    "lsh_bucket",
     "lsh_candidate_pairs",
     "minhash_signatures",
     "null_audit",

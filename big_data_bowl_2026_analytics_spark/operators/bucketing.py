@@ -13,20 +13,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int = 8,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Save as a bucketed managed table (bucket metadata lives in the
-    catalog, so only ``saveAsTable`` works — not path-based writes)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
+from ..sources.writers import write_bucketed  # noqa: F401  (re-export)
 
 
 def bucketed_join(

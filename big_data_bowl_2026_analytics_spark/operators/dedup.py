@@ -171,6 +171,15 @@ def lsh_candidate_pairs(
     )
 
 
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """LSH candidate pairs ``(doc_a, doc_b, n_shared_bands)`` over word
+    3-gram MinHash: 8 hashes in four 2-row bands — the candidate
+    preamble every near-dup query shares (oracle side:
+    ``plans.oracle_sql.MINHASH_LSH``)."""
+    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
+    return lsh_candidate_pairs(lsh_bands(sig, n_hashes=8, band_size=2))
+
+
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:
     """SimHash fingerprint over the distinct-token set.
 

@@ -75,6 +75,26 @@ def cooccurrence_edges(
     return pairs.select(F.col("_p.a").alias("a"), F.col("_p.b").alias("b")).distinct()
 
 
+def edge_endpoints(edges: DataFrame) -> DataFrame:
+    """One ``v`` row per end of each undirected ``(a, b)`` edge."""
+    return edges.select(F.col("a").alias("v")).unionAll(
+        edges.select(F.col("b").alias("v"))
+    )
+
+
+def node_degrees(edges: DataFrame) -> DataFrame:
+    """``(v, deg)``: edges incident to each node of ``(a, b)`` edges."""
+    return edge_endpoints(edges).groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
+
+
+def bulk_supplier_edges(li: DataFrame) -> DataFrame:
+    """The registry's supplier graph: suppliers ``(a < b)`` that share
+    an order through bulk lines (``l_quantity >= 48``). Orders have at
+    most 7 lines, so the per-order pair expansion is bounded."""
+    hi = li.where(F.col("l_quantity") >= 48)
+    return cooccurrence_edges(hi, "l_orderkey", "l_suppkey")
+
+
 def pagerank(
     edges: DataFrame, damping: float = 0.85, n_iter: int = 5
 ) -> DataFrame:
@@ -88,9 +108,10 @@ def pagerank(
     Scale: the edge+degree frame is materialized ONCE (localCheckpoint
     pre-partitioned on ``src``) and reused every iteration; each
     iteration joins the NODE-sized rank state by explicit broadcast
-    (post-checkpoint frames carry no stats, so the planner would
-    otherwise SortMergeJoin — shuffling the EDGE frame every round;
-    the q299/q360 class), then one groupBy(dst) whose map-side combine
+    (a checkpoint keeps its origin plan's size estimate, and that of
+    an aggregate scales with its edge-sized input, so the planner
+    would otherwise SortMergeJoin — shuffling the EDGE frame every
+    round; the q299/q360 class), then one groupBy(dst) whose map-side combine
     reduces to node grain before its single exchange. Lineage is
     truncated per iteration (the CC-operator lesson: reuse grows
     logical plans combinatorially). The one-row node count joins by
@@ -156,12 +177,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     bounded by the orientation, not raw degree), and wedge closure
     against the canonical edge set.
     """
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = node_degrees(edges)
     # Orient a→b when (deg, id) of a < (deg, id) of b. deg frames are
     # node-sized: plain shuffle joins (AQE broadcasts when small).
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("da"))
@@ -232,7 +248,7 @@ def kcore_profile(
 
     Scale: per round one groupBy(src) degree count plus two BROADCAST
     semi joins of the node-sized survivor frame (the pagerank/q299
-    no-stats rule — the edge frame never shuffles); lineage is
+    edge-sized-estimate rule — the edge frame never shuffles); lineage is
     truncated per round (the CC-operator lesson). Aggregate stats are
     9 one-row frames unioned — the final window runs over
     ``n_rounds + 1`` rows, a bounded funnel.
@@ -292,8 +308,9 @@ def kcore_profile(
             .localCheckpoint(eager=False)
         )
         # Broadcast the node-sized survivor frame into both semi
-        # joins (the pagerank/q299 no-stats rule): the edge frame is
-        # filtered in place instead of shuffling twice per round.
+        # joins (its size estimate is the edge frame's, the pagerank/
+        # q299 rule): the edge frame is filtered in place instead of
+        # shuffling twice per round.
         cur = (
             cur.join(F.broadcast(keep), cur["src"] == keep["v"], "left_semi")
             .join(
@@ -334,13 +351,9 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     pair). Join fan-out is bounded by the orientation, never by raw
     degree; no cartesian anywhere.
     """
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=False)  # orientation joins + final join
-    )
+    deg = node_degrees(edges).localCheckpoint(
+        eager=False
+    )  # orientation joins + final join
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("da"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("db"))
     with_deg = edges.join(da, "a").join(db, "b")
@@ -392,9 +405,10 @@ def bfs_hops(
     textbook message-passing step — with lineage truncated per round
     (the CC-operator lesson). The edge frame is symmetrized and
     checkpointed once; the NODE-sized dist frontier joins by explicit
-    broadcast (post-checkpoint frames carry no stats, so the planner
-    would otherwise SortMergeJoin — shuffling the EDGE frame every
-    round; the q299/q360 class), and the min-groupBy map-side combines
+    broadcast (its checkpoint keeps the edge-sized estimate of the
+    aggregate it came from, so the planner would otherwise
+    SortMergeJoin — shuffling the EDGE frame every round; the
+    q299/q360 class), and the min-groupBy map-side combines
     to node grain before its single exchange.
     """
     dsym = (
@@ -434,9 +448,9 @@ def hits(edges: DataFrame, n_iter: int = 4) -> tuple[DataFrame, DataFrame]:
     Scale: the edge frame is checkpointed once; each round is two
     join+groupBy passes (the pagerank shape, doubled for the
     bipartite recurrence) with the NODE-sized score state joined by
-    explicit broadcast (the pagerank/q299 no-stats-after-checkpoint
-    rule: without the hint the EDGE frame would shuffle twice per
-    round) and per-round lineage truncation; the 1-row max joins by
+    explicit broadcast (the pagerank/q299 edge-sized-estimate rule:
+    without the hint the EDGE frame would shuffle twice per round)
+    and per-round lineage truncation; the 1-row max joins by
     broadcast. Power iteration on the
     nonnegative matrix contracts toward the principal eigenvector, so
     cross-engine float divergence stays at ulp scale through any
@@ -502,7 +516,8 @@ def personalized_pagerank(
     Same scale contract as ``pagerank``: the edge+degree frame and the
     bounded teleport frame are checkpointed once; each iteration is
     one broadcast join of the node-sized rank state (the pagerank
-    no-stats rule — the hint keeps the EDGE frame unshuffled), one
+    edge-sized-estimate rule — the hint keeps the EDGE frame
+    unshuffled), one
     groupBy, and a full outer join against the teleport frame (nodes
     the walk has not reached yet simply have no row — rank exactly 0
     — rather than a dense node-grain frame every round).

@@ -331,9 +331,12 @@ def ivf_topk_indexed(
     folds into one expression — the codegen cliff at
     similarity.py::dot; this form keeps each per-centroid fold as the
     small interpreted HOF it already was."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import cosine, squared_norm
+    from ..operators.similarity import (
+        COSINE_SQL,
+        cosine,
+        squared_norm,
+        top_k_per_query,
+    )
 
     corpus = index.select(
         F.col(id_col).alias("neighbor_id"),
@@ -398,22 +401,9 @@ def ivf_topk_indexed(
     scored = (
         corpus.join(F.broadcast(probes), "cluster_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.expr(
-                "round(aggregate(zip_with(q_vec, c_vec,"
-                " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-                " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-                " / (sqrt(q_norm) * sqrt(c_norm)) + 1e-9, 6)"
-            ),
-        )
+        .withColumn("cosine", F.expr(COSINE_SQL))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return top_k_per_query(scored, k)
 
 
 def ivf_topk(

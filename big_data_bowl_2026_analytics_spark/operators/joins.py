@@ -20,11 +20,6 @@ def left_semi_keys(fact: DataFrame, keys_df: DataFrame, on: Sequence[str]) -> Da
     return fact.join(keys_df.select(*on).dropDuplicates(list(on)), list(on), "left_semi")
 
 
-def left_anti_keys(fact: DataFrame, keys_df: DataFrame, on: Sequence[str]) -> DataFrame:
-    """Keep fact rows whose key does NOT appear (NOT EXISTS)."""
-    return fact.join(keys_df.select(*on).dropDuplicates(list(on)), list(on), "left_anti")
-
-
 def broadcast_left_join(
     fact: DataFrame, dim: DataFrame, on: Sequence[str], dedup_dim: bool = True
 ) -> DataFrame:

@@ -161,3 +161,51 @@ def viterbi_paths(
     for r in rows[1:]:
         out = out.unionByName(r)
     return out
+
+
+def event_transitions(ev: DataFrame) -> DataFrame:
+    """``(event_type, next_type)`` for every event that has a successor
+    in its user's (ts, event_id) order — the one fact-table pass of the
+    event-type Markov chain (one shuffle on user_id)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return ev.select(
+        "event_type", F.lead("event_type").over(w).alias("next_type")
+    ).where(F.col("next_type").isNotNull())
+
+
+def transition_counts(seq: DataFrame) -> DataFrame:
+    """Exact BIGINT count ``c`` per ``(prev_type, next_type)`` pair."""
+    return seq.groupBy(F.col("event_type").alias("prev_type"), "next_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
+    )
+
+
+def stationary_shares(
+    pairs: DataFrame, tot: DataFrame, rounds: int = 12
+) -> tuple[DataFrame, DataFrame]:
+    """Power iteration ``pi <- pi P`` from the uniform start over the
+    chain with transition counts ``pairs`` and per-row totals ``tot``
+    ``(prev_type, t)``. Returns ``(pi, prev_pi)``, both ``(ty, pi)``:
+    the last round and the one before it, so callers can report the
+    L1 step. Every round lives on the bounded |types|^2 frame.
+    """
+    pmat = pairs.join(F.broadcast(tot), "prev_type").select(
+        "prev_type",
+        "next_type",
+        (F.col("c").cast("double") / F.col("t")).alias("p"),
+    )
+    k = tot.agg(F.count(F.lit(1)).alias("k"))
+    pi = tot.crossJoin(F.broadcast(k)).select(
+        F.col("prev_type").alias("ty"),
+        (F.lit(1.0) / F.col("k")).alias("pi"),
+    )
+    prev_pi = None
+    for _ in range(rounds):
+        prev_pi = pi
+        pi = (
+            pi.join(pmat, pi.ty == pmat.prev_type)
+            .groupBy(F.col("next_type").alias("ty2"))
+            .agg(F.sum(F.col("pi") * F.col("p")).alias("pi"))
+            .select(F.col("ty2").alias("ty"), "pi")
+        )
+    return pi, prev_pi

@@ -107,6 +107,21 @@ def deterministic_group_sample(
     )
 
 
+def _hash_uniform(hash_cols: Sequence[str], salt: str) -> Column:
+    """A uniform in (0, 1) from the first 32 bits of md5(row hash ||
+    salt): (k + 0.5) / 2^32, exact in double on every engine."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(row_hash(list(hash_cols)), F.lit(salt))), 1, 8
+            ),
+            16,
+            10,
+        ).cast("double")
+        + F.lit(0.5)
+    ) / F.lit(float(16**8))
+
+
 def weighted_sample(
     df: DataFrame,
     k: int,
@@ -126,16 +141,7 @@ def weighted_sample(
     as TakeOrderedAndProject (per-partition k then a k·P merge — no
     global sort). Weights must be > 0.
     """
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(row_hash(list(hash_cols)), F.lit(salt))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(16**8))
+    u = _hash_uniform(hash_cols, salt)
     priority = F.pow(u, F.lit(1.0) / F.col(weight_col))
     return (
         df.withColumn("sample_priority", priority)
@@ -171,16 +177,7 @@ def weighted_bernoulli_sample(
     structure, no shuffle of the kept rows. Adds ``sample_u`` (the
     uniform, for audit).
     """
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(row_hash(list(hash_cols)), F.lit(salt))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(16**8))
+    u = _hash_uniform(hash_cols, salt)
     total = df.select(F.sum(F.col(weight_col)).cast("double").alias("_W"))
     return (
         df.withColumn("sample_u", u)

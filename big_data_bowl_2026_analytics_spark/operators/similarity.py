@@ -11,7 +11,7 @@ equi-join: the scale path when the corpus no longer fits a cross join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -71,8 +71,6 @@ def brute_force_topk(
     against the broadcast queries and keeps a local heap via the
     row_number window on (query_id); only #queries x k rows survive.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -96,6 +94,23 @@ def brute_force_topk(
             ),
         )
     )
+    return top_k_per_query(scored, k)
+
+
+#: Rounded cosine of ``q_vec`` and ``c_vec`` from their squared norms
+#: ``q_norm``/``c_norm``, as one parsed SQL expression.
+COSINE_SQL = (
+    "round(aggregate(zip_with(q_vec, c_vec,"
+    " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+    " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    " / (sqrt(q_norm) * sqrt(c_norm)) + 1e-9, 6)"
+)
+
+
+def top_k_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best ``(query_id, neighbor_id, rank, cosine)``
+    rows: cosine descending, neighbor_id ascending as the total-order
+    tie-break (one window partitioned by query_id)."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -181,14 +196,6 @@ def with_lsh_bucket(
     return bound.withColumn(out_col, bucket).drop(*names)
 
 
-def lsh_bucket(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
-    """Single-expression bucket id (residue-sum algebra, identical
-    values to :func:`with_lsh_bucket`); prefer ``with_lsh_bucket`` in
-    plans — without a projection to bind them, the residue sums are
-    re-evaluated once per plane."""
-    return bucket_from_sums(residue_sums(vec, dim), n_planes)
-
-
 def ann_index(
     vectors: DataFrame,
     n_planes: int = 8,
@@ -229,8 +236,6 @@ def ann_topk_indexed(
     If ``queries`` already carries the index columns (e.g. it IS a
     filtered slice of the index), it is used directly — no semi-join,
     one scan fewer."""
-    from pyspark.sql import Window
-
     if {"sqnorm", "bucket", vec_col, id_col} <= set(queries.columns):
         q_src = queries
     else:
@@ -254,22 +259,9 @@ def ann_topk_indexed(
     scored = (
         c.join(F.broadcast(q), "bucket")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.expr(
-                "round(aggregate(zip_with(q_vec, c_vec,"
-                " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-                " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-                " / (sqrt(q_norm) * sqrt(c_norm)) + 1e-9, 6)"
-            ),
-        )
+        .withColumn("cosine", F.expr(COSINE_SQL))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return top_k_per_query(scored, k)
 
 
 def brute_force_topk_matmul(
@@ -299,8 +291,6 @@ def brute_force_topk_matmul(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window
-
     q_rows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
@@ -328,14 +318,8 @@ def brute_force_topk_matmul(
     scored = vectors.select(id_col, vec_col).mapInPandas(
         score, "query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return top_k_per_query(
+        scored.where(F.col("neighbor_id") != F.col("query_id")), k
     )
 
 
@@ -414,8 +398,6 @@ def ann_topk_multitable(
     ``max`` is a no-op dedup — and ranked once. At 100 TB each bucket
     column is an ingest-time index column (ann_index pattern) and the
     union is a union of per-table probes, never a rescan."""
-    from pyspark.sql import Window
-
     sums = residue_sums(F.col(vec_col), dim)
     names = [f"_lsh_s{r}" for r in range(len(sums))]
     bound = vectors.select(
@@ -472,14 +454,7 @@ def ann_topk_multitable(
     dedup = union.groupBy("query_id", "neighbor_id").agg(
         F.max("cosine").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        dedup.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return top_k_per_query(dedup, k)
 
 
 def ann_topk(

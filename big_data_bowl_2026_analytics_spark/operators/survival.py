@@ -16,6 +16,31 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _duration_histogram(life: DataFrame) -> DataFrame:
+    """``(t, n_at, n_events)``: subjects and observed events per
+    duration — the calendar-bounded grain every estimator runs on."""
+    return life.groupBy("t").agg(
+        F.count(F.lit(1)).alias("n_at"),
+        F.sum("churned").alias("n_events"),
+    )
+
+
+def _risk_sets(hist: DataFrame) -> DataFrame:
+    """``(t, n_events, n_risk)``: the subjects still at risk just before
+    each duration — the total less the exact cumulative count of
+    earlier durations."""
+    tot = hist.agg(F.sum("n_at").alias("n_total"))
+    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    return hist.crossJoin(F.broadcast(tot)).select(
+        "t",
+        F.col("n_events").cast("bigint").alias("n_events"),
+        (
+            F.col("n_total")
+            - F.coalesce(F.sum("n_at").over(w_prev), F.lit(0))
+        ).cast("bigint").alias("n_risk"),
+    )
+
+
 def kaplan_meier(life: DataFrame) -> DataFrame:
     """Survival curve for a subject-grain frame with columns
     ``t`` (non-negative integer duration) and ``churned`` (1 = the
@@ -25,22 +50,9 @@ def kaplan_meier(life: DataFrame) -> DataFrame:
     ``(t, n_risk, n_events, survival)`` — ``survival`` UNROUNDED
     (callers apply the fround pair before any cross-engine compare).
     """
-    hist = life.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_at"),
-        F.sum("churned").alias("n_events"),
-    )
-    tot = hist.agg(F.sum("n_at").alias("n_total"))
-    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    risk = _risk_sets(_duration_histogram(life))
     w_cum = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
-    )
-    risk = hist.crossJoin(F.broadcast(tot)).select(
-        "t",
-        "n_events",
-        (
-            F.col("n_total")
-            - F.coalesce(F.sum("n_at").over(w_prev), F.lit(0))
-        ).cast("bigint").alias("n_risk"),
     )
     # When every at-risk subject churns at one time, the factor is 0:
     # Spark's log(0) is NULL and DuckDB's ln(0) raises, so the term is
@@ -73,22 +85,9 @@ def nelson_aalen(life: DataFrame) -> DataFrame:
     duration with at least one event; callers derive H = ppm / 1e6
     and the Breslow survival exp(-H).
     """
-    hist = life.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_at"),
-        F.sum("churned").alias("n_events"),
-    )
-    tot = hist.agg(F.sum("n_at").alias("n_total"))
-    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    risk = _risk_sets(_duration_histogram(life))
     w_cum = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
-    )
-    risk = hist.crossJoin(F.broadcast(tot)).select(
-        "t",
-        F.col("n_events").cast("bigint").alias("n_events"),
-        (
-            F.col("n_total")
-            - F.coalesce(F.sum("n_at").over(w_prev), F.lit(0))
-        ).cast("bigint").alias("n_risk"),
     )
     na = risk.withColumn(
         "cum_hazard_ppm",
@@ -125,22 +124,12 @@ def kaplan_meier_greenwood(life: DataFrame) -> DataFrame:
     Returns ``(t, n_risk, n_events, survival, greenwood_e12)`` for
     every duration with at least one event; survival UNROUNDED.
     """
-    hist = life.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_at"),
-        F.sum("churned").alias("n_events"),
-    ).localCheckpoint(eager=False)  # total branch + risk branch
-    tot = hist.agg(F.sum("n_at").alias("n_total"))
-    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    hist = _duration_histogram(life).localCheckpoint(
+        eager=False
+    )  # total branch + risk branch
+    risk = _risk_sets(hist)
     w_cum = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
-    )
-    risk = hist.crossJoin(F.broadcast(tot)).select(
-        "t",
-        F.col("n_events").cast("bigint").alias("n_events"),
-        (
-            F.col("n_total")
-            - F.coalesce(F.sum("n_at").over(w_prev), F.lit(0))
-        ).cast("bigint").alias("n_risk"),
     )
     term = F.when(
         F.col("n_events") == F.col("n_risk"), F.lit(float("-inf"))

@@ -209,3 +209,56 @@ def interval_overlap_join(
         F.col(f"{start_col}_r").cast("double") < F.col(end_col).cast("double")
     )
     return lt.join(rt, cond).where(overlap).drop("_b", "_rb")
+
+
+#: Inactivity gap (seconds) that starts a new session.
+SESSION_GAP_S = 1800
+
+
+def sessionize(ev: DataFrame) -> DataFrame:
+    """``ev`` plus ``new_session`` (1 on a user's first event and after
+    a gap over :data:`SESSION_GAP_S`) and ``session_id`` (its running
+    sum), both in (ts, event_id) order per user_id — the batch
+    sessionization every session query shares.
+
+    Scale: one shuffle on user_id; the flag lag and the running sum
+    share the same window spec, so they run in one Window operator.
+    """
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    epoch = F.col("ts").cast("double")
+    return ev.withColumn(
+        "new_session",
+        F.when(
+            (epoch - F.lag(epoch).over(w) > SESSION_GAP_S)
+            | F.lag("ts").over(w).isNull(),
+            1,
+        ).otherwise(0),
+    ).withColumn(
+        "session_id",
+        F.sum("new_session").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
+
+
+def hourly_counts(ev: DataFrame, *keys: str) -> DataFrame:
+    """Events per (``keys``, epoch hour ``h``) as BIGINT ``x``."""
+    return (
+        ev.select(
+            *keys,
+            F.floor(F.col("ts").cast("double") / 3600).cast("bigint").alias("h"),
+        )
+        .groupBy(*keys, "h")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+    )
+
+
+def hour_grid(counts: DataFrame) -> DataFrame:
+    """Every hour ``h`` from the first to the last hour in ``counts``,
+    with the first hour as ``mn`` — the dense spine that turns missing
+    hours into real zeros once counts are left-joined onto it.
+    """
+    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    return bounds.select(
+        F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h"), "mn"
+    )

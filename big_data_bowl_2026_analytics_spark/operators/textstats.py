@@ -212,6 +212,21 @@ def pattern_match_counts(
     return df.select(*out)
 
 
+def _distinct_grams(
+    df: DataFrame, n: int, text_col: str, id_col: str
+) -> DataFrame:
+    """``(id_col, sh)``: each document's distinct word-``n``-grams
+    (documents shorter than ``n`` words have none)."""
+    bound = (
+        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
+        .where(F.size("_toks") >= n)
+        .select(F.col(id_col), shingles_of(F.col("_toks"), n).alias("_sh"))
+    )
+    return bound.select(
+        F.col(id_col), F.explode(F.array_distinct("_sh")).alias("sh")
+    )
+
+
 def contamination_ratio(
     df: DataFrame,
     n: int = 3,
@@ -225,14 +240,7 @@ def contamination_ratio(
     in for an eval suite). The benchmark shingle set is broadcast —
     eval suites are tiny next to a training corpus — so the probe adds
     no shuffle to the corpus scan. Integer ratio: engine-exact."""
-    bound = (
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
-        .where(F.size("_toks") >= n)
-        .select(F.col(id_col), shingles_of(F.col("_toks"), n).alias("_sh"))
-    )
-    grams = bound.select(
-        F.col(id_col), F.explode(F.array_distinct("_sh")).alias("sh")
-    )
+    grams = _distinct_grams(df, n, text_col, id_col)
     bench = (
         grams.where(F.col(id_col) % benchmark_mod == 0).select("sh").distinct()
     )
@@ -268,14 +276,7 @@ def boilerplate_ngram_stats(
     that BROADCASTS back — no second shuffle of the exploded grams by
     gram key, and the per-doc aggregates shuffle on doc_id only.
     """
-    bound = (
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
-        .where(F.size("_toks") >= n)
-        .select(F.col(id_col), shingles_of(F.col("_toks"), n).alias("_sh"))
-    )
-    grams = bound.select(
-        F.col(id_col), F.explode(F.array_distinct("_sh")).alias("sh")
-    ).localCheckpoint(eager=False)
+    grams = _distinct_grams(df, n, text_col, id_col).localCheckpoint(eager=False)
     hot = (
         grams.groupBy("sh")
         .agg(F.countDistinct(id_col).alias("_nd"))

@@ -11,29 +11,24 @@ Modules map to SURVEY.md §2 operator classes:
 - ``mlq``         — distributed model scoring + evaluation (§2.9 U7/U8)
 """
 
-import os
-
-#: Submodules that register queries on import. The package imports all
-#: of them eagerly unless BDBL_LAZY_QUERIES=1 (an opt-in for tools that
-#: only need a few submodules and import them directly). The env var
-#: can NEVER make the registry incomplete for real consumers:
-#: ``all_queries()`` (plans/registry.py) calls :func:`load_all`, which
-#: forces the full sweep regardless of the flag.
-_ALL = (
-    "arrays", "curation", "graphgeo", "llmdata", "mlq", "pipelineops",
-    "ranking", "relational", "scalarlib", "similarity", "sketches",
-    "splits", "statlab", "temporal", "text", "timeseries", "windows",
+# Importing a submodule registers its queries, so importing this
+# package makes the registry complete.
+from . import (  # noqa: F401
+    arrays,
+    curation,
+    graphgeo,
+    llmdata,
+    mlq,
+    pipelineops,
+    ranking,
+    relational,
+    scalarlib,
+    similarity,
+    sketches,
+    splits,
+    statlab,
+    temporal,
+    text,
+    timeseries,
+    windows,
 )
-
-
-def load_all() -> None:
-    """Import every query submodule (idempotent; registration is a
-    module-import side effect, so re-imports are no-ops)."""
-    from importlib import import_module
-
-    for _m in _ALL:
-        import_module(f".{_m}", __name__)
-
-
-if os.environ.get("BDBL_LAZY_QUERIES", "0") != "1":
-    load_all()

@@ -21,12 +21,18 @@ from pyspark.sql import functions as F
 from ...functions.scalar import fround
 from ...operators.dedup import (
     exact_jaccard_pairs,
-    lsh_bands,
-    lsh_candidate_pairs,
-    minhash_signatures,
+    minhash_lsh_pairs,
     simhash,
 )
 from ...sources.readers import parallelize_scan, read_table
+from ..oracle_sql import (
+    BULK_LINES,
+    DOC_TOKENS,
+    LSH_CANDIDATES,
+    MINHASH_LSH,
+    SUPPLIER_PAIRS,
+    TOKEN_OVERLAP,
+)
 from ..registry import query
 from .splits import _hash16_sql
 
@@ -582,29 +588,7 @@ def q122_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q124_lsh_blocked_levenshtein",
     tags=("dedup", "text", "blocking", "lsh"),
     oracle=f"""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-), b AS (
+WITH {MINHASH_LSH}, b AS (
   SELECT d.doc_id, d.text, d.n_chars, bd.band_id, bd.bucket,
          unnest([d.n_chars // {_LEN_BUCKET}, n_chars // {_LEN_BUCKET} + 1])
            AS lbucket
@@ -669,13 +653,9 @@ def _pagerank_oracle(n_iter: int = 5) -> str:
     run the identical IEEE expression — DuckDB would otherwise parse
     0.85 as DECIMAL and diverge."""
     cte = [
-        """
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+        f"""
+WITH {BULK_LINES}, e AS (
+{SUPPLIER_PAIRS}
 ), d AS (
   SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e
 ), deg AS (
@@ -723,19 +703,20 @@ def q125_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained CTEs. The damping contraction keeps cross-engine float
     divergence at ulp scale (no amplification), absorbed by the final
     fround pair — intermediates are never rounded on either side."""
-    from ...operators.graph import cooccurrence_edges, pagerank
+    from ...operators.graph import bulk_supplier_edges, pagerank
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey")
+    edges = bulk_supplier_edges(li)
     ranks = pagerank(edges, damping=0.85, n_iter=5)
     return ranks.select("v", fround(F.col("pr"), 6).alias("pagerank"))
 
 
-def _zorder_oracle() -> str:
-    """16-term Morton interleave as literal SQL bit arithmetic."""
+def _layout_keys_sql() -> str:
+    """Oracle CTEs ``s``, ``q`` and ``z``: (partkey, suppkey) quantized
+    to 8-bit ranks, the natural-order chunk, and the 16-term Morton key
+    ``zv`` as literal SQL bit arithmetic."""
     terms = []
     for i in range(8):
         terms.append(f"((qx >> {i}) & 1) * {1 << (2 * i)}")
@@ -758,11 +739,12 @@ WITH s AS (
   FROM lineitem CROSS JOIN s
 ), z AS (
   SELECT qx, qy, natchunk, ({zv}) AS zv FROM q
-), chunks AS (
-  SELECT 'zorder' AS layout, zv >> 6 AS chunk, qx, qy FROM z
-  UNION ALL
-  SELECT 'natural', natchunk, qx, qy FROM z
-), per AS (
+)"""
+
+
+#: Oracle tail of the layout audits: per-chunk spans of ``chunks``,
+#: averaged per layout.
+_LAYOUT_SPANS_SQL = """per AS (
   SELECT layout, chunk, count(*) AS cnt,
          max(qx) - min(qx) + 1 AS span_x,
          max(qy) - min(qy) + 1 AS span_y
@@ -774,6 +756,68 @@ SELECT layout, CAST(count(*) AS BIGINT) AS n_chunks,
        round(avg(CAST(span_y AS DOUBLE) / 256) + 1e-9, 6) AS avg_span_supp
 FROM per GROUP BY layout
 """
+
+
+def _layout_keys(li: DataFrame, rows: DataFrame) -> DataFrame:
+    """``(qx, qy, natchunk, zv)`` per row of ``rows``: partkey and
+    suppkey quantized to 8-bit ranks over ``li``'s key ranges, the
+    natural-order chunk (orderkey in 1024 levels) and the Morton key
+    (oracle side: ``_layout_keys_sql``)."""
+    from ...operators.layout import quantize, zorder_value
+
+    stats = li.agg(
+        F.min("l_partkey").alias("minp"),
+        F.max("l_partkey").alias("maxp"),
+        F.min("l_suppkey").alias("mins"),
+        F.max("l_suppkey").alias("maxs"),
+        F.min("l_orderkey").alias("mino"),
+        F.max("l_orderkey").alias("maxo"),
+    )
+    q = rows.crossJoin(F.broadcast(stats)).select(
+        quantize(
+            F.col("l_partkey"), F.col("minp"), F.col("maxp") - F.col("minp")
+        ).alias("qx"),
+        quantize(
+            F.col("l_suppkey"), F.col("mins"), F.col("maxs") - F.col("mins")
+        ).alias("qy"),
+        quantize(
+            F.col("l_orderkey"),
+            F.col("mino"),
+            F.col("maxo") - F.col("mino"),
+            levels=1024,
+        ).alias("natchunk"),
+    )
+    return q.select(
+        "qx", "qy", "natchunk", zorder_value(F.col("qx"), F.col("qy")).alias("zv")
+    )
+
+
+def _layout_spans(chunks: DataFrame) -> DataFrame:
+    """Per layout: chunk count, rows, and mean normalized per-chunk span
+    of each key (oracle side: ``_LAYOUT_SPANS_SQL``)."""
+    per = chunks.groupBy("layout", "chunk").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        (F.max("qx") - F.min("qx") + 1).alias("span_x"),
+        (F.max("qy") - F.min("qy") + 1).alias("span_y"),
+    )
+    return per.groupBy("layout").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_chunks"),
+        F.sum("cnt").cast("bigint").alias("n_rows"),
+        fround(F.avg(F.col("span_x").cast("double") / 256), 6).alias(
+            "avg_span_part"
+        ),
+        fround(F.avg(F.col("span_y").cast("double") / 256), 6).alias(
+            "avg_span_supp"
+        ),
+    )
+
+
+def _zorder_oracle() -> str:
+    return f"""{_layout_keys_sql()}, chunks AS (
+  SELECT 'zorder' AS layout, zv >> 6 AS chunk, qx, qy FROM z
+  UNION ALL
+  SELECT 'natural', natchunk, qx, qy FROM z
+), {_LAYOUT_SPANS_SQL}"""
 
 
 @query(
@@ -800,36 +844,10 @@ def q126_zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; the global min/max frame is a one-row broadcast; the
     layout tag doubles rows map-side (stack) before the two
     aggregations."""
-    from ...operators.layout import quantize, zorder_value
-
     li = read_table(
         spark, sf_dir, "lineitem", ["l_partkey", "l_suppkey", "l_orderkey"]
     )
-    stats = li.agg(
-        F.min("l_partkey").alias("minp"),
-        F.max("l_partkey").alias("maxp"),
-        F.min("l_suppkey").alias("mins"),
-        F.max("l_suppkey").alias("maxs"),
-        F.min("l_orderkey").alias("mino"),
-        F.max("l_orderkey").alias("maxo"),
-    )
-    q = li.crossJoin(F.broadcast(stats)).select(
-        quantize(
-            F.col("l_partkey"), F.col("minp"), F.col("maxp") - F.col("minp")
-        ).alias("qx"),
-        quantize(
-            F.col("l_suppkey"), F.col("mins"), F.col("maxs") - F.col("mins")
-        ).alias("qy"),
-        quantize(
-            F.col("l_orderkey"),
-            F.col("mino"),
-            F.col("maxo") - F.col("mino"),
-            levels=1024,
-        ).alias("natchunk"),
-    )
-    z = q.select(
-        "qx", "qy", "natchunk", zorder_value(F.col("qx"), F.col("qy")).alias("zv")
-    )
+    z = _layout_keys(li, li)
     chunks = z.select(
         "qx",
         "qy",
@@ -838,21 +856,7 @@ def q126_zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             " as (layout, chunk)"
         ),
     )
-    per = chunks.groupBy("layout", "chunk").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        (F.max("qx") - F.min("qx") + 1).alias("span_x"),
-        (F.max("qy") - F.min("qy") + 1).alias("span_y"),
-    )
-    return per.groupBy("layout").agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum("cnt").alias("n_rows"),
-        fround(F.avg(F.col("span_x").cast("double") / 256), 6).alias(
-            "avg_span_part"
-        ),
-        fround(F.avg(F.col("span_y").cast("double") / 256), 6).alias(
-            "avg_span_supp"
-        ),
-    )
+    return _layout_spans(chunks)
 
 
 @query(
@@ -1011,19 +1015,8 @@ def q132_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q133_containment_pairs",
     tags=("dedup", "text", "containment"),
-    oracle="""
-WITH tok AS (
-  SELECT doc_id, lang, unnest(list_distinct(string_split(text, ' '))) AS tok
-  FROM documents
-), sizes AS (
-  SELECT doc_id, count(*) AS n_toks FROM tok GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM tok a
-  JOIN tok b ON a.tok = b.tok AND a.lang = b.lang
-  WHERE a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+    oracle=f"""
+WITH {TOKEN_OVERLAP}
 SELECT doc_a, doc_b, inter,
        inter / sa.n_toks AS containment_ab,
        inter / sb.n_toks AS containment_ba
@@ -1109,11 +1102,8 @@ def q136_partition_size_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q137_idf_weighted_jaccard",
     tags=("dedup", "text", "tfidf"),
-    oracle="""
-WITH tok AS (
-  SELECT doc_id, lang, unnest(list_distinct(string_split(text, ' '))) AS tok
-  FROM documents
-), df AS (
+    oracle=f"""
+WITH {DOC_TOKENS}, df AS (
   SELECT tok, count(*) AS dft FROM tok GROUP BY tok
 ), n AS (
   SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM tok
@@ -1211,13 +1201,9 @@ def q137_idf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q139_community_modularity",
     tags=("graph", "audit"),
-    oracle="""
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+    oracle=f"""
+WITH {BULK_LINES}, e AS (
+{SUPPLIER_PAIRS}
 ), m AS (
   SELECT CAST(count(*) AS BIGINT) AS m_edges FROM e
 ), deg AS (
@@ -1259,23 +1245,15 @@ def q139_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node-sized frames, plain shuffle equi-joins); the per-community
     frame is |communities|-sized. All inputs to the float algebra are
     exact integers, one fround at the end."""
-    from ...operators.graph import cooccurrence_edges
+    from ...operators.graph import bulk_supplier_edges, node_degrees
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
     sup = read_table(spark, sf_dir, "supplier", ["s_suppkey", "s_nationkey"])
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey").localCheckpoint(
-        eager=False
-    )
+    edges = bulk_supplier_edges(li).localCheckpoint(eager=False)
     m = edges.agg(F.count(F.lit(1)).alias("m_edges"))
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = node_degrees(edges)
     com = deg.join(
         sup.select(
             F.col("s_suppkey").alias("v"), F.col("s_nationkey").alias("community")
@@ -1398,13 +1376,9 @@ def q144_spend_quintile_mobility(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q123_triangle_count",
     tags=("graph", "agg"),
-    oracle="""
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+    oracle=f"""
+WITH {BULK_LINES}, e AS (
+{SUPPLIER_PAIRS}
 ), deg AS (
   SELECT v, count(*) AS deg FROM (
     SELECT a AS v FROM e UNION ALL SELECT b FROM e
@@ -1443,15 +1417,12 @@ def q123_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     readable-but-hub-explosive form the orientation exists to replace.
     All counts are integers; only the coefficient is a rounded
     double."""
-    from ...operators.graph import cooccurrence_edges, triangle_stats
+    from ...operators.graph import bulk_supplier_edges, triangle_stats
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey").localCheckpoint(
-        eager=False
-    )
+    edges = bulk_supplier_edges(li).localCheckpoint(eager=False)
     return triangle_stats(edges)
 
 
@@ -2557,30 +2528,8 @@ def q311_order_consolidation(
 def _hilbert_oracle() -> str:
     from ...operators.layout import hilbert_steps_sql
 
-    terms = []
-    for i in range(8):
-        terms.append(f"((qx >> {i}) & 1) * {1 << (2 * i)}")
-        terms.append(f"((qy >> {i}) & 1) * {1 << (2 * i + 1)}")
-    zv = " + ".join(terms)
     steps = hilbert_steps_sql("z", "qx, qy, natchunk, zv", bits=8)
-    return f"""
-WITH s AS (
-  SELECT min(l_partkey) AS minp, max(l_partkey) AS maxp,
-         min(l_suppkey) AS mins, max(l_suppkey) AS maxs,
-         min(l_orderkey) AS mino, max(l_orderkey) AS maxo
-  FROM lineitem
-), q AS (
-  SELECT CASE WHEN maxp = minp THEN 0
-              ELSE ((l_partkey - minp) * 255) // (maxp - minp) END AS qx,
-         CASE WHEN maxs = mins THEN 0
-              ELSE ((l_suppkey - mins) * 255) // (maxs - mins) END AS qy,
-         CASE WHEN maxo = mino THEN 0
-              ELSE ((l_orderkey - mino) * 1023) // (maxo - mino) END
-           AS natchunk
-  FROM lineitem CROSS JOIN s
-), z AS (
-  SELECT qx, qy, natchunk, ({zv}) AS zv FROM q
-),
+    return f"""{_layout_keys_sql()},
 {steps},
 chunks AS (
   SELECT 'hilbert' AS layout, hd >> 6 AS chunk, qx, qy FROM hstep8
@@ -2588,18 +2537,7 @@ chunks AS (
   SELECT 'zorder', zv >> 6, qx, qy FROM hstep8
   UNION ALL
   SELECT 'natural', natchunk, qx, qy FROM hstep8
-), per AS (
-  SELECT layout, chunk, count(*) AS cnt,
-         max(qx) - min(qx) + 1 AS span_x,
-         max(qy) - min(qy) + 1 AS span_y
-  FROM chunks GROUP BY layout, chunk
-)
-SELECT layout, CAST(count(*) AS BIGINT) AS n_chunks,
-       CAST(sum(cnt) AS BIGINT) AS n_rows,
-       round(avg(CAST(span_x AS DOUBLE) / 256) + 1e-9, 6) AS avg_span_part,
-       round(avg(CAST(span_y AS DOUBLE) / 256) + 1e-9, 6) AS avg_span_supp
-FROM per GROUP BY layout
-"""
+), {_LAYOUT_SPANS_SQL}"""
 
 
 @query(
@@ -2626,7 +2564,7 @@ def q327_hilbert_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery: integer quantization, integer chunk ids, dyadic span
     fractions — no float path at all until the final averages.
     """
-    from ...operators.layout import quantize, with_hilbert_value, zorder_value
+    from ...operators.layout import with_hilbert_value
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_partkey", "l_suppkey", "l_orderkey"]
@@ -2636,32 +2574,7 @@ def q327_hilbert_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3-column frame when the layout cannot split the scan (no-op at
     # scale); the one-row stats aggregate reads the unspread scan.
     spread_li = parallelize_scan(spark, li, sf_dir, "lineitem")
-    stats = li.agg(
-        F.min("l_partkey").alias("minp"),
-        F.max("l_partkey").alias("maxp"),
-        F.min("l_suppkey").alias("mins"),
-        F.max("l_suppkey").alias("maxs"),
-        F.min("l_orderkey").alias("mino"),
-        F.max("l_orderkey").alias("maxo"),
-    )
-    q = spread_li.crossJoin(F.broadcast(stats)).select(
-        quantize(
-            F.col("l_partkey"), F.col("minp"), F.col("maxp") - F.col("minp")
-        ).alias("qx"),
-        quantize(
-            F.col("l_suppkey"), F.col("mins"), F.col("maxs") - F.col("mins")
-        ).alias("qy"),
-        quantize(
-            F.col("l_orderkey"),
-            F.col("mino"),
-            F.col("maxo") - F.col("mino"),
-            levels=1024,
-        ).alias("natchunk"),
-    )
-    z = q.select(
-        "qx", "qy", "natchunk",
-        zorder_value(F.col("qx"), F.col("qy")).alias("zv"),
-    )
+    z = _layout_keys(li, spread_li)
     h = with_hilbert_value(z, "qx", "qy", bits=8, out="hv")
     chunks = h.select(
         "qx",
@@ -2671,21 +2584,7 @@ def q327_hilbert_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             " 'natural', natchunk) as (layout, chunk)"
         ),
     )
-    per = chunks.groupBy("layout", "chunk").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        (F.max("qx") - F.min("qx") + 1).alias("span_x"),
-        (F.max("qy") - F.min("qy") + 1).alias("span_y"),
-    )
-    return per.groupBy("layout").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_chunks"),
-        F.sum("cnt").cast("bigint").alias("n_rows"),
-        fround(F.avg(F.col("span_x").cast("double") / 256), 6).alias(
-            "avg_span_part"
-        ),
-        fround(F.avg(F.col("span_y").cast("double") / 256), 6).alias(
-            "avg_span_supp"
-        ),
-    )
+    return _layout_spans(chunks)
 
 
 @query(
@@ -2856,29 +2755,7 @@ _Q346_SIM_FP = " + ".join(
     "q346_neardup_evidence_pairs",
     tags=("dedup", "lsh", "simhash"),
     oracle=f"""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-), cand AS (
+WITH {MINHASH_LSH}, cand AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          CAST(count(*) AS BIGINT) AS n_shared_bands
   FROM bands a
@@ -2956,8 +2833,7 @@ def q346_neardup_evidence_pairs(
     (candidate fan-out by per-doc shingle count, never all-pairs).
     """
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    cand = lsh_candidate_pairs(lsh_bands(sig, n_hashes=8, band_size=2))
+    cand = minhash_lsh_pairs(docs)
     pj = exact_jaccard_pairs(
         docs, cand, shingle_n=3, extra_keys=("n_shared_bands",)
     )
@@ -3131,38 +3007,10 @@ def q355_ot_transport_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q356_triangle_bound_audit",
-    tags=("dedup", "lsh", "audit"),
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
-  WHERE a.doc_id < b.doc_id
-), sizes AS (
+#: Oracle CTEs: shingles per document and the exact shingle
+#: intersection ``i`` and union ``u`` of every candidate pair in
+#: ``cand`` — ``operators.dedup.exact_jaccard_pairs``.
+_CAND_JACCARD_CTES = """sizes AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM grams GROUP BY doc_id
 ), pj AS (
   SELECT c.doc_a, c.doc_b,
@@ -3174,7 +3022,14 @@ WITH grams AS (
   JOIN sizes za ON za.doc_id = c.doc_a
   JOIN sizes zb ON zb.doc_id = c.doc_b
   GROUP BY c.doc_a, c.doc_b, za.n_sh, zb.n_sh
-), sym AS (
+)"""
+
+
+@query(
+    "q356_triangle_bound_audit",
+    tags=("dedup", "lsh", "audit"),
+    oracle=f"""
+WITH {MINHASH_LSH}, {LSH_CANDIDATES}, {_CAND_JACCARD_CTES}, sym AS (
   SELECT doc_a AS x, doc_b AS m, i, u FROM pj
   UNION ALL SELECT doc_b, doc_a, i, u FROM pj
 ), wedge AS (
@@ -3234,12 +3089,7 @@ def q356_triangle_bound_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage is truncated.
     """
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"], spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    cand = (
-        lsh_candidate_pairs(lsh_bands(sig, n_hashes=8, band_size=2))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = minhash_lsh_pairs(docs).select("doc_a", "doc_b").distinct()
     pj = exact_jaccard_pairs(docs, cand, shingle_n=3).localCheckpoint(
         eager=False
     )  # two wedge sides + obs lookup
@@ -3310,47 +3160,8 @@ def q356_triangle_bound_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q364_hard_negative_mining",
     tags=("llm-pipeline", "similarity", "lsh"),
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
-  WHERE a.doc_id < b.doc_id
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM grams GROUP BY doc_id
-), pj AS (
-  SELECT c.doc_a, c.doc_b,
-         CAST(count(*) AS BIGINT) AS i,
-         za.n_sh + zb.n_sh - CAST(count(*) AS BIGINT) AS u
-  FROM cand c
-  JOIN grams ga ON ga.doc_id = c.doc_a
-  JOIN grams gb ON gb.doc_id = c.doc_b AND gb.sh = ga.sh
-  JOIN sizes za ON za.doc_id = c.doc_a
-  JOIN sizes zb ON zb.doc_id = c.doc_b
-  GROUP BY c.doc_a, c.doc_b, za.n_sh, zb.n_sh
-), sym AS (
+    oracle=f"""
+WITH {MINHASH_LSH}, {LSH_CANDIDATES}, {_CAND_JACCARD_CTES}, sym AS (
   SELECT doc_a AS anchor, doc_b AS partner, i, u FROM pj WHERE 2 * i < u
   UNION ALL
   SELECT doc_b, doc_a, i, u FROM pj WHERE 2 * i < u
@@ -3391,12 +3202,7 @@ def q364_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no window over data.
     """
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"], spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    cand = (
-        lsh_candidate_pairs(lsh_bands(sig, n_hashes=8, band_size=2))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = minhash_lsh_pairs(docs).select("doc_a", "doc_b").distinct()
     pj = exact_jaccard_pairs(docs, cand, shingle_n=3).where(
         2 * F.col("i") < F.col("u")
     )
@@ -3708,13 +3514,9 @@ def _ppr_oracle(n_iter: int = 5) -> str:
     on the seed set instead of 1/N everywhere. ``d``/``deg``/``t`` are
     referenced every round — MATERIALIZED, the q241 lesson."""
     cte = [
-        """
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+        f"""
+WITH {BULK_LINES}, e AS (
+{SUPPLIER_PAIRS}
 ), d AS MATERIALIZED (
   SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e
 ), deg AS MATERIALIZED (
@@ -3779,19 +3581,18 @@ def q416_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     float divergence at ulp scale (no amplification), absorbed by the
     final fround pair — intermediates never rounded on either side.
     """
-    from ...operators.graph import cooccurrence_edges, personalized_pagerank
+    from ...operators.graph import (
+        bulk_supplier_edges,
+        edge_endpoints,
+        personalized_pagerank,
+    )
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey")
+    edges = bulk_supplier_edges(li)
     sup = read_table(spark, sf_dir, "supplier", ["s_suppkey", "s_nationkey"])
-    nodes = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .distinct()
-    )
+    nodes = edge_endpoints(edges).distinct()
     seeds = nodes.join(
         F.broadcast(
             sup.where(F.col("s_nationkey") == 0).select(

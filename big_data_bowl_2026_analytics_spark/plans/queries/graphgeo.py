@@ -27,7 +27,9 @@ from pyspark.sql.window import Window
 
 from ...functions.scalar import fround
 from ...operators.rankops import bucketed_cummax_prev
+from ...operators.temporal import sessionize
 from ...sources.readers import read_table
+from ..oracle_sql import BULK_LINES, EVENT_SESSIONS, SUPPLIER_PAIRS
 from ..registry import query
 from ...core.session import local_frame
 from .splits import _hash16, _hash16_sql
@@ -315,22 +317,8 @@ def q206_grid_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q209_position_attribution",
     tags=("attribution", "session", "window"),
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > 1800
-              OR lag(ts) OVER w IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, event_id, ts, event_type,
-         CAST(sum(new_session) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS BIGINT) AS session_id
-  FROM flagged
-), placed AS (
+    oracle=f"""
+WITH {EVENT_SESSIONS}, placed AS (
   SELECT event_type,
          CAST(count(*) OVER (PARTITION BY user_id, session_id) AS BIGINT)
            AS n_touches,
@@ -376,22 +364,7 @@ def q209_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_id", "ts", "event_type"]
     )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    epoch = F.col("ts").cast("double")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            (epoch - F.lag(epoch).over(w) > 1800)
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    sessions = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    sessions = sessionize(ev)
     ws = Window.partitionBy("user_id", "session_id")
     placed = sessions.select(
         "event_type",
@@ -487,13 +460,9 @@ def q210_skyline_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q215_degree_assortativity",
     tags=("graph", "statistics"),
-    oracle="""
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+    oracle=f"""
+WITH {BULK_LINES}, e AS (
+{SUPPLIER_PAIRS}
 ), deg AS (
   SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
     SELECT a AS v FROM e UNION ALL SELECT b FROM e
@@ -534,21 +503,13 @@ def q215_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs on the edge grain, and the correlation is one fixed
     expression — the q204 pattern.
     """
-    from ...operators.graph import cooccurrence_edges
+    from ...operators.graph import bulk_supplier_edges, node_degrees
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey").localCheckpoint(
-        eager=False
-    )
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    edges = bulk_supplier_edges(li).localCheckpoint(eager=False)
+    deg = node_degrees(edges)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("dega"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("degb"))
     joined = edges.join(da, "a").join(db, "b")
@@ -798,13 +759,9 @@ def _kcore_oracle(n_rounds: int = 8) -> str:
     expand 3^rounds — the same lattice-unroll discipline as q125's
     pagerank oracle, plus DuckDB's materialization hint."""
     cte = [
-        """
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+        f"""
+WITH {BULK_LINES}, e AS MATERIALIZED (
+{SUPPLIER_PAIRS}
 ), d0 AS MATERIALIZED (
   SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e
 ), degv0 AS MATERIALIZED (
@@ -868,15 +825,12 @@ def q241_kcore_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and per-round stats are one-row aggregates unioned into a
     (rounds+1)-row frame — the closing window is a bounded funnel.
     """
-    from ...operators.graph import cooccurrence_edges, kcore_profile
+    from ...operators.graph import bulk_supplier_edges, kcore_profile
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey").localCheckpoint(
-        eager=False
-    )
+    edges = bulk_supplier_edges(li).localCheckpoint(eager=False)
     deg0 = (
         edges.select(F.col("a").alias("src"))
         .unionAll(edges.select(F.col("b").alias("src")))
@@ -897,13 +851,9 @@ def q241_kcore_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q248_local_clustering",
     tags=("graph",),
-    oracle="""
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+    oracle=f"""
+WITH {BULK_LINES}, e AS MATERIALIZED (
+{SUPPLIER_PAIRS}
 ), deg AS MATERIALIZED (
   SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
     SELECT a AS v FROM e UNION ALL SELECT b FROM e
@@ -956,15 +906,12 @@ def q248_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-way corner union credits each triangle to its three nodes —
     counts are exact integers and lcc an integer ratio (rule 5).
     """
-    from ...operators.graph import cooccurrence_edges, local_clustering
+    from ...operators.graph import bulk_supplier_edges, local_clustering
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey").localCheckpoint(
-        eager=False
-    )
+    edges = bulk_supplier_edges(li).localCheckpoint(eager=False)
     out = local_clustering(edges)
     return out.select(
         "v",
@@ -977,13 +924,9 @@ def q248_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q292_rich_club_coefficient",
     tags=("graph",),
-    oracle="""
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+    oracle=f"""
+WITH {BULK_LINES}, e AS MATERIALIZED (
+{SUPPLIER_PAIRS}
 ), deg AS MATERIALIZED (
   SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
     SELECT a AS v FROM e UNION ALL SELECT b FROM e
@@ -1028,22 +971,15 @@ def q292_rich_club_coefficient(
     never a per-k re-scan. Counts exact; φ an exact integer ratio
     with the N_k < 2 guard identical on both sides.
     """
-    from ...operators.graph import cooccurrence_edges
+    from ...operators.graph import bulk_supplier_edges, node_degrees
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey").localCheckpoint(
+    edges = bulk_supplier_edges(li).localCheckpoint(eager=False)
+    deg = node_degrees(edges).localCheckpoint(
         eager=False
-    )
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=False)  # club-n + club-e branches
-    )
+    )  # club-n + club-e branches
     ks = local_frame(spark, [(2,), (4,), (8,), (16,)], "k long")
     clubn = (
         deg.crossJoin(F.broadcast(ks))
@@ -1231,11 +1167,11 @@ def q299_bradley_terry_strength(
     for _ in range(10):
         si = w.select(F.col("i").alias("mi"), F.col("s").alias("si"))
         sj = w.select(F.col("i").alias("mj"), F.col("s").alias("sj"))
-        # r13 optimization (guide §3.1): si/sj are PER-PLAYER frames
-        # derived from checkpointed parents, so the planner has no
-        # stats and falls back to SortMergeJoin — shuffling the
-        # pair-grain matches frame twice EVERY round (the q360
-        # no-stats-after-checkpoint class). Broadcasting the player-
+        # r13 optimization (guide §3.1): si/sj are PER-PLAYER frames,
+        # but each round's estimate is that of an aggregate over the
+        # pair-grain matches frame, so the planner falls back to
+        # SortMergeJoin — shuffling the pair-grain matches frame twice
+        # EVERY round (the q360 class). Broadcasting the player-
         # sized state leaves matches unshuffled all 10 rounds; the
         # groupBy then map-side-combines to |players| rows before its
         # one exchange. At scale this trades a broadcast of the
@@ -1554,13 +1490,9 @@ def _bfs_oracle(n_rounds: int = 8) -> str:
     its predecessor twice (carry + relax), so each CTE is MATERIALIZED
     per the q241 lattice-unroll discipline."""
     parts = [
-        """
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+        f"""
+WITH {BULK_LINES}, e AS MATERIALIZED (
+{SUPPLIER_PAIRS}
 ), dsym AS MATERIALIZED (
   SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e
 ), dist0 AS MATERIALIZED (
@@ -1624,19 +1556,14 @@ def q350_bfs_hop_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation. Frontier size is bounded by the reached set, never
     the edge count.
     """
-    from ...operators.graph import bfs_hops, cooccurrence_edges
+    from ...operators.graph import bfs_hops, bulk_supplier_edges, edge_endpoints
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey")
+    edges = bulk_supplier_edges(li)
     dist = bfs_hops(edges, n_rounds=8)
-    nodes = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .distinct()
-    )
+    nodes = edge_endpoints(edges).distinct()
     hist = (
         nodes.join(dist, "v", "left")
         .select(F.coalesce("d", F.lit(-1).cast("bigint")).alias("hop"))
@@ -1675,13 +1602,9 @@ def _q365_oracle(n_rounds: int = 8) -> str:
 
     last = n_rounds
     return (
-        """
-WITH hi AS (
-  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity >= 48
-), e AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS a, b.l_suppkey AS b
-  FROM hi a JOIN hi b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
+        f"""
+WITH {BULK_LINES}, e AS MATERIALIZED (
+{SUPPLIER_PAIRS}
 ), dsym AS MATERIALIZED (
   SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e
 ), nodes AS MATERIALIZED (
@@ -1741,19 +1664,16 @@ def q365_double_sweep_diameter(
     checkpointed edge frame; the re-seed is a 1-row argmax reduction
     (never a collect) flowing into sweep 2's init frame.
     """
-    from ...operators.graph import bfs_hops, cooccurrence_edges
+    from ...operators.graph import bfs_hops, bulk_supplier_edges, edge_endpoints
 
     li = read_table(
         spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_quantity"]
     )
-    hi = li.where(F.col("l_quantity") >= 48)
-    edges = cooccurrence_edges(hi, "l_orderkey", "l_suppkey").localCheckpoint(
+    edges = bulk_supplier_edges(li).localCheckpoint(
         eager=False
     )  # two sweeps + node census share it
     s1 = bfs_hops(edges, n_rounds=8)
-    src1 = edges.select(F.col("a").alias("v")).unionAll(
-        edges.select(F.col("b").alias("v"))
-    ).agg(F.min("v").alias("v"))
+    src1 = edge_endpoints(edges).agg(F.min("v").alias("v"))
     far = (
         s1.agg(
             F.max(F.struct(F.col("d"), (-F.col("v")).alias("nv"))).alias("m")
@@ -1762,8 +1682,7 @@ def q365_double_sweep_diameter(
     )
     s2 = bfs_hops(edges, n_rounds=8, source=far)
     nodes = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
+        edge_endpoints(edges)
         .distinct()
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
     )

@@ -22,6 +22,7 @@ from ...operators.textstats import (
 )
 from ...functions.scalar import fround
 from ...sources.readers import read_table
+from ..oracle_sql import SHINGLE_GRAMS
 from ..registry import query
 from ...core.session import local_frame
 from .splits import _hash16, _hash16_sql
@@ -35,18 +36,8 @@ _PACK_CAPACITY = 128
 @query(
     "q92_boilerplate_ngrams",
     tags=("text", "dedup", "llm-pipeline"),
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), hot AS (
+    oracle=f"""
+WITH {SHINGLE_GRAMS}, hot AS (
   SELECT sh FROM grams GROUP BY sh HAVING count(DISTINCT doc_id) >= 4
 ), per_doc AS (
   SELECT doc_id, count(*) AS n_shingles FROM grams GROUP BY doc_id

@@ -213,6 +213,18 @@ def q145_weighted_median_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
+def _line_features(li: DataFrame) -> DataFrame:
+    """The demo model's features and label on each order's first line:
+    ``(l_returnflag, f_qty, f_disc, f_tax, target)``."""
+    return li.where(F.col("l_linenumber") == 1).select(
+        "l_returnflag",
+        (F.col("l_quantity") / 50).alias("f_qty"),
+        (F.col("l_discount") * 10).alias("f_disc"),
+        (F.col("l_tax") * 12.5).alias("f_tax"),
+        F.when(F.col("l_quantity") > 30, 1.0).otherwise(0.0).alias("target"),
+    )
+
+
 @query(
     "q150_per_slice_metrics",
     tags=("ml", "evaluation", "monitoring"),
@@ -272,13 +284,7 @@ def q150_per_slice_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["l_orderkey", "l_linenumber", "l_quantity", "l_discount", "l_tax",
          "l_returnflag"],
     )
-    feats = li.where(F.col("l_linenumber") == 1).select(
-        "l_returnflag",
-        (F.col("l_quantity") / 50).alias("f_qty"),
-        (F.col("l_discount") * 10).alias("f_disc"),
-        (F.col("l_tax") * 12.5).alias("f_tax"),
-        F.when(F.col("l_quantity") > 30, 1.0).otherwise(0.0).alias("target"),
-    )
+    feats = _line_features(li)
     scored = feats.withColumn(
         "probability",
         score_column_native(
@@ -1062,13 +1068,7 @@ def q230_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "lineitem",
         ["l_linenumber", "l_quantity", "l_discount", "l_tax", "l_returnflag"],
     )
-    feats = li.where(F.col("l_linenumber") == 1).select(
-        "l_returnflag",
-        (F.col("l_quantity") / 50).alias("f_qty"),
-        (F.col("l_discount") * 10).alias("f_disc"),
-        (F.col("l_tax") * 12.5).alias("f_tax"),
-        F.when(F.col("l_quantity") > 30, 1.0).otherwise(0.0).alias("target"),
-    )
+    feats = _line_features(li)
     scored = feats.select(
         "l_returnflag",
         "target",
@@ -1796,6 +1796,20 @@ def _ridge_val_sums(allsums: DataFrame) -> DataFrame:
     )
 
 
+def _holdout_sse():
+    """Validation SSE of the fitted line ``alpha + beta * x`` from the
+    held-out moment sums ``n_v, sx_v, sy_v, sxx_v, sxy_v, syy_v``:
+    one fixed expression, so both engines add in the same order."""
+    b, a = F.col("beta"), F.col("alpha")
+    n_v, sx_v, sy_v = F.col("n_v"), F.col("sx_v"), F.col("sy_v")
+    sxx_v, sxy_v, syy_v = F.col("sxx_v"), F.col("sxy_v"), F.col("syy_v")
+    return (
+        syy_v - 2 * a * sy_v - 2 * b * sxy_v
+        + a * a * n_v + 2 * a * b * sx_v
+        + b * b * sxx_v
+    )
+
+
 @query(
     "q390_ridge_lambda_sweep",
     tags=("ml", "gridsearch", "regression"),
@@ -1898,11 +1912,7 @@ def q390_ridge_lambda_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         beta.alias("beta"), alpha.alias("alpha"),
     )
     b, a = F.col("beta"), F.col("alpha")
-    sse = (
-        syy_v - 2 * a * sy_v - 2 * b * sxy_v
-        + a * a * n_v + 2 * a * b * sx_v
-        + b * b * sxx_v
-    )
+    sse = _holdout_sse()
     evaled = scored.select(
         "lam",
         F.col("n_t").cast("bigint").alias("n_train"),
@@ -2052,18 +2062,11 @@ def q391_kfold_cv_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         lam, "fold", "n_f", "n_v", "sx_v", "sy_v", "sxx_v", "sxy_v", "syy_v",
         beta.alias("beta"), alpha.alias("alpha"),
     )
-    b, a = F.col("beta"), F.col("alpha")
-    n_v, sx_v, sy_v = F.col("n_v"), F.col("sx_v"), F.col("sy_v")
-    sxx_v, sxy_v, syy_v = F.col("sxx_v"), F.col("sxy_v"), F.col("syy_v")
-    sse = (
-        syy_v - 2 * a * sy_v - 2 * b * sxy_v
-        + a * a * n_v + 2 * a * b * sx_v
-        + b * b * sxx_v
-    )
+    sse = _holdout_sse()
     folderr = perfold.select(
         "lam",
         "n_f",
-        fround(b, 6).alias("beta_r"),
+        fround(F.col("beta"), 6).alias("beta_r"),
         F.round(sse).cast("bigint").alias("sse_i"),
     )
     grouped = folderr.groupBy("lam").agg(
@@ -2088,11 +2091,9 @@ def q391_kfold_cv_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q396_successive_halving_sweep",
-    tags=("ml", "gridsearch", "hyperband"),
-    oracle=f"""
-WITH {_RIDGE_OBS_SQL.strip()},
+#: Oracle CTEs of ``_rung_sums``: the ridge observation sums plus the
+#: per-rung training sums.
+_RUNG_SUMS_CTES = f"""{_RIDGE_OBS_SQL.strip()},
 {_RIDGE_ALLSUMS_SQL.strip()},
 rungs AS (
   SELECT CAST(rung AS BIGINT) AS rung, CAST(budget AS BIGINT) AS budget
@@ -2106,7 +2107,39 @@ rungs AS (
          CAST(CAST(sum(q.sxy_q) AS BIGINT) AS DOUBLE) AS sxy_t
   FROM rungs r JOIN qsums q ON q.quarter < r.budget
   GROUP BY r.rung
-), {_RIDGE_GRID_SQL},
+)"""
+
+
+def _rung_sums(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(rsums, vsums)``: training sums per successive-halving rung
+    (rungs 0/1/2 train on the first 1/2/4 quarters) and the held-out
+    validation sums."""
+    allsums = _ridge_quarter_sums(spark, sf_dir)
+    qsums = allsums.where(F.col("quarter") >= 0).select(
+        "quarter", "n_q", "sx_q", "sy_q", "sxx_q", "sxy_q"
+    )
+    rungs = local_frame(
+        spark, [(0, 1), (1, 2), (2, 4)], "rung bigint, budget bigint"
+    )
+    rsums = (
+        rungs.join(F.broadcast(qsums), F.col("quarter") < F.col("budget"))
+        .groupBy("rung")
+        .agg(
+            F.sum("n_q").cast("bigint").alias("n_r"),
+            F.sum("sx_q").cast("bigint").cast("double").alias("sx_t"),
+            F.sum("sy_q").cast("bigint").cast("double").alias("sy_t"),
+            F.sum("sxx_q").cast("bigint").cast("double").alias("sxx_t"),
+            F.sum("sxy_q").cast("bigint").cast("double").alias("sxy_t"),
+        )
+    )
+    return rsums, _ridge_val_sums(allsums)
+
+
+@query(
+    "q396_successive_halving_sweep",
+    tags=("ml", "gridsearch", "hyperband"),
+    oracle=f"""
+WITH {_RUNG_SUMS_CTES}, {_RIDGE_GRID_SQL},
 fitted AS (
   SELECT rung, lam, n_r, CAST(n_r AS DOUBLE) AS n_t,
          sx_t, sy_t, sxx_t, sxy_t, n_v, sx_v, sy_v, sxx_v, sxy_v, syy_v
@@ -2164,27 +2197,10 @@ def q396_successive_halving_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: the data is touched by exactly one aggregation; rung count
     and grid size shape a 24-row frame. The promotion cascade is
     three bounded windows over ≤8 rows each (explicit broadcasts —
-    post-checkpoint frames carry no stats, the q360 lesson).
+    each rung frame's size estimate is that of the data-sized
+    aggregation it came from, the q360 lesson).
     """
-    allsums = _ridge_quarter_sums(spark, sf_dir)
-    qsums = allsums.where(F.col("quarter") >= 0).select(
-        "quarter", "n_q", "sx_q", "sy_q", "sxx_q", "sxy_q"
-    )
-    vsums = _ridge_val_sums(allsums)
-    rungs = local_frame(spark, 
-        [(0, 1), (1, 2), (2, 4)], "rung bigint, budget bigint"
-    )
-    rsums = (
-        rungs.join(F.broadcast(qsums), F.col("quarter") < F.col("budget"))
-        .groupBy("rung")
-        .agg(
-            F.sum("n_q").cast("bigint").alias("n_r"),
-            F.sum("sx_q").cast("bigint").cast("double").alias("sx_t"),
-            F.sum("sy_q").cast("bigint").cast("double").alias("sy_t"),
-            F.sum("sxx_q").cast("bigint").cast("double").alias("sxx_t"),
-            F.sum("sxy_q").cast("bigint").cast("double").alias("sxy_t"),
-        )
-    )
+    rsums, vsums = _rung_sums(spark, sf_dir)
     grid = local_frame(spark, [(l,) for l in _RIDGE_LAMS], "lam double")
     fitted = (
         rsums.crossJoin(F.broadcast(grid))
@@ -2200,17 +2216,10 @@ def q396_successive_halving_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
         "n_v", "sx_v", "sy_v", "sxx_v", "sxy_v", "syy_v",
         beta.alias("beta"), alpha.alias("alpha"),
     )
-    b, a = F.col("beta"), F.col("alpha")
-    n_v, sx_v, sy_v = F.col("n_v"), F.col("sx_v"), F.col("sy_v")
-    sxx_v, sxy_v, syy_v = F.col("sxx_v"), F.col("sxy_v"), F.col("syy_v")
-    sse = (
-        syy_v - 2 * a * sy_v - 2 * b * sxy_v
-        + a * a * n_v + 2 * a * b * sx_v
-        + b * b * sxx_v
-    )
+    sse = _holdout_sse()
     scored = withfit.select(
         "rung", "lam", "n_r",
-        fround(F.sqrt(sse / n_v), 4).alias("val_rmse"),
+        fround(F.sqrt(sse / F.col("n_v")), 4).alias("val_rmse"),
     ).localCheckpoint(eager=False)  # three rung branches below
     w = Window.orderBy("val_rmse", "lam")
     s0 = scored.where(F.col("rung") == 0).withColumn("rk", F.row_number().over(w))
@@ -2238,21 +2247,7 @@ def q396_successive_halving_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     "q399_learning_curve_extrapolation",
     tags=("ml", "planning", "scaling-laws"),
     oracle=f"""
-WITH {_RIDGE_OBS_SQL.strip()},
-{_RIDGE_ALLSUMS_SQL.strip()},
-rungs AS (
-  SELECT CAST(rung AS BIGINT) AS rung, CAST(budget AS BIGINT) AS budget
-  FROM (VALUES (0, 1), (1, 2), (2, 4)) t(rung, budget)
-), rsums AS (
-  SELECT r.rung,
-         CAST(sum(q.n_q) AS BIGINT) AS n_r,
-         CAST(CAST(sum(q.sx_q) AS BIGINT) AS DOUBLE) AS sx_t,
-         CAST(CAST(sum(q.sy_q) AS BIGINT) AS DOUBLE) AS sy_t,
-         CAST(CAST(sum(q.sxx_q) AS BIGINT) AS DOUBLE) AS sxx_t,
-         CAST(CAST(sum(q.sxy_q) AS BIGINT) AS DOUBLE) AS sxy_t
-  FROM rungs r JOIN qsums q ON q.quarter < r.budget
-  GROUP BY r.rung
-), rscored AS (
+WITH {_RUNG_SUMS_CTES}, rscored AS (
   SELECT rung, n_r,
          round(sqrt((syy_v - 2 * alpha * sy_v - 2 * beta * sxy_v
                      + alpha * alpha * n_v + 2 * alpha * beta * sx_v
@@ -2317,25 +2312,7 @@ def q399_learning_curve_extrapolation(
     sufficient-statistics pass as q390/q396); everything downstream
     is arithmetic on a 3-row frame pivoted to one row.
     """
-    allsums = _ridge_quarter_sums(spark, sf_dir)
-    qsums = allsums.where(F.col("quarter") >= 0).select(
-        "quarter", "n_q", "sx_q", "sy_q", "sxx_q", "sxy_q"
-    )
-    vsums = _ridge_val_sums(allsums)
-    rungs = local_frame(spark, 
-        [(0, 1), (1, 2), (2, 4)], "rung bigint, budget bigint"
-    )
-    rsums = (
-        rungs.join(F.broadcast(qsums), F.col("quarter") < F.col("budget"))
-        .groupBy("rung")
-        .agg(
-            F.sum("n_q").cast("bigint").alias("n_r"),
-            F.sum("sx_q").cast("bigint").cast("double").alias("sx_t"),
-            F.sum("sy_q").cast("bigint").cast("double").alias("sy_t"),
-            F.sum("sxx_q").cast("bigint").cast("double").alias("sxx_t"),
-            F.sum("sxy_q").cast("bigint").cast("double").alias("sxy_t"),
-        )
-    )
+    rsums, vsums = _rung_sums(spark, sf_dir)
     n_t = F.col("n_r").cast("double")
     sx_t, sy_t = F.col("sx_t"), F.col("sy_t")
     sxx_t, sxy_t = F.col("sxx_t"), F.col("sxy_t")
@@ -2346,16 +2323,9 @@ def q399_learning_curve_extrapolation(
         "n_v", "sx_v", "sy_v", "sxx_v", "sxy_v", "syy_v",
         beta.alias("beta"), alpha.alias("alpha"),
     )
-    b, a = F.col("beta"), F.col("alpha")
-    n_v, sx_v, sy_v = F.col("n_v"), F.col("sx_v"), F.col("sy_v")
-    sxx_v, sxy_v, syy_v = F.col("sxx_v"), F.col("sxy_v"), F.col("syy_v")
-    sse = (
-        syy_v - 2 * a * sy_v - 2 * b * sxy_v
-        + a * a * n_v + 2 * a * b * sx_v
-        + b * b * sxx_v
-    )
+    sse = _holdout_sse()
     rscored = fitted.select(
-        "rung", "n_r", fround(F.sqrt(sse / n_v), 4).alias("val_rmse")
+        "rung", "n_r", fround(F.sqrt(sse / F.col("n_v")), 4).alias("val_rmse")
     )
     pivoted = rscored.agg(
         F.max(F.when(F.col("rung") == 0, F.col("n_r"))).alias("n0"),

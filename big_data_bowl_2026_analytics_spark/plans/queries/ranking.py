@@ -10,6 +10,41 @@ from ...functions.scalar import fround
 from ...sources.readers import read_table
 from ..registry import query
 
+#: Oracle CTE: exact net revenue in cents per part.
+_PART_CENTS_CTE = """rev AS (
+  SELECT l_partkey,
+         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
+                       AS BIGINT)) AS BIGINT) AS cents
+  FROM lineitem GROUP BY l_partkey
+)"""
+
+#: Oracle CTE: units shipped per (brand, epoch day).
+_BRAND_DAILY_CTE = """daily AS (
+  SELECT p.p_brand AS brand,
+         CAST(CAST(l.l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT)
+           AS day_num,
+         CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS d
+  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+  GROUP BY 1, 2
+)"""
+
+
+def _brand_daily_units(li: DataFrame, part: DataFrame) -> DataFrame:
+    """``(brand, day_num, d)``: units shipped per brand and epoch day
+    (oracle side: ``_BRAND_DAILY_CTE``)."""
+    return (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .select(
+            F.col("p_brand").alias("brand"),
+            F.datediff(
+                F.col("l_shipdate").cast("date"), F.lit("1970-01-01")
+            ).cast("bigint").alias("day_num"),
+            F.col("l_quantity").cast("bigint").alias("q"),
+        )
+        .groupBy("brand", "day_num")
+        .agg(F.sum("q").cast("bigint").alias("d"))
+    )
+
 
 @query(
     "q56_ranking_functions",
@@ -273,13 +308,8 @@ def q198_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q199_abc_classification",
     tags=("ranking", "report", "pareto"),
-    oracle="""
-WITH rev AS (
-  SELECT l_partkey,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                       AS BIGINT)) AS BIGINT) AS cents
-  FROM lineitem GROUP BY l_partkey
-), ranked AS (
+    oracle=f"""
+WITH {_PART_CENTS_CTE}, ranked AS (
   SELECT l_partkey, cents,
          row_number() OVER (ORDER BY cents DESC, l_partkey) AS r,
          CAST(sum(cents) OVER (ORDER BY cents DESC, l_partkey
@@ -473,13 +503,8 @@ def q217_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q218_pareto_knee",
     tags=("ranking", "pareto", "report"),
-    oracle="""
-WITH rev AS (
-  SELECT l_partkey,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                       AS BIGINT)) AS BIGINT) AS cents
-  FROM lineitem GROUP BY l_partkey
-), ranked AS (
+    oracle=f"""
+WITH {_PART_CENTS_CTE}, ranked AS (
   SELECT cents,
          CAST(row_number() OVER (ORDER BY cents DESC, l_partkey)
               AS BIGINT) AS r,
@@ -625,13 +650,8 @@ def _abc_classes(li: DataFrame) -> DataFrame:
 @query(
     "q256_abc_xyz_matrix",
     tags=("ranking", "inventory", "report"),
-    oracle="""
-WITH rev AS (
-  SELECT l_partkey,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                       AS BIGINT)) AS BIGINT) AS cents
-  FROM lineitem GROUP BY l_partkey
-), tot AS (
+    oracle=f"""
+WITH {_PART_CENTS_CTE}, tot AS (
   SELECT CAST(sum(cents) AS BIGINT) AS t FROM rev
 ), ranked AS (
   SELECT l_partkey, cents,
@@ -892,13 +912,8 @@ def q264_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q274_newsvendor_stock_levels",
     tags=("inventory", "report", "percentiles"),
-    oracle="""
-WITH rev AS (
-  SELECT l_partkey,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                       AS BIGINT)) AS BIGINT) AS cents
-  FROM lineitem GROUP BY l_partkey
-), tot AS (
+    oracle=f"""
+WITH {_PART_CENTS_CTE}, tot AS (
   SELECT CAST(sum(cents) AS BIGINT) AS t FROM rev
 ), abc AS MATERIALIZED (
   SELECT l_partkey,
@@ -2253,15 +2268,8 @@ def q338_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q352_safety_stock_planner",
     tags=("inventory", "planning", "statistics"),
-    oracle="""
-WITH daily AS (
-  SELECT p.p_brand AS brand,
-         CAST(CAST(l.l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-           AS day_num,
-         CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS d
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY 1, 2
-), s AS (
+    oracle=f"""
+WITH {_BRAND_DAILY_CTE}, s AS (
   SELECT brand,
          CAST(count(*) AS BIGINT) AS n_days,
          CAST(sum(d) AS BIGINT) AS sd,
@@ -2314,18 +2322,7 @@ def q352_safety_stock_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "lineitem", ["l_partkey", "l_quantity", "l_shipdate"]
     )
     part = read_table(spark, sf_dir, "part", ["p_partkey", "p_brand"])
-    daily = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .select(
-            F.col("p_brand").alias("brand"),
-            F.datediff(
-                F.col("l_shipdate").cast("date"), F.lit("1970-01-01")
-            ).cast("bigint").alias("day_num"),
-            F.col("l_quantity").cast("bigint").alias("q"),
-        )
-        .groupBy("brand", "day_num")
-        .agg(F.sum("q").cast("bigint").alias("d"))
-    )
+    daily = _brand_daily_units(li, part)
     s = daily.groupBy("brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         F.sum("d").cast("bigint").alias("sd"),
@@ -2475,15 +2472,8 @@ def q359_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q360_service_level_backtest",
     tags=("inventory", "planning", "evaluation"),
-    oracle="""
-WITH daily AS (
-  SELECT p.p_brand AS brand,
-         CAST(CAST(l.l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-           AS day_num,
-         CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS d
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY 1, 2
-), b AS (
+    oracle=f"""
+WITH {_BRAND_DAILY_CTE}, b AS (
   SELECT brand,
          CAST(min(day_num) AS BIGINT) AS d0,
          CAST(max(day_num) AS BIGINT) AS d1,
@@ -2623,15 +2613,8 @@ def q360_service_level_backtest(
 @query(
     "q373_croston_intermittent_demand",
     tags=("inventory", "forecast", "timeseries"),
-    oracle="""
-WITH daily AS (
-  SELECT p.p_brand AS brand,
-         CAST(CAST(l.l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-           AS day_num,
-         CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS d
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY 1, 2
-), seq AS (
+    oracle=f"""
+WITH {_BRAND_DAILY_CTE}, seq AS (
   SELECT brand, day_num, d,
          CAST(row_number() OVER (PARTITION BY brand ORDER BY day_num)
               AS BIGINT) AS rn,
@@ -2691,19 +2674,9 @@ def q373_croston_intermittent_demand(
         spark, sf_dir, "lineitem", ["l_partkey", "l_quantity", "l_shipdate"]
     )
     part = read_table(spark, sf_dir, "part", ["p_partkey", "p_brand"])
-    daily = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .select(
-            F.col("p_brand").alias("brand"),
-            F.datediff(
-                F.col("l_shipdate").cast("date"), F.lit("1970-01-01")
-            ).cast("bigint").alias("day_num"),
-            F.col("l_quantity").cast("bigint").alias("q"),
-        )
-        .groupBy("brand", "day_num")
-        .agg(F.sum("q").cast("bigint").alias("d"))
-        .localCheckpoint(eager=False)  # sequence + totals branches
-    )
+    daily = _brand_daily_units(li, part).localCheckpoint(
+        eager=False
+    )  # sequence + totals branches
     ws = Window.partitionBy("brand").orderBy("day_num")
     seq = daily.select(
         "brand",

@@ -1038,11 +1038,8 @@ def q81_correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@query(
-    "q87_merge_upsert",
-    tags=("merge", "cdc"),
-    oracle="""
-WITH base AS (
+#: Oracle CTEs of ``_cdc_batch``.
+_CDC_BATCH_CTES = """base AS (
   SELECT o_orderkey, o_orderstatus, o_totalprice
   FROM orders WHERE o_orderkey % 10 != 0
 ), upd AS (
@@ -1051,7 +1048,28 @@ WITH base AS (
          round(o_totalprice + 1000 + 1e-9, 2) AS o_totalprice,
          o_orderkey % 20 = 0 AS is_delete
   FROM orders WHERE o_orderkey % 5 = 0
-), survivors AS (
+)"""
+
+
+def _cdc_batch(orders: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(base, updates)``: the base snapshot (orders not divisible by
+    10) and a CDC batch repricing every 5th order and flagging every
+    20th for deletion (oracle side: ``_CDC_BATCH_CTES``)."""
+    base = orders.where(F.col("o_orderkey") % 10 != 0)
+    updates = orders.where(F.col("o_orderkey") % 5 == 0).select(
+        "o_orderkey",
+        F.lit("U").alias("o_orderstatus"),
+        fround(F.col("o_totalprice") + 1000, 2).alias("o_totalprice"),
+        (F.col("o_orderkey") % 20 == 0).alias("is_delete"),
+    )
+    return base, updates
+
+
+@query(
+    "q87_merge_upsert",
+    tags=("merge", "cdc"),
+    oracle=f"""
+WITH {_CDC_BATCH_CTES}, survivors AS (
   SELECT b.* FROM base b
   WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.o_orderkey = b.o_orderkey)
 )
@@ -1075,13 +1093,7 @@ def q87_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderkey", "o_orderstatus", "o_totalprice"]
     )
-    base = orders.where(F.col("o_orderkey") % 10 != 0)
-    updates = orders.where(F.col("o_orderkey") % 5 == 0).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        fround(F.col("o_totalprice") + 1000, 2).alias("o_totalprice"),
-        (F.col("o_orderkey") % 20 == 0).alias("is_delete"),
-    )
+    base, updates = _cdc_batch(orders)
     from ...operators.merge import merge_upsert
 
     return merge_upsert(base, updates, ["o_orderkey"], delete_col="is_delete")
@@ -1178,17 +1190,8 @@ def q89_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q90_snapshot_diff",
     tags=("merge", "diff"),
-    oracle="""
-WITH base AS (
-  SELECT o_orderkey, o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey % 10 != 0
-), upd AS (
-  SELECT o_orderkey,
-         'U' AS o_orderstatus,
-         round(o_totalprice + 1000 + 1e-9, 2) AS o_totalprice,
-         o_orderkey % 20 = 0 AS is_delete
-  FROM orders WHERE o_orderkey % 5 = 0
-), merged AS (
+    oracle=f"""
+WITH {_CDC_BATCH_CTES}, merged AS (
   SELECT b.* FROM base b
   WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.o_orderkey = b.o_orderkey)
   UNION ALL
@@ -1233,13 +1236,7 @@ def q90_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderkey", "o_orderstatus", "o_totalprice"]
     )
-    base = orders.where(F.col("o_orderkey") % 10 != 0)
-    updates = orders.where(F.col("o_orderkey") % 5 == 0).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        fround(F.col("o_totalprice") + 1000, 2).alias("o_totalprice"),
-        (F.col("o_orderkey") % 20 == 0).alias("is_delete"),
-    )
+    base, updates = _cdc_batch(orders)
     from ...operators.merge import merge_upsert, snapshot_diff
 
     merged = merge_upsert(base, updates, ["o_orderkey"], delete_col="is_delete")

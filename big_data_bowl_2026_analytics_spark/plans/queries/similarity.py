@@ -70,6 +70,39 @@ def _bucket_sql(plane_offset: int = 0, n_planes: int = 8) -> str:
     return " + ".join(terms)
 
 
+
+#: ``normed`` plus ``sums``: each vector's squared norm and its seven
+#: residue-class sums, the inputs of every LSH bucket expression.
+_LSH_SUMS_CTES = f"""{_NORMED_CTE.strip()},
+sums AS (
+  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
+)"""
+
+
+def _query_dot():
+    """Dot product of ``q_vec`` and ``embedding`` as one sequential
+    double fold (the oracle's ``list_sum`` order)."""
+    d = F.zip_with(
+        F.col("q_vec"),
+        F.col("embedding"),
+        lambda x, y: x.cast("double") * y.cast("double"),
+    )
+    return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _normed_with_queries(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(normed, q)``: every vector with its squared norm, and the
+    five query vectors (vec_id < 5) as ``(query_id, q_vec, q_norm)``."""
+    normed = emb.select(
+        "vec_id", "embedding", squared_norm(F.col("embedding")).alias("sqnorm")
+    )
+    q = normed.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.col("sqnorm").alias("q_norm"),
+    )
+    return normed, q
+
 @query(
     "q40_cosine_topk_bruteforce",
     tags=("similarity", "topk"),
@@ -125,10 +158,7 @@ def q41_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q42_ann_topk_lsh",
     tags=("similarity", "ann"),
     oracle=f"""
-WITH {_NORMED_CTE.strip()},
-sums AS (
-  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
-),
+WITH {_LSH_SUMS_CTES},
 bucketed AS (
   SELECT vec_id, embedding, sqnorm, CAST({_bucket_sql()} AS BIGINT) AS bucket
   FROM sums
@@ -196,17 +226,21 @@ seeds AS (
 )
 """
 
+#: ``seeds`` plus ``scored``: each vector's squared L2 distance to
+#: every seed centroid.
+_SEED_DISTANCES_CTES = f"""{_SEEDS_CTE.strip()},
+scored AS (
+  SELECT e.vec_id, s.cluster_id,
+         {_sq_l2_sql('e.embedding', 's.centroid')} AS dist
+  FROM embeddings e CROSS JOIN seeds s
+)"""
+
 
 @query(
     "q61_ivf_assignments",
     tags=("similarity", "ivf"),
     oracle=f"""
-WITH {_SEEDS_CTE.strip()},
-scored AS (
-  SELECT e.vec_id, s.cluster_id,
-         {_sq_l2_sql('e.embedding', 's.centroid')} AS dist
-  FROM embeddings e CROSS JOIN seeds s
-), ranked AS (
+WITH {_SEED_DISTANCES_CTES}, ranked AS (
   SELECT vec_id, cluster_id,
          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster_id) AS rn
   FROM scored
@@ -291,10 +325,7 @@ def q62_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q63_embedding_neardup",
     tags=("dedup", "similarity", "lsh"),
     oracle=f"""
-WITH {_NORMED_CTE.strip()},
-sums AS (
-  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
-),
+WITH {_LSH_SUMS_CTES},
 bucketed AS (
   SELECT vec_id, embedding, sqnorm, CAST({_bucket_sql()} AS BIGINT) AS bucket
   FROM sums
@@ -361,10 +392,7 @@ def q63_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q140_ann_topk_multitable",
     tags=("similarity", "ann", "multitable"),
     oracle=f"""
-WITH {_NORMED_CTE.strip()},
-sums AS (
-  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
-),
+WITH {_LSH_SUMS_CTES},
 bucketed AS (
   SELECT vec_id, embedding, sqnorm,
          CAST({_bucket_sql(0)} AS BIGINT) AS bucket0,
@@ -417,10 +445,7 @@ def q140_ann_topk_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q142_ann_recall_audit",
     tags=("similarity", "ann", "audit"),
     oracle=f"""
-WITH {_NORMED_CTE.strip()},
-sums AS (
-  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
-),
+WITH {_LSH_SUMS_CTES},
 bucketed AS (
   SELECT vec_id, embedding, sqnorm,
          CAST({_bucket_sql(0, 4)} AS BIGINT) AS bucket0,
@@ -693,20 +718,8 @@ def q156_reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = read_table(spark, sf_dir, "embeddings")
-    normed = emb.select(
-        "vec_id", "embedding", squared_norm(F.col("embedding")).alias("sqnorm")
-    )
-    q = normed.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("sqnorm").alias("q_norm"),
-    )
-    d = F.zip_with(
-        F.col("q_vec"),
-        F.col("embedding"),
-        lambda x, y: x.cast("double") * y.cast("double"),
-    )
-    dot_col = F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v)
+    normed, q = _normed_with_queries(emb)
+    dot_col = _query_dot()
     scored = (
         F.broadcast(q)
         .crossJoin(normed)
@@ -766,10 +779,7 @@ def q156_reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q157_diversity_capped_topk",
     tags=("similarity", "retrieval", "diversity"),
     oracle=f"""
-WITH {_NORMED_CTE.strip()},
-sums AS (
-  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
-), bucketed AS (
+WITH {_LSH_SUMS_CTES}, bucketed AS (
   SELECT vec_id, embedding, sqnorm,
          CAST({_bucket_sql()} AS BIGINT) AS bucket
   FROM sums
@@ -823,12 +833,7 @@ def q157_diversity_capped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_vec"),
         squared_norm(F.col("embedding")).alias("q_norm"),
     )
-    d = F.zip_with(
-        F.col("q_vec"),
-        F.col("embedding"),
-        lambda x, y: x.cast("double") * y.cast("double"),
-    )
-    dot_col = F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v)
+    dot_col = _query_dot()
     scored = (
         F.broadcast(q)
         .crossJoin(bucketed)
@@ -952,12 +957,7 @@ def q161_label_centroid_separation(
     "q168_ivf_balance_audit",
     tags=("similarity", "ivf", "audit"),
     oracle=f"""
-WITH {_SEEDS_CTE.strip()},
-scored AS (
-  SELECT e.vec_id, s.cluster_id,
-         {_sq_l2_sql('e.embedding', 's.centroid')} AS dist
-  FROM embeddings e CROSS JOIN seeds s
-), assigned AS (
+WITH {_SEED_DISTANCES_CTES}, assigned AS (
   SELECT vec_id, cluster_id, dist FROM (
     SELECT vec_id, cluster_id, dist,
            row_number() OVER (PARTITION BY vec_id
@@ -1079,10 +1079,7 @@ def q169_embedding_quality_audit(
     "q189_ndcg_retrieval_audit",
     tags=("similarity", "retrieval", "audit"),
     oracle=f"""
-WITH {_NORMED_CTE.strip()},
-sums AS (
-  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
-), bucketed AS (
+WITH {_LSH_SUMS_CTES}, bucketed AS (
   SELECT vec_id, embedding, sqnorm,
          CAST({_bucket_sql()} AS BIGINT) AS bucket
   FROM sums
@@ -1165,20 +1162,8 @@ def q189_ndcg_retrieval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         squared_norm(F.col("embedding")).alias("sqnorm"),
         "bucket",
     ).localCheckpoint(eager=False)
-    normed = emb.select(
-        "vec_id", "embedding", squared_norm(F.col("embedding")).alias("sqnorm")
-    )
-    q = normed.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("sqnorm").alias("q_norm"),
-    )
-    d = F.zip_with(
-        F.col("q_vec"),
-        F.col("embedding"),
-        lambda x, y: x.cast("double") * y.cast("double"),
-    )
-    dot_col = F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v)
+    normed, q = _normed_with_queries(emb)
+    dot_col = _query_dot()
     cos = fround(dot_col / (F.sqrt("q_norm") * F.sqrt("sqnorm")), 6)
     exact = (
         F.broadcast(q)
@@ -2276,10 +2261,7 @@ def q330_matryoshka_truncation_recall(
     "q339_mutual_nearest_neighbors",
     tags=("similarity", "dedup", "graph"),
     oracle=f"""
-WITH {_NORMED_CTE.strip()},
-sums AS (
-  SELECT vec_id, embedding, sqnorm, {_sums_cols_sql()} FROM normed
-),
+WITH {_LSH_SUMS_CTES},
 bucketed AS (
   SELECT vec_id, embedding, sqnorm,
          CAST({_bucket_sql(0, 4)} AS BIGINT) AS bucket
@@ -2398,12 +2380,7 @@ def q339_mutual_nearest_neighbors(
     "q372_ivf_silhouette",
     tags=("similarity", "ivf", "audit"),
     oracle=f"""
-WITH {_SEEDS_CTE.strip()},
-scored AS (
-  SELECT e.vec_id, s.cluster_id,
-         {_sq_l2_sql('e.embedding', 's.centroid')} AS dist
-  FROM embeddings e CROSS JOIN seeds s
-), ranked AS (
+WITH {_SEED_DISTANCES_CTES}, ranked AS (
   SELECT vec_id, cluster_id, dist,
          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster_id)
            AS rn
@@ -2966,8 +2943,9 @@ def q388_ivf_recall_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_candidates")
     )
     corp = emb.agg(F.count(F.lit(1)).cast("bigint").alias("n_corpus"))
-    # q360 lesson: checkpoint-derived micro-frames carry no stats —
-    # broadcast explicitly or this 9-row join plans as an SMJ
+    # q360 lesson: these micro-frames are aggregates whose size
+    # estimate scales with the fanned-out candidate input, so this
+    # 9-row join plans as an SMJ unless broadcast explicitly
     return (
         hits.join(F.broadcast(cost), ["np", "query_id"])
         .crossJoin(F.broadcast(corp))

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ...functions.scalar import fround
+from ...operators.markov import event_transitions, transition_counts
 from ...operators.stats import mann_whitney_z
 from ...operators.survival import kaplan_meier
 from ...sources.readers import parallelize_scan, read_table
@@ -49,6 +50,107 @@ from .splits import _hash16, _hash16_sql
 # threshold (P ≈ 8e-5) clamp to 6 — documented truncation, identical
 # on both engines because the comparison is integer vs literal.
 _POIS1_THRESHOLDS = (24109, 48218, 60273, 64291, 65296, 65497)
+
+
+#: Oracle CTE: each customer's first and last order date
+#: (``_customer_spans``).
+_PER_CUST_CTE = """per_cust AS (
+  SELECT o_custkey,
+         min(CAST(o_orderdate AS DATE)) AS first_d,
+         max(CAST(o_orderdate AS DATE)) AS last_d
+  FROM orders GROUP BY o_custkey
+)"""
+
+#: Oracle CTEs from customer spans to Kaplan-Meier risk sets:
+#: ``life`` is ``_churn_lifetimes``, ``hist``/``tot``/``risk`` are
+#: ``operators.survival``'s duration histogram and risk sets.
+_CHURN_RISK_CTES = f"""{_PER_CUST_CTE}, horizon AS (
+  SELECT max(last_d) AS end_d FROM per_cust
+), life AS (
+  SELECT CAST(last_d - first_d AS BIGINT) AS t,
+         CASE WHEN last_d < end_d - 90 THEN 1 ELSE 0 END AS churned
+  FROM per_cust, horizon
+), hist AS (
+  SELECT t,
+         CAST(count(*) AS BIGINT) AS n_at,
+         CAST(sum(churned) AS BIGINT) AS n_events
+  FROM life GROUP BY t
+), tot AS (
+  SELECT CAST(sum(n_at) AS BIGINT) AS n_total FROM hist
+), risk AS (
+  SELECT t, n_events,
+         n_total - CAST(coalesce(sum(n_at) OVER (
+           ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+         ), 0) AS BIGINT) AS n_risk
+  FROM hist, tot
+)"""
+
+
+#: Oracle CTE of ``_daily_orders``.
+_DAILY_ORDERS_CTE = """daily AS (
+  SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
+           AS day_num,
+         CAST(count(*) AS BIGINT) AS cnt
+  FROM orders GROUP BY 1
+)"""
+
+#: Oracle CTE of ``_monthly_cents``.
+_MONTHLY_CENTS_CTE = """monthly AS (
+  SELECT CAST(year(CAST(o_orderdate AS DATE)) * 12
+              + month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m_idx,
+         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS cents
+  FROM orders GROUP BY 1
+)"""
+
+
+def _customer_spans(orders: DataFrame) -> DataFrame:
+    """``(o_custkey, first_d, last_d)``: each customer's first and last
+    order date."""
+    return orders.groupBy("o_custkey").agg(
+        F.min(F.col("o_orderdate").cast("date")).alias("first_d"),
+        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
+    )
+
+
+def _churn_lifetimes(per_cust: DataFrame) -> DataFrame:
+    """Survival subjects ``(t, churned)`` from customer spans: lifetime
+    in days, churned when the last order is over 90 days before the
+    data's last order date (otherwise right-censored)."""
+    horizon = per_cust.agg(F.max("last_d").alias("end_d"))
+    return per_cust.crossJoin(F.broadcast(horizon)).select(
+        F.datediff("last_d", "first_d").cast("bigint").alias("t"),
+        F.when(
+            F.col("last_d") < F.date_sub(F.col("end_d"), 90), 1
+        ).otherwise(0).alias("churned"),
+    )
+
+
+def _daily_orders(orders: DataFrame) -> DataFrame:
+    """``(day_num, cnt)``: orders per epoch day."""
+    return (
+        orders.select(
+            F.datediff(
+                F.col("o_orderdate").cast("date"), F.lit("1970-01-01")
+            ).cast("bigint").alias("day_num")
+        )
+        .groupBy("day_num")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _monthly_cents(orders: DataFrame) -> DataFrame:
+    """``(m_idx, cents)``: exact BIGINT order revenue in cents per
+    calendar month (``m_idx`` = year * 12 + month)."""
+    d = F.col("o_orderdate").cast("date")
+    return (
+        orders.select(
+            (F.year(d) * 12 + F.month(d)).cast("bigint").alias("m_idx"),
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c1"),
+        )
+        .groupBy("m_idx")
+        .agg(F.sum("c1").alias("cents"))
+    )
 
 
 @query(
@@ -112,32 +214,8 @@ def q200_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q201_kaplan_meier",
     tags=("statistics", "survival", "window"),
-    oracle="""
-WITH per_cust AS (
-  SELECT o_custkey,
-         min(CAST(o_orderdate AS DATE)) AS first_d,
-         max(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY o_custkey
-), horizon AS (
-  SELECT max(last_d) AS end_d FROM per_cust
-), life AS (
-  SELECT CAST(last_d - first_d AS BIGINT) AS t,
-         CASE WHEN last_d < end_d - 90 THEN 1 ELSE 0 END AS churned
-  FROM per_cust, horizon
-), hist AS (
-  SELECT t,
-         CAST(count(*) AS BIGINT) AS n_at,
-         CAST(sum(churned) AS BIGINT) AS n_events
-  FROM life GROUP BY t
-), tot AS (
-  SELECT CAST(sum(n_at) AS BIGINT) AS n_total FROM hist
-), risk AS (
-  SELECT t, n_events,
-         n_total - CAST(coalesce(sum(n_at) OVER (
-           ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0) AS BIGINT) AS n_risk
-  FROM hist, tot
-), km AS (
+    oracle=f"""
+WITH {_CHURN_RISK_CTES}, km AS (
   SELECT t, n_events, n_risk,
          exp(sum(CASE WHEN n_events = n_risk THEN CAST('-inf' AS DOUBLE)
                       ELSE ln(1 - n_events * 1.0 / n_risk) END) OVER (
@@ -166,17 +244,7 @@ def q201_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     association-order noise.
     """
     orders = read_table(spark, sf_dir, "orders", ["o_custkey", "o_orderdate"])
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.min(F.col("o_orderdate").cast("date")).alias("first_d"),
-        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
-    )
-    horizon = per_cust.agg(F.max("last_d").alias("end_d"))
-    life = per_cust.crossJoin(F.broadcast(horizon)).select(
-        F.datediff("last_d", "first_d").cast("bigint").alias("t"),
-        F.when(
-            F.col("last_d") < F.date_sub(F.col("end_d"), 90), 1
-        ).otherwise(0).alias("churned"),
-    )
+    life = _churn_lifetimes(_customer_spans(orders))
     km = kaplan_meier(life)
     return km.select(
         F.col("t").alias("t_days"),
@@ -189,13 +257,8 @@ def q201_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q203_autocorrelation",
     tags=("statistics", "timeseries"),
-    oracle="""
-WITH daily AS (
-  SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-           AS day_num,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM orders GROUP BY 1
-), lags AS (
+    oracle=f"""
+WITH {_DAILY_ORDERS_CTE}, lags AS (
   SELECT CAST(k AS BIGINT) AS k FROM generate_series(1, 7) t(k)
 ), pairs AS (
   SELECT l.k, a.cnt AS x, b.cnt AS y
@@ -233,15 +296,7 @@ def q203_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact-table pass is one date-truncating aggregation.
     """
     orders = read_table(spark, sf_dir, "orders", ["o_orderdate"])
-    daily = (
-        orders.select(
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1970-01-01")
-            ).cast("bigint").alias("day_num")
-        )
-        .groupBy("day_num")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    daily = _daily_orders(orders)
     lags = spark.range(1, 8).select(F.col("id").alias("k"))
     a = daily.select(F.col("day_num"), F.col("cnt").alias("x"))
     b = daily.select(
@@ -757,13 +812,8 @@ def q212_bh_fdr_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q213_seasonal_decomposition",
     tags=("statistics", "timeseries"),
-    oracle="""
-WITH daily AS (
-  SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-           AS day_num,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM orders GROUP BY 1
-), base AS (
+    oracle=f"""
+WITH {_DAILY_ORDERS_CTE}, base AS (
   SELECT day_num, day_num % 7 AS dow, cnt FROM daily
 ), ma AS (
   SELECT day_num, dow, cnt,
@@ -804,15 +854,7 @@ def q213_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily grain (calendar-bounded, the q201 contract).
     """
     orders = read_table(spark, sf_dir, "orders", ["o_orderdate"])
-    daily = (
-        orders.select(
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1970-01-01")
-            ).cast("bigint").alias("day_num")
-        )
-        .groupBy("day_num")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    daily = _daily_orders(orders)
     base = daily.select(
         "day_num", (F.col("day_num") % 7).alias("dow"), "cnt"
     )
@@ -849,14 +891,8 @@ def q213_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q214_theil_sen_trend",
     tags=("statistics", "timeseries", "regression"),
-    oracle="""
-WITH monthly AS (
-  SELECT CAST(year(CAST(o_orderdate AS DATE)) * 12
-              + month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m_idx,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM orders GROUP BY 1
-), slopes AS (
+    oracle=f"""
+WITH {_MONTHLY_CENTS_CTE}, slopes AS (
   SELECT (b.cents - a.cents) * 1.0 / (b.m_idx - a.m_idx) AS slope,
          a.m_idx AS m1, b.m_idx AS m2
   FROM monthly a JOIN monthly b ON a.m_idx < b.m_idx
@@ -911,17 +947,7 @@ def q214_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderdate", "o_totalprice"]
     )
-    d = F.col("o_orderdate").cast("date")
-    monthly = (
-        orders.select(
-            (F.year(d) * 12 + F.month(d)).cast("bigint").alias("m_idx"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias(
-                "c1"
-            ),
-        )
-        .groupBy("m_idx")
-        .agg(F.sum("c1").alias("cents"))
-    )
+    monthly = _monthly_cents(orders)
     a = monthly.select(
         F.col("m_idx").alias("m1"), F.col("cents").alias("y1")
     )
@@ -1185,14 +1211,8 @@ def q228_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q229_mann_kendall_trend",
     tags=("statistics", "timeseries", "hypothesis-test"),
-    oracle="""
-WITH monthly AS (
-  SELECT CAST(year(CAST(o_orderdate AS DATE)) * 12
-              + month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m_idx,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM orders GROUP BY 1
-), s AS (
+    oracle=f"""
+WITH {_MONTHLY_CENTS_CTE}, s AS (
   SELECT CAST(sum(CASE WHEN b.cents > a.cents THEN 1
                        WHEN b.cents < a.cents THEN -1 ELSE 0 END)
               AS BIGINT) AS s_stat,
@@ -1229,16 +1249,7 @@ def q229_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderdate", "o_totalprice"]
     )
-    d = F.col("o_orderdate").cast("date")
-    monthly = (
-        orders.select(
-            (F.year(d) * 12 + F.month(d)).cast("bigint").alias("m_idx"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c1"),
-        )
-        .groupBy("m_idx")
-        .agg(F.sum("c1").alias("cents"))
-        .localCheckpoint(eager=False)
-    )
+    monthly = _monthly_cents(orders).localCheckpoint(eager=False)
     a = monthly.select(
         F.col("m_idx").alias("m1"), F.col("cents").alias("y1")
     )
@@ -2641,13 +2652,8 @@ def q323_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q325_logrank_test",
     tags=("statistics", "survival", "hypothesis-test"),
-    oracle="""
-WITH per_cust AS (
-  SELECT o_custkey,
-         min(CAST(o_orderdate AS DATE)) AS first_d,
-         max(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY o_custkey
-), horizon AS (
+    oracle=f"""
+WITH {_PER_CUST_CTE}, horizon AS (
   SELECT max(last_d) AS end_d FROM per_cust
 ), life AS (
   SELECT CAST(p.last_d - p.first_d AS BIGINT) AS t,
@@ -3705,18 +3711,36 @@ def q347_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q348_wilson_lower_bound",
-    tags=("statistics", "ranking", "quality"),
-    oracle="""
-WITH j AS (
+#: Oracle CTE of ``_brand_returns``.
+_BRAND_RETURNS_CTE = """j AS (
   SELECT p.p_brand AS brand,
          CAST(count(*) AS BIGINT) AS n,
          CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
               AS BIGINT) AS r
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
   GROUP BY p.p_brand
-), w AS (
+)"""
+
+
+def _brand_returns(li: DataFrame, part: DataFrame) -> DataFrame:
+    """``(brand, n, r)``: lines and returned (``R``) lines per brand."""
+    return (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .groupBy(F.col("p_brand").alias("brand"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+            ).cast("bigint").alias("r"),
+        )
+    )
+
+
+@query(
+    "q348_wilson_lower_bound",
+    tags=("statistics", "ranking", "quality"),
+    oracle=f"""
+WITH {_BRAND_RETURNS_CTE}, w AS (
   SELECT brand, n, r,
          CAST(r AS DOUBLE) / n AS phat,
          CAST(n AS DOUBLE) AS nd
@@ -3765,16 +3789,7 @@ def q348_wilson_lower_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = read_table(spark, sf_dir, "lineitem", ["l_partkey", "l_returnflag"])
     part = read_table(spark, sf_dir, "part", ["p_partkey", "p_brand"])
-    j = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(
-                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-            ).cast("bigint").alias("r"),
-        )
-    )
+    j = _brand_returns(li, part)
     phat = F.col("r").cast("double") / F.col("n")
     nd = F.col("n").cast("double")
     z2 = F.lit(1.96) * F.lit(1.96)
@@ -3962,15 +3977,8 @@ def q349_matched_cohort_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q363_empirical_bayes_shrinkage",
     tags=("statistics", "ranking", "quality"),
-    oracle="""
-WITH j AS (
-  SELECT p.p_brand AS brand,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
-              AS BIGINT) AS r
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY p.p_brand
-), pool1 AS (
+    oracle=f"""
+WITH {_BRAND_RETURNS_CTE}, pool1 AS (
   SELECT CAST(count(*) AS BIGINT) AS nb,
          avg(CAST(r AS DOUBLE) / n) AS mrate
   FROM j
@@ -4026,17 +4034,9 @@ def q363_empirical_bayes_shrinkage(
     """
     li = read_table(spark, sf_dir, "lineitem", ["l_partkey", "l_returnflag"])
     part = read_table(spark, sf_dir, "part", ["p_partkey", "p_brand"])
-    j = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(
-                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-            ).cast("bigint").alias("r"),
-        )
-        .localCheckpoint(eager=False)  # pool + per-brand branches
-    )
+    j = _brand_returns(li, part).localCheckpoint(
+        eager=False
+    )  # pool + per-brand branches
     rate = F.col("r").cast("double") / F.col("n")
     pool1 = j.agg(
         F.count(F.lit(1)).cast("bigint").alias("nb"),
@@ -4372,32 +4372,8 @@ def q378_restricted_mean_survival(
 @query(
     "q384_nelson_aalen_hazard",
     tags=("statistics", "survival", "window"),
-    oracle="""
-WITH per_cust AS (
-  SELECT o_custkey,
-         min(CAST(o_orderdate AS DATE)) AS first_d,
-         max(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY o_custkey
-), horizon AS (
-  SELECT max(last_d) AS end_d FROM per_cust
-), life AS (
-  SELECT CAST(last_d - first_d AS BIGINT) AS t,
-         CASE WHEN last_d < end_d - 90 THEN 1 ELSE 0 END AS churned
-  FROM per_cust, horizon
-), hist AS (
-  SELECT t,
-         CAST(count(*) AS BIGINT) AS n_at,
-         CAST(sum(churned) AS BIGINT) AS n_events
-  FROM life GROUP BY t
-), tot AS (
-  SELECT CAST(sum(n_at) AS BIGINT) AS n_total FROM hist
-), risk AS (
-  SELECT t, n_events,
-         n_total - CAST(coalesce(sum(n_at) OVER (
-           ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0) AS BIGINT) AS n_risk
-  FROM hist, tot
-), na AS (
+    oracle=f"""
+WITH {_CHURN_RISK_CTES}, na AS (
   SELECT t, n_events, n_risk,
          CAST(sum((1000000 * n_events) // n_risk) OVER (
            ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
@@ -4438,17 +4414,7 @@ def q384_nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...operators.survival import nelson_aalen
 
     orders = read_table(spark, sf_dir, "orders", ["o_custkey", "o_orderdate"])
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.min(F.col("o_orderdate").cast("date")).alias("first_d"),
-        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
-    )
-    horizon = per_cust.agg(F.max("last_d").alias("end_d"))
-    life = per_cust.crossJoin(F.broadcast(horizon)).select(
-        F.datediff("last_d", "first_d").cast("bigint").alias("t"),
-        F.when(
-            F.col("last_d") < F.date_sub(F.col("end_d"), 90), 1
-        ).otherwise(0).alias("churned"),
-    )
+    life = _churn_lifetimes(_customer_spans(orders))
     na = nelson_aalen(life)
     h = F.col("cum_hazard_ppm") / F.lit(1000000.0)
     return na.select(
@@ -4898,11 +4864,8 @@ _PRIORITIES = (
 )
 
 
-@query(
-    "q407_kruskal_wallis",
-    tags=("statistics", "hypothesis-test"),
-    oracle="""
-WITH obs AS (
+#: Oracle CTEs of ``_priority_ties``.
+_PRIORITY_TIES_CTES = """obs AS (
   SELECT o_orderpriority AS grp,
          CAST(round(o_totalprice * 100) AS BIGINT) AS v
   FROM orders
@@ -4914,7 +4877,33 @@ WITH obs AS (
          CAST(sum(CASE WHEN grp = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS c4,
          CAST(sum(CASE WHEN grp = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS c5
   FROM obs GROUP BY v
-), rk AS MATERIALIZED (
+)"""
+
+
+def _priority_ties(orders: DataFrame) -> DataFrame:
+    """``(v, tot, c1..c5)``: orders per exact price in cents ``v``, in
+    total and per order priority (``_PRIORITIES`` order) — the tie
+    groups of a rank test over the five priorities."""
+    obs = orders.select(
+        F.col("o_orderpriority").alias("grp"),
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v"),
+    )
+    return obs.groupBy("v").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tot"),
+        *[
+            F.sum(F.when(F.col("grp") == g, 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"c{i}")
+            for i, g in enumerate(_PRIORITIES, 1)
+        ],
+    )
+
+
+@query(
+    "q407_kruskal_wallis",
+    tags=("statistics", "hypothesis-test"),
+    oracle=f"""
+WITH {_PRIORITY_TIES_CTES}, rk AS MATERIALIZED (
   SELECT c1, c2, c3, c4, c5, tot,
          2 * CAST(sum(tot) OVER (ORDER BY v
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -5011,19 +5000,7 @@ def q407_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderpriority", "o_totalprice"]
     )
-    obs = orders.select(
-        F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v"),
-    )
-    hv = obs.groupBy("v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tot"),
-        *[
-            F.sum(F.when(F.col("grp") == g, 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"c{i}")
-            for i, g in enumerate(_PRIORITIES, 1)
-        ],
-    )
+    hv = _priority_ties(orders)
     rk = bucketed_rank_cumsum(
         hv, "v", (), "tot", rank_out="_rk", cum_out="_cum"
     ).select(
@@ -5633,32 +5610,8 @@ def q411_runs_test_randomness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q413_km_greenwood_bands",
     tags=("statistics", "survival", "window"),
-    oracle="""
-WITH per_cust AS (
-  SELECT o_custkey,
-         min(CAST(o_orderdate AS DATE)) AS first_d,
-         max(CAST(o_orderdate AS DATE)) AS last_d
-  FROM orders GROUP BY o_custkey
-), horizon AS (
-  SELECT max(last_d) AS end_d FROM per_cust
-), life AS (
-  SELECT CAST(last_d - first_d AS BIGINT) AS t,
-         CASE WHEN last_d < end_d - 90 THEN 1 ELSE 0 END AS churned
-  FROM per_cust, horizon
-), hist AS (
-  SELECT t,
-         CAST(count(*) AS BIGINT) AS n_at,
-         CAST(sum(churned) AS BIGINT) AS n_events
-  FROM life GROUP BY t
-), tot AS (
-  SELECT CAST(sum(n_at) AS BIGINT) AS n_total FROM hist
-), risk AS (
-  SELECT t, n_events,
-         n_total - CAST(coalesce(sum(n_at) OVER (
-           ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0) AS BIGINT) AS n_risk
-  FROM hist, tot
-), km AS (
+    oracle=f"""
+WITH {_CHURN_RISK_CTES}, km AS (
   SELECT t, n_events, n_risk,
          exp(sum(CASE WHEN n_events = n_risk THEN CAST('-inf' AS DOUBLE)
                       ELSE ln(1 - n_events * 1.0 / n_risk) END) OVER (
@@ -5712,17 +5665,10 @@ def q413_km_greenwood_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...operators.survival import kaplan_meier_greenwood
 
     orders = read_table(spark, sf_dir, "orders", ["o_custkey", "o_orderdate"])
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.min(F.col("o_orderdate").cast("date")).alias("first_d"),
-        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
-    ).localCheckpoint(eager=False)  # horizon branch + life branch
-    horizon = per_cust.agg(F.max("last_d").alias("end_d"))
-    life = per_cust.crossJoin(F.broadcast(horizon)).select(
-        F.datediff("last_d", "first_d").cast("bigint").alias("t"),
-        F.when(
-            F.col("last_d") < F.date_sub(F.col("end_d"), 90), 1
-        ).otherwise(0).alias("churned"),
-    )
+    per_cust = _customer_spans(orders).localCheckpoint(
+        eager=False
+    )  # horizon branch + life branch
+    life = _churn_lifetimes(per_cust)
     km = kaplan_meier_greenwood(life)
     s = F.col("survival")
     se = s * F.sqrt(F.col("greenwood_e12") / F.lit(1000000000000.0))
@@ -5976,14 +5922,8 @@ def q415_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q417_siegel_repeated_medians",
     tags=("statistics", "timeseries", "regression"),
-    oracle="""
-WITH monthly AS (
-  SELECT CAST(year(CAST(o_orderdate AS DATE)) * 12
-              + month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m_idx,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM orders GROUP BY 1
-), pairs AS (
+    oracle=f"""
+WITH {_MONTHLY_CENTS_CTE}, pairs AS (
   SELECT a.m_idx AS xi, b.m_idx AS xj,
          (b.cents - a.cents) * 1.0 / (b.m_idx - a.m_idx) AS slope
   FROM monthly a JOIN monthly b ON a.m_idx <> b.m_idx
@@ -6076,16 +6016,9 @@ def q417_siegel_repeated_medians(
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderdate", "o_totalprice"]
     )
-    d = F.col("o_orderdate").cast("date")
-    monthly = (
-        orders.select(
-            (F.year(d) * 12 + F.month(d)).cast("bigint").alias("m_idx"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c1"),
-        )
-        .groupBy("m_idx")
-        .agg(F.sum("c1").alias("cents"))
-        .localCheckpoint(eager=False)  # pair sides + residual branch
-    )
+    monthly = _monthly_cents(orders).localCheckpoint(
+        eager=False
+    )  # pair sides + residual branch
     a = monthly.select(F.col("m_idx").alias("xi"), F.col("cents").alias("yi"))
     b = monthly.select(F.col("m_idx").alias("xj"), F.col("cents").alias("yj"))
     pairs = a.join(b, F.col("xi") != F.col("xj")).select(
@@ -6256,13 +6189,8 @@ def q418_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = read_table(spark, sf_dir, "orders", ["o_orderdate"])
     daily = (
-        orders.select(
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1970-01-01")
-            ).cast("bigint").alias("day_num")
-        )
-        .groupBy("day_num")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+        _daily_orders(orders)
+        .select("day_num", F.col("cnt").cast("bigint").alias("x"))
         .localCheckpoint(eager=False)  # bounds + dense branches
     )
     bounds = daily.agg(F.min("day_num").alias("mn"), F.max("day_num").alias("mx"))
@@ -6936,18 +6864,10 @@ def q422_bowker_symmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_type", "ts", "event_id"]
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).where(
-        F.col("next_type").isNotNull()
-        & (F.col("next_type") != F.col("event_type"))
-    )
-    pairs = (
-        seq.groupBy(F.col("event_type").alias("prev_type"), "next_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)  # forward + reverse halves
-    )
+    seq = event_transitions(ev).where(F.col("next_type") != F.col("event_type"))
+    pairs = transition_counts(seq).localCheckpoint(
+        eager=False
+    )  # forward + reverse halves
     fwd = pairs.where(F.col("prev_type") < F.col("next_type")).select(
         F.col("prev_type").alias("fa"),
         F.col("next_type").alias("fb"),
@@ -7282,20 +7202,8 @@ def q425_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q428_moods_median_test",
     tags=("statistics", "hypothesis-test", "nonparametric"),
-    oracle="""
-WITH obs AS (
-  SELECT o_orderpriority AS grp,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS v
-  FROM orders
-), hv AS MATERIALIZED (
-  SELECT v, CAST(count(*) AS BIGINT) AS tot,
-         CAST(sum(CASE WHEN grp = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN grp = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT) AS c2,
-         CAST(sum(CASE WHEN grp = '3-MEDIUM' THEN 1 ELSE 0 END) AS BIGINT) AS c3,
-         CAST(sum(CASE WHEN grp = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS c4,
-         CAST(sum(CASE WHEN grp = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS c5
-  FROM obs GROUP BY v
-), rk AS MATERIALIZED (
+    oracle=f"""
+WITH {_PRIORITY_TIES_CTES}, rk AS MATERIALIZED (
   SELECT *, CAST(sum(tot) OVER (ORDER BY v
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
             AS BIGINT) AS cum
@@ -7413,19 +7321,7 @@ def q428_moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderpriority", "o_totalprice"]
     )
-    obs = orders.select(
-        F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("v"),
-    )
-    hv = obs.groupBy("v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tot"),
-        *[
-            F.sum(F.when(F.col("grp") == g, 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"c{i}")
-            for i, g in enumerate(_PRIORITIES, 1)
-        ],
-    )
+    hv = _priority_ties(orders)
     rk = bucketed_rank_cumsum(
         hv, "v", (), "tot", rank_out="_rk", cum_out="_cum"
     ).select(

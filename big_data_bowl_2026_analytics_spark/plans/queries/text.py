@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 from ...operators.dedup import (
     exact_duplicates,
     jaccard_similar_pairs,
-    lsh_bands,
-    lsh_candidate_pairs,
+    minhash_lsh_pairs,
     minhash_signatures,
     simhash,
 )
@@ -33,6 +32,15 @@ from ...operators.textstats import (
 )
 from ...functions.scalar import fround
 from ...sources.readers import read_table
+from ..oracle_sql import (
+    DOC_TOKENS,
+    LSH_CANDIDATES,
+    MINHASH_BANDS,
+    MINHASH_LSH,
+    SHINGLE_GRAMS,
+    TOKEN_OVERLAP,
+    TOKEN_SIZES,
+)
 from ..registry import query
 from ...core.session import local_frame
 from .splits import _hash16_sql
@@ -65,18 +73,8 @@ def q30_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q31_minhash_signatures",
     tags=("dedup", "minhash"),
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-)
+    oracle=f"""
+WITH {SHINGLE_GRAMS}
 SELECT doc_id,
        min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
        min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
@@ -100,30 +98,8 @@ def q31_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q32_lsh_candidate_pairs",
     tags=("dedup", "lsh"),
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-)
+    oracle=f"""
+WITH {MINHASH_LSH}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared_bands
 FROM bands a
 JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
@@ -139,27 +115,14 @@ def q32_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.45 s -> 0.35 s at sf0.1 under the bench confs (the md5 fold
     # was single-task on the one-row-group local file).
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    return lsh_candidate_pairs(bands)
+    return minhash_lsh_pairs(docs)
 
 
 @query(
     "q33_jaccard_similar_pairs",
     tags=("dedup", "jaccard"),
-    oracle="""
-WITH tok AS (
-  SELECT doc_id, lang, unnest(list_distinct(string_split(text, ' '))) AS tok
-  FROM documents
-), sizes AS (
-  SELECT doc_id, count(*) AS n_toks FROM tok GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM tok a
-  JOIN tok b ON a.tok = b.tok AND a.lang = b.lang
-  WHERE a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+    oracle=f"""
+WITH {TOKEN_OVERLAP}
 SELECT doc_a, doc_b, inter,
        inter / (sa.n_toks + sb.n_toks - inter) AS jaccard
 FROM inter
@@ -347,30 +310,8 @@ def q39_multimodal_blob_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Shared fixpoint CTEs for the CC-based dedup queries (q60/q91/q98):
 #: the clustering is algorithm-independent, so the recursive-CTE
 #: result checks min-label propagation and star contraction alike.
-_CC_REACH_CTES = """
-WITH RECURSIVE grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-), pairs AS (
+_CC_REACH_CTES = f"""
+WITH RECURSIVE {MINHASH_LSH}, pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
   WHERE a.doc_id < b.doc_id
@@ -436,9 +377,7 @@ def q60_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFram
     that IS exactly checkable.
     """
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    pairs = lsh_candidate_pairs(bands).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     from ...operators.dedup import duplicate_clusters
 
     return duplicate_clusters(pairs, docs, id_col="doc_id")
@@ -455,9 +394,7 @@ def q91_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-diameter duplicate graphs; both algorithms are held to the
     identical recursive-CTE fixpoint oracle."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    pairs = lsh_candidate_pairs(bands).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     from ...operators.dedup import duplicate_clusters_star
 
     return duplicate_clusters_star(pairs, docs, id_col="doc_id")
@@ -703,9 +640,7 @@ def q98_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...operators.dedup import duplicate_clusters
 
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    pairs = lsh_candidate_pairs(bands).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     clusters = duplicate_clusters(pairs, docs, id_col="doc_id")
 
     sized = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
@@ -732,13 +667,8 @@ def q98_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q111_minhash_estimate_error",
     tags=("dedup", "minhash", "sketch-accuracy"),
-    oracle="""
-WITH tok AS (
-  SELECT doc_id, lang, unnest(list_distinct(string_split(text, ' '))) AS tok
-  FROM documents
-), sizes AS (
-  SELECT doc_id, count(*) AS n_toks FROM tok GROUP BY doc_id
-), pairs AS (
+    oracle=f"""
+WITH {DOC_TOKENS}, {TOKEN_SIZES}, pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
   FROM tok a
   JOIN tok b ON a.tok = b.tok AND a.lang = b.lang
@@ -1154,18 +1084,8 @@ def q170_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q178_lsh_recall_audit",
     tags=("dedup", "lsh", "audit"),
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sizes AS (
+    oracle=f"""
+WITH {SHINGLE_GRAMS}, sizes AS (
   SELECT doc_id, count(*) AS n_sh FROM grams GROUP BY doc_id
 ), inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
@@ -1177,24 +1097,7 @@ WITH grams AS (
   JOIN sizes sa ON sa.doc_id = doc_a
   JOIN sizes sb ON sb.doc_id = doc_b
   WHERE i * 1.0 / (sa.n_sh + sb.n_sh - i) >= 0.5
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
-  WHERE a.doc_id < b.doc_id
-), n_cand AS (
+), {MINHASH_BANDS}, {LSH_CANDIDATES}, n_cand AS (
   SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM cand
 ), labeled AS (
   SELECT t.j, CASE WHEN c.doc_a IS NOT NULL THEN 1 ELSE 0 END AS caught
@@ -1255,10 +1158,8 @@ def q178_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(j >= 0.5)
         .select("doc_a", "doc_b", j.alias("j"))
     )
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
     cand = (
-        lsh_candidate_pairs(bands)
+        minhash_lsh_pairs(docs)
         .select("doc_a", "doc_b")
         .distinct()
         .localCheckpoint(eager=False)
@@ -1317,9 +1218,7 @@ def q179_component_size_distribution(
     q60/q91/q98.
     """
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    pairs = lsh_candidate_pairs(bands).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     from ...operators.dedup import duplicate_clusters
 
     comp = duplicate_clusters(pairs, docs, id_col="doc_id")
@@ -1352,35 +1251,8 @@ _SPLIT_CASE = """CASE WHEN __H__ % 1000 < 800 THEN 'train'
 @query(
     "q185_split_leakage_audit",
     tags=("dedup", "split", "audit", "llm-pipeline"),
-    oracle="""
-WITH grams AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(string_split(text, ' ')) - 2),
-           i -> string_split(text, ' ')[i] || ' ' ||
-                string_split(text, ' ')[i+1] || ' ' ||
-                string_split(text, ' ')[i+2]
-         ))) AS sh
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= 3
-), sig AS (
-  SELECT doc_id,
-         min(md5('0|' || sh)) AS h0, min(md5('1|' || sh)) AS h1,
-         min(md5('2|' || sh)) AS h2, min(md5('3|' || sh)) AS h3,
-         min(md5('4|' || sh)) AS h4, min(md5('5|' || sh)) AS h5,
-         min(md5('6|' || sh)) AS h6, min(md5('7|' || sh)) AS h7
-  FROM grams GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band_id, md5(concat(h0, h1)) AS bucket FROM sig
-  UNION ALL SELECT doc_id, 1, md5(concat(h2, h3)) FROM sig
-  UNION ALL SELECT doc_id, 2, md5(concat(h4, h5)) FROM sig
-  UNION ALL SELECT doc_id, 3, md5(concat(h6, h7)) FROM sig
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
-  WHERE a.doc_id < b.doc_id
-), splits AS (
+    oracle=f"""
+WITH {MINHASH_LSH}, {LSH_CANDIDATES}, splits AS (
   SELECT doc_id, __SPLITCASE__ AS split FROM documents
 ), tagged AS (
   SELECT least(sa.split, sb.split) AS split_lo,
@@ -1422,9 +1294,7 @@ def q185_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .splits import _hash16
 
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"], spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    cand = lsh_candidate_pairs(bands).select("doc_a", "doc_b").distinct()
+    cand = minhash_lsh_pairs(docs).select("doc_a", "doc_b").distinct()
     bucket = _hash16("split|", F.col("doc_id")) % 1000
     splits = docs.select(
         "doc_id",
@@ -1811,9 +1681,7 @@ def q258_dedup_cluster_conflicts(
     from ...operators.dedup import duplicate_clusters
 
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    pairs = lsh_candidate_pairs(bands).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     comp = duplicate_clusters(pairs, docs, id_col="doc_id")
     joined = comp.join(
         docs.select("doc_id", "lang", "source"), "doc_id"
@@ -2124,9 +1992,7 @@ def q265_dedup_savings_report(
     from pyspark.sql import Window
 
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sig = minhash_signatures(docs, n_hashes=8, shingle_n=3)
-    bands = lsh_bands(sig, n_hashes=8, band_size=2)
-    pairs = lsh_candidate_pairs(bands).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
     from ...operators.dedup import duplicate_clusters
 
     comp = duplicate_clusters(pairs, docs, id_col="doc_id")
@@ -2414,19 +2280,8 @@ def q277_heaps_law_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q280_dedup_threshold_sweep",
     tags=("dedup", "calibration", "audit"),
-    oracle="""
-WITH tok AS (
-  SELECT doc_id, lang, unnest(list_distinct(string_split(text, ' '))) AS tok
-  FROM documents
-), sizes AS (
-  SELECT doc_id, count(*) AS n_toks FROM tok GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM tok a
-  JOIN tok b ON a.tok = b.tok AND a.lang = b.lang
-  WHERE a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), pairs AS MATERIALIZED (
+    oracle=f"""
+WITH {TOKEN_OVERLAP}, pairs AS MATERIALIZED (
   SELECT doc_a, doc_b,
          inter / (sa.n_toks + sb.n_toks - inter) AS jaccard
   FROM inter
@@ -3193,16 +3048,20 @@ def q354_vocab_source_upset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q367_vocabulary_richness",
-    tags=("text", "statistics", "llm-pipeline"),
-    oracle="""
-WITH tok AS (
+#: Oracle CTEs: space-split tokens per source and their counts.
+_SOURCE_TOKEN_COUNTS_CTES = """tok AS (
   SELECT source, unnest(string_split(text, ' ')) AS t FROM documents
 ), cnt AS (
   SELECT source, t, CAST(count(*) AS BIGINT) AS c
   FROM tok GROUP BY source, t
-), spec AS (
+)"""
+
+
+@query(
+    "q367_vocabulary_richness",
+    tags=("text", "statistics", "llm-pipeline"),
+    oracle=f"""
+WITH {_SOURCE_TOKEN_COUNTS_CTES}, spec AS (
   SELECT source,
          CAST(count(*) AS BIGINT) AS d,
          CAST(sum(c) AS BIGINT) AS n,
@@ -3664,13 +3523,8 @@ def q379_token_dispersion_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q382_lexical_concentration",
     tags=("text", "statistics", "llm-pipeline"),
-    oracle="""
-WITH tok AS (
-  SELECT source, unnest(string_split(text, ' ')) AS t FROM documents
-), cnt AS (
-  SELECT source, t, CAST(count(*) AS BIGINT) AS c
-  FROM tok GROUP BY source, t
-), spec AS (
+    oracle=f"""
+WITH {_SOURCE_TOKEN_COUNTS_CTES}, spec AS (
   SELECT source,
          CAST(count(*) AS BIGINT) AS d,
          CAST(sum(c) AS BIGINT) AS n,

@@ -10,11 +10,73 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...functions.scalar import fround
+from ...operators.markov import (
+    event_transitions,
+    stationary_shares,
+    transition_counts,
+)
+from ...operators.temporal import hour_grid, hourly_counts, sessionize
 from ...sources.readers import parallelize_scan, read_table
+from ..oracle_sql import EVENT_SESSIONS
 from ..registry import query
 from ...core.session import local_frame
 from .splits import _hash16, _hash16_sql
 
+
+#: Oracle CTEs for the dense hourly event series (engine side:
+#: ``operators.temporal.hourly_counts`` and ``hour_grid``): events per
+#: epoch hour, the first and last hour, and the dense grid that turns
+#: missing hours into zeros — keyed by hour-of-day or by offset.
+_HOURLY_COUNTS_CTE = """counts AS (
+  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
+         CAST(count(*) AS BIGINT) AS x
+  FROM events GROUP BY 1
+)"""
+_HOUR_BOUNDS_CTES = f"""{_HOURLY_COUNTS_CTE}, bounds AS (
+  SELECT min(h) AS mn, max(h) AS mx FROM counts
+)"""
+_HOD_GRID_CTES = f"""{_HOUR_BOUNDS_CTES}, dense AS MATERIALIZED (
+  SELECT g.h, CAST(g.h % 24 AS BIGINT) AS hod,
+         CAST(coalesce(c.x, 0) AS BIGINT) AS x
+  FROM (SELECT unnest(generate_series(mn, mx)) AS h FROM bounds) g
+  LEFT JOIN counts c ON c.h = g.h
+)"""
+_IDX_GRID_CTES = f"""{_HOUR_BOUNDS_CTES}, dense AS (
+  SELECT hr.h - b.mn AS idx, CAST(coalesce(c.x, 0) AS BIGINT) AS x
+  FROM (SELECT unnest(generate_series(mn, mx)) AS h FROM bounds) hr
+  CROSS JOIN bounds b
+  LEFT JOIN counts c ON c.h = hr.h
+)"""
+
+#: Oracle CTEs of the per-type hourly grid: counts per (type, hour),
+#: the hour bounds, every hour, and the types.
+_TYPED_HOUR_GRID_CTES = """counts AS (
+  SELECT event_type,
+         CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
+         CAST(count(*) AS BIGINT) AS x
+  FROM events GROUP BY 1, 2
+), bounds AS (
+  SELECT min(h) AS mn, max(h) AS mx FROM counts
+), hours AS (
+  SELECT unnest(generate_series(mn, mx)) AS h FROM bounds
+), types AS (
+  SELECT DISTINCT event_type FROM counts
+)"""
+
+
+def _hourly_offset_series(ev: DataFrame) -> DataFrame:
+    """``(idx, x)``: events per hour on the dense grid, keyed by the
+    offset from the first hour (oracle side: ``_IDX_GRID_CTES``)."""
+    counts = hourly_counts(ev)
+    counts = counts.localCheckpoint(eager=False)  # bounds + dense branches
+    return (
+        hour_grid(counts)
+        .join(counts, "h", "left")
+        .select(
+            (F.col("h") - F.col("mn")).alias("idx"),
+            F.coalesce(F.col("x"), F.lit(0)).cast("bigint").alias("x"),
+        )
+    )
 
 @query(
     "q25_tumbling_window_hourly",
@@ -584,11 +646,8 @@ def q162_event_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q173_seasonal_naive_backtest",
-    tags=("timeseries", "forecast", "audit"),
-    oracle="""
-WITH hourly AS (
+#: Oracle CTEs of ``_seasonal_naive_pairs``.
+_SEASONAL_NAIVE_CTES = """hourly AS (
   SELECT event_type, date_trunc('hour', ts) AS bucket,
          round(sum(value) + 1e-9, 2) AS v
   FROM events GROUP BY event_type, date_trunc('hour', ts)
@@ -598,7 +657,31 @@ WITH hourly AS (
   JOIN hourly p
     ON p.event_type = a.event_type
    AND p.bucket = a.bucket - INTERVAL 24 HOUR
-)
+)"""
+
+
+def _seasonal_naive_pairs(ev: DataFrame) -> DataFrame:
+    """``(event_type, bucket, v, pv)``: each type's hourly value total
+    ``v`` next to the same hour a day earlier ``pv`` — the
+    seasonal-naive forecast (oracle side: ``_SEASONAL_NAIVE_CTES``)."""
+    hourly = (
+        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("bucket"))
+        .agg(fround(F.sum("value"), 2).alias("v"))
+        .localCheckpoint(eager=False)
+    )
+    prev = hourly.select(
+        "event_type",
+        (F.col("bucket") + F.expr("INTERVAL 24 HOURS")).alias("bucket"),
+        F.col("v").alias("pv"),
+    )
+    return hourly.join(prev, ["event_type", "bucket"])
+
+
+@query(
+    "q173_seasonal_naive_backtest",
+    tags=("timeseries", "forecast", "audit"),
+    oracle=f"""
+WITH {_SEASONAL_NAIVE_CTES}
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n_points,
        round(sum(abs(v - pv)) / count(*) + 1e-9, 4) AS mae,
@@ -628,17 +711,7 @@ def q173_seasonal_naive_backtest(
     window over the raw event stream.
     """
     ev = read_table(spark, sf_dir, "events", ["event_type", "ts", "value"])
-    hourly = (
-        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("bucket"))
-        .agg(fround(F.sum("value"), 2).alias("v"))
-        .localCheckpoint(eager=False)
-    )
-    prev = hourly.select(
-        "event_type",
-        (F.col("bucket") + F.expr("INTERVAL 24 HOURS")).alias("bucket"),
-        F.col("v").alias("pv"),
-    )
-    joined = hourly.join(prev, ["event_type", "bucket"])
+    joined = _seasonal_naive_pairs(ev)
     mag = F.abs("v") + F.abs("pv")
     return joined.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -1188,18 +1261,8 @@ def q231_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q235_pinball_loss",
     tags=("timeseries", "forecast", "evaluation"),
-    oracle="""
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS bucket,
-         round(sum(value) + 1e-9, 2) AS v
-  FROM events GROUP BY event_type, date_trunc('hour', ts)
-), joined AS (
-  SELECT a.event_type, a.v, p.v AS pv
-  FROM hourly a
-  JOIN hourly p
-    ON p.event_type = a.event_type
-   AND p.bucket = a.bucket - INTERVAL 24 HOUR
-)
+    oracle=f"""
+WITH {_SEASONAL_NAIVE_CTES}
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n_points,
        round(sum(CASE WHEN v >= pv THEN 0.5 * (v - pv)
@@ -1225,17 +1288,7 @@ def q235_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series float sum is the q24 class, absorbed by the fround.
     """
     ev = read_table(spark, sf_dir, "events", ["event_type", "ts", "value"])
-    hourly = (
-        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("bucket"))
-        .agg(fround(F.sum("value"), 2).alias("v"))
-        .localCheckpoint(eager=False)
-    )
-    pred = hourly.select(
-        "event_type",
-        (F.col("bucket") + F.expr("INTERVAL 24 HOURS")).alias("bucket"),
-        F.col("v").alias("pv"),
-    )
-    joined = hourly.join(pred, ["event_type", "bucket"])
+    joined = _seasonal_naive_pairs(ev)
     p50 = F.when(
         F.col("v") >= F.col("pv"), 0.5 * (F.col("v") - F.col("pv"))
     ).otherwise(0.5 * (F.col("pv") - F.col("v")))
@@ -1349,22 +1402,8 @@ def q239_sequence_pattern_mining(
 @query(
     "q244_session_path_topk",
     tags=("timeseries", "session", "sequence", "topk"),
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > 1800
-              OR lag(ts) OVER w IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, event_id, ts, event_type,
-         CAST(sum(new_session) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS BIGINT) AS session_id
-  FROM flagged
-), paths AS (
+    oracle=f"""
+WITH {EVENT_SESSIONS}, paths AS (
   SELECT user_id, session_id,
          array_to_string(list(event_type ORDER BY ts, event_id)[1:5], '>')
            AS path,
@@ -1406,22 +1445,7 @@ def q244_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_id", "ts", "event_type"]
     )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    epoch = F.col("ts").cast("double")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            (epoch - F.lag(epoch).over(w) > 1800)
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    sessions = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    sessions = sessionize(ev)
     w2 = Window.partitionBy("user_id", "session_id").orderBy(
         F.asc("ts"), F.asc("event_id")
     )
@@ -1474,19 +1498,8 @@ def q244_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q246_cross_correlation",
     tags=("timeseries", "correlation"),
-    oracle="""
-WITH counts AS (
-  SELECT event_type,
-         CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), hours AS (
-  SELECT unnest(generate_series(mn, mx)) AS h FROM bounds
-), types AS (
-  SELECT DISTINCT event_type FROM counts
-), dense AS MATERIALIZED (
+    oracle=f"""
+WITH {_TYPED_HOUR_GRID_CTES}, dense AS MATERIALIZED (
   SELECT t.event_type, hr.h, CAST(coalesce(c.x, 0) AS BIGINT) AS x
   FROM hours hr CROSS JOIN types t
   LEFT JOIN counts c ON c.event_type = t.event_type AND c.h = hr.h
@@ -1538,21 +1551,10 @@ def q246_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign-of-zero `+ 0` guard (footgun 9).
     """
     ev = read_table(spark, sf_dir, "events", ["ts", "event_type"])
-    counts = (
-        ev.select(
-            "event_type",
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)  # bounds/types/dense branches
-    )
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-    hours = bounds.select(
-        F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h")
-    )
+    counts = hourly_counts(ev, "event_type").localCheckpoint(
+        eager=False
+    )  # bounds/types/dense branches
+    hours = hour_grid(counts)
     types = counts.select("event_type").distinct()
     dense = (
         hours.crossJoin(types)
@@ -1723,22 +1725,8 @@ def _markov_attribution_oracle(n_iter: int = 12) -> str:
     predecessor plus the (scenario-adjusted) transition frame, so
     every CTE is MATERIALIZED (the q241 unroll discipline)."""
     cte = [
-        """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > 1800
-              OR lag(ts) OVER w IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, event_id, ts, event_type,
-         CAST(sum(new_session) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS BIGINT) AS session_id
-  FROM flagged
-), pos AS (
+        f"""
+WITH {EVENT_SESSIONS}, pos AS (
   SELECT user_id, session_id, event_type,
          row_number() OVER (
            PARTITION BY user_id, session_id ORDER BY ts, event_id
@@ -1850,21 +1838,7 @@ def q254_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_id", "ts", "event_type"]
     )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    epoch = F.col("ts").cast("double")
-    sessions = ev.withColumn(
-        "new_session",
-        F.when(
-            (epoch - F.lag(epoch).over(w) > 1800)
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    sessions = sessionize(ev)
     ws = Window.partitionBy("user_id", "session_id").orderBy(
         F.asc("ts"), F.asc("event_id")
     )
@@ -2092,14 +2066,8 @@ def q255_behavioral_user_similarity(
 @query(
     "q263_peak_detection",
     tags=("timeseries", "anomaly", "monitoring"),
-    oracle="""
-WITH counts AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), dense AS MATERIALIZED (
+    oracle=f"""
+WITH {_HOUR_BOUNDS_CTES}, dense AS MATERIALIZED (
   SELECT g.h, CAST(coalesce(c.x, 0) AS BIGINT) AS x
   FROM (SELECT unnest(generate_series(mn, mx)) AS h FROM bounds) g
   LEFT JOIN counts c ON c.h = g.h
@@ -2139,20 +2107,9 @@ def q263_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = (
-        ev.select(
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    counts = hourly_counts(ev)
     dense = (
-        bounds.select(
-            F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h")
-        )
+        hour_grid(counts)
         .join(counts, "h", "left")
         .select(
             "h", F.coalesce(F.col("x"), F.lit(0)).cast("bigint").alias("x")
@@ -2296,22 +2253,8 @@ def q269_ship_sla_attainment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q272_eb_shrunk_path_conversion",
     tags=("timeseries", "session", "statistics", "report"),
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > 1800
-              OR lag(ts) OVER w IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, event_id, ts, event_type,
-         CAST(sum(new_session) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS BIGINT) AS session_id
-  FROM flagged
-), pos AS (
+    oracle=f"""
+WITH {EVENT_SESSIONS}, pos AS (
   SELECT user_id, session_id, event_type,
          row_number() OVER (
            PARTITION BY user_id, session_id ORDER BY ts, event_id
@@ -2370,21 +2313,7 @@ def q272_eb_shrunk_path_conversion(
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_id", "ts", "event_type"]
     )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    epoch = F.col("ts").cast("double")
-    sessions = ev.withColumn(
-        "new_session",
-        F.when(
-            (epoch - F.lag(epoch).over(w) > 1800)
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    sessions = sessionize(ev)
     ws = Window.partitionBy("user_id", "session_id").orderBy(
         F.asc("ts"), F.asc("event_id")
     )
@@ -2453,12 +2382,8 @@ def q272_eb_shrunk_path_conversion(
 @query(
     "q273_haar_energy_decomposition",
     tags=("timeseries", "signal", "decomposition"),
-    oracle="""
-WITH counts AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), bounds AS (
+    oracle=f"""
+WITH {_HOURLY_COUNTS_CTE}, bounds AS (
   SELECT min(h) AS mn,
          CAST(((max(h) - min(h) + 1) // 16) * 16 AS BIGINT) AS span
   FROM counts
@@ -2512,15 +2437,7 @@ def q273_haar_energy_decomposition(
     of 16 hours so every level is complete.
     """
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = (
-        ev.select(
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
+    counts = hourly_counts(ev)
     bounds = counts.agg(
         F.min("h").alias("mn"),
         (
@@ -2729,21 +2646,9 @@ def q286_queue_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = (
-        ev.select(
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    counts = hourly_counts(ev)
     dense = (
-        bounds.select(
-            F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h"),
-            "mn",
-        )
+        hour_grid(counts)
         .join(counts, "h", "left")
         .select(
             (F.col("h") - F.col("mn")).alias("i"),
@@ -3259,19 +3164,8 @@ def q296_rapid_repeat_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q302_hour_of_day_envelope",
     tags=("timeseries", "seasonality", "capacity"),
-    oracle="""
-WITH counts AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), dense AS MATERIALIZED (
-  SELECT g.h, CAST(g.h % 24 AS BIGINT) AS hod,
-         CAST(coalesce(c.x, 0) AS BIGINT) AS x
-  FROM (SELECT unnest(generate_series(mn, mx)) AS h FROM bounds) g
-  LEFT JOIN counts c ON c.h = g.h
-), ranked AS (
+    oracle=f"""
+WITH {_HOD_GRID_CTES}, ranked AS (
   SELECT hod, x,
          row_number() OVER (PARTITION BY hod ORDER BY x, h) AS rn,
          count(*) OVER (PARTITION BY hod) AS n
@@ -3309,20 +3203,9 @@ def q302_hour_of_day_envelope(
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = (
-        ev.select(
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    counts = hourly_counts(ev)
     dense = (
-        bounds.select(
-            F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h")
-        )
+        hour_grid(counts)
         .join(counts, "h", "left")
         .select(
             "h",
@@ -3361,22 +3244,8 @@ def q302_hour_of_day_envelope(
 @query(
     "q306_session_unicity_sweep",
     tags=("privacy", "session", "audit"),
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w > 1800
-              OR lag(ts) OVER w IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, event_id, ts, event_type,
-         CAST(sum(new_session) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS BIGINT) AS session_id
-  FROM flagged
-), sess AS MATERIALIZED (
+    oracle=f"""
+WITH {EVENT_SESSIONS}, sess AS MATERIALIZED (
   SELECT user_id, session_id,
          list(event_type ORDER BY ts, event_id)[1:5] AS arr,
          CAST(floor(epoch(min(ts)) / 3600) % 24 AS BIGINT) AS hod
@@ -3423,21 +3292,8 @@ def q306_session_unicity_sweep(
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_id", "ts", "event_type"]
     )
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    sessions = sessionize(ev)
     epoch = F.col("ts").cast("double")
-    sessions = ev.withColumn(
-        "new_session",
-        F.when(
-            (epoch - F.lag(epoch).over(w) > 1800)
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
     ws = Window.partitionBy("user_id", "session_id").orderBy(
         F.asc("ts"), F.asc("event_id")
     )
@@ -3496,19 +3352,8 @@ def q306_session_unicity_sweep(
 @query(
     "q317_suspected_outage_hours",
     tags=("timeseries", "monitoring", "anomaly"),
-    oracle="""
-WITH counts AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), dense AS MATERIALIZED (
-  SELECT g.h, CAST(g.h % 24 AS BIGINT) AS hod,
-         CAST(coalesce(c.x, 0) AS BIGINT) AS x
-  FROM (SELECT unnest(generate_series(mn, mx)) AS h FROM bounds) g
-  LEFT JOIN counts c ON c.h = g.h
-), env AS (
+    oracle=f"""
+WITH {_HOD_GRID_CTES}, env AS (
   SELECT hod, x AS p25 FROM (
     SELECT hod, x,
            row_number() OVER (PARTITION BY hod ORDER BY x, h) AS rn,
@@ -3540,20 +3385,9 @@ def q317_suspected_outage_hours(
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = (
-        ev.select(
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    counts = hourly_counts(ev)
     dense = (
-        bounds.select(
-            F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h")
-        )
+        hour_grid(counts)
         .join(counts, "h", "left")
         .select(
             "h",
@@ -3936,13 +3770,7 @@ def _ewma_chain_sql() -> str:
     "q334_ewma_control_chart",
     tags=("timeseries", "monitoring", "control-chart"),
     oracle=f"""
-WITH counts AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), hours AS (
+WITH {_HOUR_BOUNDS_CTES}, hours AS (
   SELECT unnest(generate_series(mn, mx)) AS h, mn FROM bounds
 ), dense AS (
   SELECT hr.h, hr.mn, CAST(coalesce(c.x, 0) AS BIGINT) AS x
@@ -3980,20 +3808,9 @@ def q334_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = (
-        ev.select(
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h")
-        )
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
+    counts = hourly_counts(ev)
     counts = counts.localCheckpoint(eager=False)  # bounds + dense branches
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-    hours = bounds.select(
-        F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h"), "mn"
-    )
+    hours = hour_grid(counts)
     dense = hours.join(counts, "h", "left").select(
         "h", "mn", F.coalesce(F.col("x"), F.lit(0)).cast("bigint").alias("x")
     )
@@ -4171,19 +3988,8 @@ def q329_policy_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q335_overdispersion_audit",
     tags=("statistics", "timeseries", "audit"),
-    oracle="""
-WITH counts AS (
-  SELECT event_type,
-         CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), hours AS (
-  SELECT unnest(generate_series(mn, mx)) AS h FROM bounds
-), types AS (
-  SELECT DISTINCT event_type FROM counts
-), dense AS (
+    oracle=f"""
+WITH {_TYPED_HOUR_GRID_CTES}, dense AS (
   SELECT t.event_type, hr.h, CAST(coalesce(c.x, 0) AS BIGINT) AS x
   FROM hours hr CROSS JOIN types t
   LEFT JOIN counts c ON c.event_type = t.event_type AND c.h = hr.h
@@ -4226,21 +4032,9 @@ def q335_overdispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles on both engines.
     """
     ev = read_table(spark, sf_dir, "events", ["ts", "event_type"])
-    counts = (
-        ev.select(
-            "event_type",
-            F.floor(F.col("ts").cast("double") / 3600)
-            .cast("bigint")
-            .alias("h"),
-        )
-        .groupBy("event_type", "h")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
+    counts = hourly_counts(ev, "event_type")
     counts = counts.localCheckpoint(eager=False)  # bounds/types/dense
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-    hours = bounds.select(
-        F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h")
-    )
+    hours = hour_grid(counts)
     types = counts.select("event_type").distinct()
     dense = (
         hours.crossJoin(F.broadcast(types))
@@ -4449,18 +4243,10 @@ def q353_transition_predictability(
     everything lives on the <=|types|^2 = 25-cell frame with the
     5-row totals broadcast back.
     """
-    from pyspark.sql import Window
-
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_type", "ts", "event_id"]
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).where(F.col("next_type").isNotNull())
-    pairs = seq.groupBy(
-        F.col("event_type").alias("prev_type"), "next_type"
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    pairs = transition_counts(event_transitions(ev))
     tot = pairs.groupBy("prev_type").agg(
         F.sum("c").cast("bigint").alias("t"),
         F.max("c").cast("bigint").alias("cmax"),
@@ -4487,11 +4273,9 @@ def q353_transition_predictability(
     )
 
 
-@query(
-    "q358_erlang_staffing_planner",
-    tags=("timeseries", "queueing", "capacity", "planning"),
-    oracle="""
-WITH hrs AS (
+#: Oracle CTEs for the per-type offered load: event hours, the span
+#: in hours, and events per type.
+_HOURLY_LOAD_CTES = """hrs AS (
   SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h, event_type
   FROM events
 ), span AS (
@@ -4499,7 +4283,35 @@ WITH hrs AS (
 ), byt AS (
   SELECT event_type, CAST(count(*) AS BIGINT) AS n
   FROM hrs GROUP BY event_type
-), base AS (
+)"""
+
+
+def _offered_load(ev: DataFrame) -> DataFrame:
+    """``(event_type, n, span_h, a)``: events per type over the global
+    hour span, and the offered load ``a`` in erlangs at 30 services
+    per handler-hour (oracle side: ``_HOURLY_LOAD_CTES``)."""
+    hrs = ev.select(
+        F.floor(F.col("ts").cast("double") / 3600).cast("bigint").alias("h"),
+        "event_type",
+    ).localCheckpoint(eager=False)  # span + per-type branches
+    span = hrs.agg(
+        (F.max("h") - F.min("h") + 1).cast("bigint").alias("span_h")
+    )
+    byt = hrs.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    return byt.crossJoin(F.broadcast(span)).withColumn(
+        "a",
+        F.col("n").cast("double")
+        / (F.col("span_h").cast("double") * F.lit(30.0)),
+    )
+
+
+@query(
+    "q358_erlang_staffing_planner",
+    tags=("timeseries", "queueing", "capacity", "planning"),
+    oracle=f"""
+WITH {_HOURLY_LOAD_CTES}, base AS (
   SELECT event_type, n, span_h,
          CAST(n AS DOUBLE) / (CAST(span_h AS DOUBLE) * 30.0) AS a
   FROM byt CROSS JOIN span
@@ -4561,21 +4373,7 @@ def q358_erlang_staffing_planner(
     1-row span; the series runs on the 5-row type frame.
     """
     ev = read_table(spark, sf_dir, "events", ["ts", "event_type"])
-    hrs = ev.select(
-        F.floor(F.col("ts").cast("double") / 3600).cast("bigint").alias("h"),
-        "event_type",
-    ).localCheckpoint(eager=False)  # span + per-type branches
-    span = hrs.agg(
-        (F.max("h") - F.min("h") + 1).cast("bigint").alias("span_h")
-    )
-    byt = hrs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    base = byt.crossJoin(F.broadcast(span)).withColumn(
-        "a",
-        F.col("n").cast("double")
-        / (F.col("span_h").cast("double") * F.lit(30.0)),
-    )
+    base = _offered_load(ev)
     cur = base.withColumn("t1", F.col("a"))
     for k in range(2, 8):
         cur = cur.withColumn(
@@ -4616,17 +4414,19 @@ def q358_erlang_staffing_planner(
     )
 
 
-def _q362_oracle(n_rounds: int = 12) -> str:
-    """Unrolled power-iteration oracle on the |types|x|types| transition
-    matrix. Each round references the prior pi once and the matrix
-    once; MATERIALIZED per the q241/q350 lattice-unroll discipline."""
+def _stationary_chain_sql(src: str, n_rounds: int) -> str:
+    """Oracle CTEs ``seq`` .. ``pi{n_rounds}`` over the events in
+    ``src``: transition counts, totals and matrix, then ``n_rounds``
+    unrolled power-iteration rounds from the uniform start (engine
+    side: ``operators.markov.stationary_shares``). MATERIALIZED per
+    the q241/q350 lattice-unroll discipline."""
     parts = [
-        """
+        f"""
 WITH seq AS (
   SELECT event_type,
          lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
            AS next_type
-  FROM events
+  FROM {src}
 ), pairs AS MATERIALIZED (
   SELECT event_type AS prev_type, next_type,
          CAST(count(*) AS BIGINT) AS c
@@ -4652,6 +4452,14 @@ WITH seq AS (
   GROUP BY m.next_type
 )"""
         )
+    return "".join(parts)
+
+
+def _q362_oracle(n_rounds: int = 12) -> str:
+    """Unrolled power-iteration oracle on the |types|x|types| transition
+    matrix. Each round references the prior pi once and the matrix
+    once."""
+    parts = [_stationary_chain_sql("events", n_rounds)]
     last, prev = n_rounds, n_rounds - 1
     parts.append(
         f""", delta AS (
@@ -4695,41 +4503,16 @@ def q362_markov_stationary_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     every iteration lives on the bounded |types|^2 frame (no
     checkpoint needed — the lineage is 12 joins over a 25-row frame).
     """
-    from pyspark.sql import Window
-
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_type", "ts", "event_id"]
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).where(F.col("next_type").isNotNull())
-    pairs = (
-        seq.groupBy(F.col("event_type").alias("prev_type"), "next_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)  # matrix + totals + 12 rounds
-    )
+    pairs = transition_counts(event_transitions(ev)).localCheckpoint(
+        eager=False
+    )  # matrix + totals + 12 rounds
     tot = pairs.groupBy("prev_type").agg(
         F.sum("c").cast("bigint").alias("t")
     )
-    pmat = pairs.join(F.broadcast(tot), "prev_type").select(
-        "prev_type", "next_type",
-        (F.col("c").cast("double") / F.col("t")).alias("p"),
-    )
-    k = tot.agg(F.count(F.lit(1)).alias("k"))
-    pi = tot.crossJoin(F.broadcast(k)).select(
-        F.col("prev_type").alias("ty"),
-        (F.lit(1.0) / F.col("k")).alias("pi"),
-    )
-    prev_pi = None
-    for _ in range(12):
-        prev_pi = pi
-        pi = (
-            pi.join(pmat, pi.ty == pmat.prev_type)
-            .groupBy(F.col("next_type").alias("ty2"))
-            .agg(F.sum(F.col("pi") * F.col("p")).alias("pi"))
-            .select(F.col("ty2").alias("ty"), "pi")
-        )
+    pi, prev_pi = stationary_shares(pairs, tot)
     delta = (
         pi.join(
             prev_pi.select(F.col("ty"), F.col("pi").alias("pi_prev")), "ty"
@@ -5002,15 +4785,7 @@ def _q381_oracle(max_c: int = 12) -> str:
         for k in range(1, max_c + 1)
     )
     return f"""
-WITH hrs AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h, event_type
-  FROM events
-), span AS (
-  SELECT CAST(max(h) - min(h) + 1 AS BIGINT) AS span_h FROM hrs
-), byt AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n
-  FROM hrs GROUP BY event_type
-), b0 AS (
+WITH {_HOURLY_LOAD_CTES}, b0 AS (
   SELECT event_type, n, span_h,
          CAST(n AS DOUBLE) / (CAST(span_h AS DOUBLE) * 30.0) AS a,
          CAST(1 AS DOUBLE) AS b0
@@ -5056,24 +4831,7 @@ def q381_erlang_blocking_ladder(
     the 12-step recurrence runs on the 5-row type frame.
     """
     ev = read_table(spark, sf_dir, "events", ["ts", "event_type"])
-    hrs = ev.select(
-        F.floor(F.col("ts").cast("double") / 3600).cast("bigint").alias("h"),
-        "event_type",
-    ).localCheckpoint(eager=False)  # span + per-type branches
-    span = hrs.agg(
-        (F.max("h") - F.min("h") + 1).cast("bigint").alias("span_h")
-    )
-    cur = (
-        hrs.groupBy("event_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .crossJoin(F.broadcast(span))
-        .withColumn(
-            "a",
-            F.col("n").cast("double")
-            / (F.col("span_h").cast("double") * F.lit(30.0)),
-        )
-        .withColumn("b0", F.lit(1.0))
-    )
+    cur = _offered_load(ev).withColumn("b0", F.lit(1.0))
     max_c = 12
     for k in range(1, max_c + 1):
         ab = F.col("a") * F.col(f"b{k - 1}")
@@ -5652,19 +5410,8 @@ def q402_sprt_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q412_allan_variance",
     tags=("timeseries", "stability", "statistics"),
-    oracle="""
-WITH counts AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), dense AS (
-  SELECT hr.h - b.mn AS idx, CAST(coalesce(c.x, 0) AS BIGINT) AS x
-  FROM (SELECT unnest(generate_series(mn, mx)) AS h FROM bounds) hr
-  CROSS JOIN bounds b
-  LEFT JOIN counts c ON c.h = hr.h
-), ms AS (
+    oracle=f"""
+WITH {_IDX_GRID_CTES}, ms AS (
   SELECT unnest([1, 2, 4, 8, 16]) AS m
 ), blocks AS MATERIALIZED (
   SELECT ms.m, d.idx // ms.m AS blk,
@@ -5716,22 +5463,7 @@ def q412_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice, so it truncates lineage once.
     """
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = ev.select(
-        F.floor(F.col("ts").cast("double") / 3600).cast("bigint").alias("h")
-    ).groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    counts = counts.localCheckpoint(eager=False)  # bounds + dense branches
-    bounds = counts.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-    dense = (
-        bounds.select(
-            F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h"),
-            "mn",
-        )
-        .join(counts, "h", "left")
-        .select(
-            (F.col("h") - F.col("mn")).alias("idx"),
-            F.coalesce(F.col("x"), F.lit(0)).cast("bigint").alias("x"),
-        )
-    )
+    dense = _hourly_offset_series(ev)
     ms = F.explode(F.array(*[F.lit(m) for m in (1, 2, 4, 8, 16)])).alias("m")
     blocks = (
         dense.select("idx", "x", ms)
@@ -5776,19 +5508,8 @@ def q412_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q424_hurst_exponent",
     tags=("timeseries", "statistics", "stability"),
-    oracle="""
-WITH counts AS (
-  SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), bounds AS (
-  SELECT min(h) AS mn, max(h) AS mx FROM counts
-), dense AS (
-  SELECT hr.h - b.mn AS idx, CAST(coalesce(c.x, 0) AS BIGINT) AS x
-  FROM (SELECT unnest(generate_series(mn, mx)) AS h FROM bounds) hr
-  CROSS JOIN bounds b
-  LEFT JOIN counts c ON c.h = hr.h
-), fanned AS (
+    oracle=f"""
+WITH {_IDX_GRID_CTES}, fanned AS (
   SELECT ms.m, d.idx // ms.m AS blk, d.idx, d.x
   FROM dense d CROSS JOIN (SELECT unnest([8, 16, 32, 64, 128]) AS m) ms
 ), lattice AS MATERIALIZED (
@@ -5863,24 +5584,7 @@ def q424_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events", ["ts"])
-    counts = ev.select(
-        F.floor(F.col("ts").cast("double") / 3600).cast("bigint").alias("h")
-    ).groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    counts = counts.localCheckpoint(eager=False)  # bounds + dense branches
-    bounds = counts.agg(
-        F.min("h").alias("mn"), F.max("h").alias("mx")
-    )
-    dense = (
-        bounds.select(
-            F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("h"),
-            "mn",
-        )
-        .join(counts, "h", "left")
-        .select(
-            (F.col("h") - F.col("mn")).alias("idx"),
-            F.coalesce(F.col("x"), F.lit(0)).cast("bigint").alias("x"),
-        )
-    )
+    dense = _hourly_offset_series(ev)
     ms = F.explode(
         F.array(*[F.lit(m) for m in (8, 16, 32, 64, 128)])
     ).alias("m")
@@ -5968,38 +5672,7 @@ def _q427_oracle(n_rounds: int = 12) -> str:
     """q362's unrolled power-iteration lattice plus per-state
     conditional entropies, every float quantized to exact ppb BIGINTs
     before any engine-ordered summation."""
-    parts = [
-        """
-WITH seq AS (
-  SELECT event_type,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS next_type
-  FROM seq_src
-), pairs AS MATERIALIZED (
-  SELECT event_type AS prev_type, next_type,
-         CAST(count(*) AS BIGINT) AS c
-  FROM seq WHERE next_type IS NOT NULL
-  GROUP BY 1, 2
-), tot AS MATERIALIZED (
-  SELECT prev_type, CAST(sum(c) AS BIGINT) AS t FROM pairs GROUP BY 1
-), pmat AS MATERIALIZED (
-  SELECT p.prev_type, p.next_type, CAST(c AS DOUBLE) / t AS p
-  FROM pairs p JOIN tot USING (prev_type)
-), types AS MATERIALIZED (
-  SELECT prev_type AS ty, CAST(count(*) OVER () AS BIGINT) AS k FROM tot
-), pi0 AS MATERIALIZED (
-  SELECT ty, 1.0 / k AS pi FROM types
-)"""
-    ]
-    for i in range(1, n_rounds + 1):
-        p = i - 1
-        parts.append(
-            f""", pi{i} AS MATERIALIZED (
-  SELECT m.next_type AS ty, sum(pi * p) AS pi
-  FROM pi{p} v JOIN pmat m ON m.prev_type = v.ty
-  GROUP BY m.next_type
-)"""
-        )
+    parts = [_stationary_chain_sql("seq_src", n_rounds)]
     parts.append(
         f""", pir AS MATERIALIZED (
   SELECT ty, round(pi + 1e-9, 8) AS pi8 FROM pi{n_rounds}
@@ -6063,40 +5736,16 @@ def q427_chain_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-partitioned lead pass; iteration and entropy
     both live on the bounded |types|² frame (q362's contract).
     """
-    from pyspark.sql import Window
-
     ev = read_table(
         spark, sf_dir, "events", ["user_id", "event_type", "ts", "event_id"]
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).where(F.col("next_type").isNotNull())
-    pairs = (
-        seq.groupBy(F.col("event_type").alias("prev_type"), "next_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)  # matrix + totals + entropy rows
-    )
+    pairs = transition_counts(event_transitions(ev)).localCheckpoint(
+        eager=False
+    )  # matrix + totals + entropy rows
     tot = pairs.groupBy("prev_type").agg(
         F.sum("c").cast("bigint").alias("t")
     )
-    pmat = pairs.join(F.broadcast(tot), "prev_type").select(
-        "prev_type",
-        "next_type",
-        (F.col("c").cast("double") / F.col("t")).alias("p"),
-    )
-    k = tot.agg(F.count(F.lit(1)).alias("k"))
-    pi = tot.crossJoin(F.broadcast(k)).select(
-        F.col("prev_type").alias("ty"),
-        (F.lit(1.0) / F.col("k")).alias("pi"),
-    )
-    for _ in range(12):
-        pi = (
-            pi.join(pmat, pi.ty == pmat.prev_type)
-            .groupBy(F.col("next_type").alias("ty2"))
-            .agg(F.sum(F.col("pi") * F.col("p")).alias("pi"))
-            .select(F.col("ty2").alias("ty"), "pi")
-        )
+    pi, _ = stationary_shares(pairs, tot)
     pir = pi.select("ty", fround(F.col("pi"), 8).alias("pi8"))
     ratio = F.col("c").cast("double") / F.col("t")
     hrows = (

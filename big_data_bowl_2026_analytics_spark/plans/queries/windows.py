@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ...functions.scalar import fround
+from ...operators.temporal import sessionize
 from ...sources.readers import read_table
 from ..registry import query
 
@@ -174,19 +175,8 @@ def q24_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final agg share it).
     """
     ev = read_table(spark, sf_dir, "events", ["user_id", "event_id", "ts", "value"])
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     epoch = F.col("ts").cast("double")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            (epoch - F.lag(epoch).over(w) > 1800) | F.lag("ts").over(w).isNull(), 1
-        ).otherwise(0),
-    )
-    sessions = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    return sessions.groupBy("user_id", "session_id").agg(
+    return sessionize(ev).groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         fround(F.sum("value"), 2).alias("session_value"),
         fround(F.max(epoch) - F.min(epoch), 6).alias("duration_secs"),

@@ -119,12 +119,8 @@ _DRIVER_ORDER = [
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    # Import side-effect modules exactly once. load_all() forces the
-    # full sweep even under BDBL_LAZY_QUERIES=1, so the registry a
-    # consumer sees here is always complete.
-    from . import queries
-
-    queries.load_all()
+    # Importing the package registers every query (once).
+    from . import queries  # noqa: F401
 
     ordered = {
         name: _REGISTRY[name] for name in _DRIVER_ORDER if name in _REGISTRY

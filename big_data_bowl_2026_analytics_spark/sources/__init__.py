@@ -1,4 +1,4 @@
-from .readers import load_tables, read_csv, read_jsonl, read_table, register_views
+from .readers import read_csv, read_jsonl, read_table, register_views
 from .writers import (
     write_bucketed,
     write_csv,
@@ -9,7 +9,6 @@ from .writers import (
 
 __all__ = [
     "read_table",
-    "load_tables",
     "register_views",
     "read_csv",
     "read_jsonl",

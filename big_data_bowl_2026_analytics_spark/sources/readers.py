@@ -287,12 +287,6 @@ def parallelize_scan(
     return df.repartition(target)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Sequence[str] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: Sequence[str] = TPCH_TABLES
 ) -> None:

@@ -111,7 +111,6 @@ def write_bucketed(
     n_buckets: int,
     path: str | None = None,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed parquet table (hash-clustered files + catalog
     metadata): rows land in ``n_buckets`` files by the hash of
@@ -123,9 +122,10 @@ def write_bucketed(
     and aggregations on the bucket key skip their shuffle — the
     shuffle is paid once at write time, then amortized over every
     downstream join/agg. Requires ``saveAsTable`` (bucket metadata
-    lives in the catalog, not the files).
+    lives in the catalog, not the files); ``path`` makes it an external
+    table at that location.
     """
-    writer = df.write.mode(mode).format("parquet").bucketBy(
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(
         n_buckets, *bucket_cols
     )
     if sort_cols:

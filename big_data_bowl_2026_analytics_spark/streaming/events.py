@@ -280,21 +280,11 @@ def dedup_within_watermark(
     )
 
 
-def purchase_click_attribution(
-    events: DataFrame,
-    attribution_window: str = "1 hour",
-    watermark: str = "2 hours",
+def _click_attribution(
+    events: DataFrame, attribution_window: str, watermark: str, how: str
 ) -> DataFrame:
-    """Stream-stream interval join: attribute each purchase to the
-    same user's click events in the preceding ``attribution_window``.
-
-    Both sides carry watermarks and the join condition bounds event
-    time on BOTH ends, so the state store can evict rows as the
-    watermark advances — the canonical bounded-state stream-stream
-    join (unbounded conditions would accrete state forever). The
-    equi-key (user_id) keeps the join a hash exchange on a
-    high-cardinality column.
-    """
+    """Purchases joined (``how``) to the same user's clicks in the
+    preceding ``attribution_window``; both sides carry watermarks."""
     clicks = (
         events.where(F.col("event_type") == "click")
         .select(
@@ -322,7 +312,7 @@ def purchase_click_attribution(
             F.col("click_ts")
             >= F.col("purchase_ts") - F.expr(f"INTERVAL {attribution_window}")
         ),
-        "inner",
+        how,
     ).select(
         "purchase_id",
         F.col("purchase_user").alias("user_id"),
@@ -331,6 +321,24 @@ def purchase_click_attribution(
         "click_id",
         "click_ts",
     )
+
+
+def purchase_click_attribution(
+    events: DataFrame,
+    attribution_window: str = "1 hour",
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """Stream-stream interval join: attribute each purchase to the
+    same user's click events in the preceding ``attribution_window``.
+
+    Both sides carry watermarks and the join condition bounds event
+    time on BOTH ends, so the state store can evict rows as the
+    watermark advances — the canonical bounded-state stream-stream
+    join (unbounded conditions would accrete state forever). The
+    equi-key (user_id) keeps the join a hash exchange on a
+    high-cardinality column.
+    """
+    return _click_attribution(events, attribution_window, watermark, "inner")
 
 
 def purchase_click_attribution_outer(
@@ -354,42 +362,7 @@ def purchase_click_attribution_outer(
     State is bounded exactly as in the inner variant: both sides carry
     watermarks and the join condition bounds click_ts on both ends.
     """
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("click_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("purchase_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        (F.col("purchase_user") == F.col("click_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {attribution_window}")
-        ),
-        "left_outer",
-    ).select(
-        "purchase_id",
-        F.col("purchase_user").alias("user_id"),
-        "purchase_ts",
-        "purchase_value",
-        "click_id",
-        "click_ts",
-    )
+    return _click_attribution(events, attribution_window, watermark, "left_outer")
 
 
 def activity_lease_nets(

@@ -141,3 +141,34 @@ def test_pagerank_matches_numpy_reference(spark):
     assert len(got) == n
     for v in range(n):
         assert abs(got[v] - pr[v]) < 1e-12
+
+
+def test_local_checkpoint_keeps_origin_size_estimate(spark):
+    """A lazy ``localCheckpoint`` frame inherits its origin plan's
+    ``sizeInBytes``, so the planner can auto-broadcast it. The graph
+    operators keep explicit broadcast hints for a different reason: an
+    aggregate's estimate scales with its input, so a small aggregate
+    over a large edge frame still looks too big to broadcast."""
+    from pyspark.sql import functions as F
+
+    def size(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    small = spark.range(1000).groupBy((F.col("id") % 1000).alias("k")).count()
+    ck = small.localCheckpoint(eager=False)
+    assert size(ck) == size(small) > 0
+
+    big_input = spark.range(100_000_000).groupBy((F.col("id") % 10).alias("k"))
+    wide = big_input.count().localCheckpoint(eager=False)
+    threshold = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold").rstrip("b"))
+    assert size(wide) > threshold
+
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        probe = spark.range(10_000_000).withColumnRenamed("id", "k")
+        plan = probe.join(ck, "k")._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+    finally:
+        spark.conf.set(key, prior)

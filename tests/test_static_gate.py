@@ -15,7 +15,10 @@ round, so a regression fails CI instead of a verdict:
 5. every module compiles under ``ast.parse`` (syntax gate);
 6. every import names the stdlib, the package itself or a runtime
    dependency declared in ``pyproject.toml`` — no code path may exist
-   only for a library the package does not depend on.
+   only for a library the package does not depend on;
+7. no two top-level functions in the package share a signature and a
+   docstring-stripped body — a helper is defined once and imported,
+   never copied.
 """
 
 from __future__ import annotations
@@ -147,3 +150,28 @@ def test_imports_are_stdlib_or_declared_dependencies():
                 if name.split(".")[0] not in allowed:
                     offenders.append(f"{rel}:{node.lineno}:{name}")
     assert not offenders, f"imports outside the declared dependencies: {offenders}"
+
+
+def _clone_key(fn: ast.FunctionDef) -> str:
+    body = fn.body
+    if (
+        body
+        and isinstance(body[0], ast.Expr)
+        and isinstance(body[0].value, ast.Constant)
+        and isinstance(body[0].value.value, str)
+    ):
+        body = body[1:]
+    parts = [fn.args, fn.returns, *body]
+    return "\n".join(ast.dump(p) for p in parts if p is not None)
+
+
+def test_no_copied_top_level_functions():
+    seen: dict[str, list[str]] = {}
+    for rel, tree in _parsed():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                seen.setdefault(_clone_key(node), []).append(
+                    f"{rel}::{node.name}"
+                )
+    clones = [sites for sites in seen.values() if len(sites) > 1]
+    assert not clones, f"copied top-level functions: {clones}"
