@@ -1,4 +1,3 @@
-from .deception import deception_scores, pelt_l2
-from .recovery import recovery_scores
+from .deception import deception_score, pelt_l2
 
-__all__ = ["deception_scores", "pelt_l2", "recovery_scores"]
+__all__ = ["deception_score", "pelt_l2"]

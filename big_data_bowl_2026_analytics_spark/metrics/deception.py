@@ -2,16 +2,18 @@
 non-completion-probability series (SURVEY §2.9 U3/U4).
 
 The reference runs ruptures PELT (L2 cost, pen=0.01) per play in a
-Python loop (/root/reference/src/metrics/deception.py:18-117). Here
-the per-play work is a grouped-map pandas UDF (``applyInPandas``):
-plays partition across executors, each group's series is sorted by
-frame inside the UDF (determinism cannot lean on input order), and the
-change-point search is a self-contained numpy PELT implementing the
-standard algorithm (Killick et al. 2012) with the same candidate
-lattice ruptures uses by default (min_size=2, jump=5) so scores match
-the reference bit-for-bit on the same series.
+Python loop (reference src/metrics/deception.py:18-117). Here the
+scores stage (``pipeline/scores.py::compute_scores``) collects each
+play's frame-sorted probabilities into one array in a single
+aggregate, and :func:`deception_score` is a Series pandas UDF over
+that array column: each Arrow batch carries many plays, and each
+array goes through :func:`deception_for_series`. The change-point
+search is a self-contained numpy PELT implementing the standard
+algorithm (Killick et al. 2012) with the same candidate lattice
+ruptures uses by default (min_size=2, jump=5) so scores match the
+reference bit-for-bit on the same series.
 
-Scale: state per group is one short probability series (~tens of
+Scale: state per play is one short probability series (~tens of
 frames at 10 Hz); millions of plays fan out over the cluster with one
 shuffle on the play key.
 """
@@ -21,7 +23,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 _PEN = 0.01
 _MIN_SIZE = 2
@@ -175,31 +178,14 @@ def deception_for_series(signal: np.ndarray) -> float:
     return float(signal[cp:].mean() - signal[:cp].mean())
 
 
-def deception_scores(results: DataFrame, prob_col: str = "non_completion_probability") -> DataFrame:
-    """Per-play deception scores via applyInPandas over play groups.
-
-    Output: one row per play: (game_id, play_id, frame_id of the last
-    frame, deception_score) — matching the reference's last-frame
-    anchoring (deception.py:120-136).
-    """
-
-    def per_play(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("frame_id", kind="mergesort")
-        signal = pdf[prob_col].to_numpy(dtype=float)
-        score = deception_for_series(signal)
-        last = pdf.iloc[-1]
-        return pd.DataFrame(
-            {
-                "game_id": [last["game_id"]],
-                "play_id": [last["play_id"]],
-                "frame_id": [last["frame_id"]],
-                "deception_score": [score],
-            }
-        )
-
-    return results.groupBy("game_id", "play_id").applyInPandas(
-        per_play,
-        schema="game_id long, play_id long, frame_id int, deception_score double",
+@pandas_udf(DoubleType())
+def deception_score(series: pd.Series) -> pd.Series:
+    """Deception per play from a column of frame-ordered probability
+    arrays: :func:`deception_for_series` on each array, one Arrow
+    batch of plays per call."""
+    return pd.Series(
+        [deception_for_series(np.asarray(s, dtype=float)) for s in series],
+        dtype=float,
     )
 
 

@@ -36,16 +36,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ml.inference import score_dataframe
 from ..ml.model import LogisticModel
-from ..ml.train import FEATURE_COLS
 from .cleaning import (
     clean_plays,
     clean_tracking,
     create_players_dim,
     filter_plays_with_tracking,
 )
-from .features import build_features
+from .run import score_frames
 from .scores import compute_scores
 
 _TRACKING_BEFORE = "tracking_before_cleaned"
@@ -161,21 +159,7 @@ def run_incremental(
     if scored_weeks:
         test_before = before_clean.where(F.col("week").isin(scored_weeks))
         test_plays = final_plays.where(F.col("week").isin(scored_weeks))
-        feats = build_features(test_before, test_plays, per_frame=True)
-        scored = score_dataframe(
-            feats.na.fill(0, list(FEATURE_COLS)),
-            model,
-            output_col="non_completion_probability",
-        )
-        results = scored.select(
-            "game_id",
-            "play_id",
-            "frame_id",
-            "receiver_id",
-            "defender_id",
-            F.col("target").alias("pass_result"),
-            "non_completion_probability",
-        )
+        results = score_frames(test_before, test_plays, model)
         scores = compute_scores(results).join(
             F.broadcast(test_plays.select("game_id", "play_id", "week")),
             ["game_id", "play_id"],

@@ -43,6 +43,33 @@ class PipelineResult:
     scores: DataFrame
 
 
+def score_frames(
+    tracking: DataFrame, plays: DataFrame, model: LogisticModel
+) -> DataFrame:
+    """Per-frame inference results for ``tracking``'s plays: per-frame
+    features, the model's non-completion probability and the 7 columns
+    the scores stage reads (reference inference/create_dataset.py:153-165
+    and inference.py)."""
+    feats = build_features(tracking, plays, per_frame=True)
+    # The Arrow scorer, not ``native=True``: PELT runs on these
+    # probabilities, and with the JVM scorer the pipeline benchmark's
+    # pinned scores hash no longer matches ("scores differ from an
+    # earlier run of the same seed").
+    scored = score_dataframe(
+        feats.na.fill(0, list(FEATURE_COLS)), model,
+        output_col="non_completion_probability",
+    )
+    return scored.select(
+        "game_id",
+        "play_id",
+        "frame_id",
+        "receiver_id",
+        "defender_id",
+        F.col("target").alias("pass_result"),
+        "non_completion_probability",
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     raw_before: DataFrame,
@@ -124,21 +151,8 @@ def run_pipeline(
     # Stage 6 — per-frame inference features + distributed scoring
     # (reference inference/create_dataset.py:153-165 builds them from
     # cleaned BEFORE-throw tracking of the test weeks + inference.py).
-    inference_feats = build_features(
-        before_clean.where(F.col("week") > train_weeks), final_plays, per_frame=True
-    )
-    scored = score_dataframe(
-        inference_feats.na.fill(0, list(FEATURE_COLS)), fit.model,
-        output_col="non_completion_probability",
-    )
-    results = scored.select(
-        "game_id",
-        "play_id",
-        "frame_id",
-        "receiver_id",
-        "defender_id",
-        F.col("target").alias("pass_result"),
-        "non_completion_probability",
+    results = score_frames(
+        before_clean.where(F.col("week") > train_weeks), final_plays, fit.model
     )
     write_parquet(results, os.path.join(workdir, "inference_results"))
     results = spark.read.parquet(os.path.join(workdir, "inference_results"))

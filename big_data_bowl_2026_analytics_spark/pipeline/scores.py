@@ -1,39 +1,50 @@
 """Final scores stage (reference src/metrics/compute_scores.py:13-50):
-deception ⟕ recovery on (game, play, last frame) -> the 6-column
-scores table."""
+one aggregate per play -> the 6-column scores table."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..metrics.deception import deception_scores
-from ..metrics.recovery import recovery_scores
+from ..functions.scalar import piecewise_recovery_score
+from ..metrics.deception import deception_score
 
 
 def compute_scores(inference_results: DataFrame) -> DataFrame:
     """Scores table from per-frame inference results.
 
     Input grain: (game_id, play_id, frame_id) with receiver_id,
-    defender_id, pass_result, non_completion_probability.
+    defender_id, pass_result, non_completion_probability. Each play's
+    rows become one frame-sorted array; Deception runs over its
+    probabilities and the ids and Recovery come from its last element
+    (reference recovery.py:21-30 and deception.py:120-136 anchor on
+    the last frame).
     """
-    w = Window.partitionBy("game_id", "play_id").orderBy(F.desc("frame_id"))
-    ids = (
-        inference_results.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("game_id", "play_id", "frame_id", "defender_id", "receiver_id")
+    frames = F.sort_array(
+        F.collect_list(
+            F.struct(
+                "frame_id",
+                "non_completion_probability",
+                "defender_id",
+                "receiver_id",
+                "pass_result",
+            )
+        )
     )
-    deception = deception_scores(inference_results)
-    recovery = recovery_scores(inference_results)
-    combined = (
-        ids.join(deception, ["game_id", "play_id", "frame_id"], "left")
-        .join(recovery, ["game_id", "play_id", "frame_id"], "left")
-    )
-    return combined.select(
-        "game_id",
-        "play_id",
-        "defender_id",
-        "receiver_id",
-        "deception_score",
-        "recovery_score",
+    last = F.element_at("frames", -1)
+    return (
+        inference_results.groupBy("game_id", "play_id")
+        .agg(frames.alias("frames"))
+        .select(
+            "game_id",
+            "play_id",
+            last["defender_id"].alias("defender_id"),
+            last["receiver_id"].alias("receiver_id"),
+            deception_score("frames.non_completion_probability").alias(
+                "deception_score"
+            ),
+            piecewise_recovery_score(
+                last["pass_result"], last["non_completion_probability"]
+            ).alias("recovery_score"),
+        )
     )

@@ -190,9 +190,9 @@ def q24_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q28_changepoint_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user change-point score over the ordered event-value series:
-    the deception metric's PELT grouped-map operator (SURVEY §2.9
-    U3/U4, metrics/deception.py) exercised on the events table — one
-    row per user with the detected mean-shift magnitude.
+    the deception metric's PELT (SURVEY §2.9 U3/U4,
+    metrics/deception.py) run as a grouped-map operator on the events
+    table — one row per user with the detected mean-shift magnitude.
 
     No SQL oracle: PELT is an iterative dynamic program; the driver
     records the weaker rows-only check. To make even that gate carry

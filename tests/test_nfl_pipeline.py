@@ -218,14 +218,15 @@ def test_deception_series_semantics():
     assert deception_for_series(np.array([0.3, 0.6, 0.9])) == pytest.approx(0.6)
 
 
-def test_compute_scores_end_to_end(spark):
-    results = spark.createDataFrame(
-        [
-            tuple(r[f.name] for f in INFERENCE_RESULTS_SCHEMA.fields)
-            for r in make_inference_results()
-        ],
+def _inference_results(spark, rows):
+    return spark.createDataFrame(
+        [tuple(r[f.name] for f in INFERENCE_RESULTS_SCHEMA.fields) for r in rows],
         INFERENCE_RESULTS_SCHEMA,
     )
+
+
+def test_compute_scores_end_to_end(spark):
+    results = _inference_results(spark, make_inference_results())
     scores = {r["play_id"]: r for r in compute_scores(results).collect()}
     assert set(scores) == {1, 2, 3}
     # play 1: change point at 10 -> deception 0.6; C -> recovery -p_last = -0.8
@@ -237,6 +238,69 @@ def test_compute_scores_end_to_end(spark):
     assert scores[2]["defender_id"] == 6 and scores[2]["receiver_id"] == 5
     # play 3: I -> 1 - 0.9
     assert scores[3]["recovery_score"] == pytest.approx(0.1)
+
+
+def test_compute_scores_is_one_aggregate(spark):
+    """The scores stage is one shuffle and one Arrow UDF: no grouped-map
+    UDF, no window and no join."""
+    results = _inference_results(spark, make_inference_results())
+    plan = compute_scores(results)._jdf.queryExecution().executedPlan().toString()
+    for node in ("FlatMapGroupsInPandas", "Window", "Join", "CartesianProduct"):
+        assert node not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_compute_scores_matches_numpy_reference(spark):
+    """Every score row equals, with exact float ``==``, the numpy
+    reference: deception_for_series over the frame-sorted series and
+    the piecewise score of the last frame. Input rows are shuffled;
+    lengths cover 1, 2 and every n % 5 class."""
+    rng = np.random.default_rng(7)
+    lengths = [1, 2, *range(3, 13), *rng.integers(1, 41, size=200).tolist()]
+    rows, expected = [], {}
+    for play_id, n in enumerate(lengths, start=1):
+        game_id = 2001 + play_id % 3
+        frames = rng.choice(np.arange(1, 101), size=n, replace=False)
+        step = np.where(np.arange(n) >= rng.integers(0, n + 1), rng.normal(0, 0.3), 0.0)
+        probs = np.clip(rng.random() + step + rng.normal(0, 0.05, n), 0.0, 1.0)
+        pass_result = str(rng.choice(["C", "I", "IN"]))
+        receiver_id, defender_id = (int(v) for v in rng.integers(1, 10_000, size=2))
+        for f, prob in zip(frames, probs):
+            rows.append(
+                dict(
+                    game_id=game_id,
+                    play_id=play_id,
+                    frame_id=int(f),
+                    receiver_id=receiver_id,
+                    defender_id=defender_id,
+                    pass_result=pass_result,
+                    non_completion_probability=float(prob),
+                )
+            )
+        series = probs[np.argsort(frames)]
+        p = float(series[-1])
+        recovery = {"C": -p, "I": 1.0 - p, "IN": 1.2 * (1.0 - p)}[pass_result]
+        expected[(game_id, play_id)] = (
+            defender_id,
+            receiver_id,
+            deception_for_series(series),
+            recovery,
+        )
+    assert {n % 5 for n in lengths} == set(range(5))
+    order = rng.permutation(len(rows))
+    results = _inference_results(spark, [rows[i] for i in order])
+
+    got = {
+        (r["game_id"], r["play_id"]): (
+            r["defender_id"],
+            r["receiver_id"],
+            r["deception_score"],
+            r["recovery_score"],
+        )
+        for r in compute_scores(results).collect()
+    }
+    assert got == expected
 
 
 def test_play_timeline_rebases_frames(spark, cleaned):
