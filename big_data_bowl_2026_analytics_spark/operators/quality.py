@@ -9,8 +9,8 @@
 - null audits as single aggregates (reference's post-join
   ``isnull().any()`` warnings, tracking.py:86-89).
 
-All checks are lazy-friendly: they run one small aggregate job and
-raise with a useful message, instead of driver-side scans.
+All checks are lazy-friendly: each runs one small aggregate job (not
+a multi-job ``limit().collect()`` scan) and raises with a useful message.
 """
 
 from __future__ import annotations
@@ -36,18 +36,17 @@ def expect_columns(df: DataFrame, required: Sequence[str]) -> DataFrame:
 def assert_unique_key(df: DataFrame, keys: Sequence[str], label: str = "") -> DataFrame:
     """Fail if ``keys`` is not a unique key (the m:1 dim-side contract
     behind every broadcast enrichment join)."""
-    dup = (
+    n, example = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-        .limit(1)
-        .collect()
+        .agg(F.max("n"), F.max_by(F.struct(*keys), "n"))
+        .collect()[0]
     )
-    if dup:
-        key_vals = {k: dup[0][k] for k in keys}
+    if n is not None and n > 1:
+        key_vals = {k: example[k] for k in keys}
         raise DataQualityError(
             f"{label or 'frame'}: key {list(keys)} not unique, e.g. {key_vals} "
-            f"appears {dup[0]['n']} times"
+            f"appears {n} times"
         )
     return df
 
@@ -83,15 +82,14 @@ def assert_values_in(
     """Domain check (e.g. pass_result in {C, I, IN}; positive weights
     are the same shape with a predicate)."""
     bad = (
-        df.where(~F.col(column).isin(*allowed) & F.col(column).isNotNull())
-        .select(column)
+        df.where(~F.col(column).isin(*allowed))
         .limit(5)
-        .collect()
+        .agg(F.collect_list(column))
+        .collect()[0][0]
     )
     if bad:
         raise DataQualityError(
-            f"{label or 'frame'}: {column} outside {list(allowed)}: "
-            f"{[r[column] for r in bad]}"
+            f"{label or 'frame'}: {column} outside {list(allowed)}: {bad}"
         )
     return df
 

@@ -5,7 +5,7 @@ from .cleaning import (
     create_players_dim,
     filter_plays_with_tracking,
 )
-from .features import build_features, last_frame_per_player, train_test_split_by_week
+from .features import build_features, train_test_split_by_week
 from .multimodal import extract_features, sample_frames
 from .run import PipelineResult, run_pipeline
 from .scores import compute_scores
@@ -21,7 +21,6 @@ __all__ = [
     "extract_features",
     "extreme_plays",
     "filter_plays_with_tracking",
-    "last_frame_per_player",
     "receiver_rankings",
     "run_pipeline",
     "sample_frames",

@@ -293,13 +293,19 @@ def clean_tracking(
     over the partitioned tables instead of a per-week driver loop.
     Returns (before_clean, after_clean).
 
-    Each ``localCheckpoint`` truncates lineage at a frame later stages
-    reuse (before-enriched, post-closest-defender, post-filters).
-    Without it, every reuse re-embeds the upstream subtree and the
-    logical plan grows combinatorially — Catalyst analysis alone can
-    OOM a default-sized driver. This mirrors the reference's CSV
-    materialization between stages; a reliable stage for clusters
-    (checkpoint dir or parquet) is ROADMAP.md direction 2.
+    Each of the three ``localCheckpoint`` calls truncates lineage at a
+    frame later stages reuse (before-enriched, post-closest-defender,
+    post-filters). Without it, every reuse re-embeds the upstream
+    subtree and the logical plan grows combinatorially — Catalyst
+    analysis alone can OOM a default-sized driver. This mirrors the
+    reference's CSV materialization between stages; a reliable stage
+    for clusters (checkpoint dir or parquet) is ROADMAP.md direction 2.
+
+    The reference's mid-way syncs (J4/J5 after the closest-defender
+    pick) change no row, so they are absent: after rows get a role or
+    side only from ``before``, and ``closest_defender`` keeps only rows
+    with one, so every after key is a before key; the final
+    ``sync_players(before, after)`` does the before side's filtering.
     """
     qb = add_team_info(
         add_player_info(
@@ -314,8 +320,6 @@ def clean_tracking(
 
     after = carry_before_cols_to_after(before, raw_after)
     after = closest_defender(after).localCheckpoint(eager=False)
-    before = sync_players(before, after).localCheckpoint(eager=False)
-    after = sync_players(after, before)
 
     after = normalize_direction(after)
     after = add_team_info(add_player_info(after, players), raw_plays)

@@ -1,18 +1,22 @@
-"""Feature engineering (SURVEY §2.9 U1/U2) — wide join, no UDF.
+"""Feature engineering (SURVEY §2.9 U1/U2) — grouped aggregates, no UDF.
 
 The reference iterates plays in Python, picking the QB / targeted
 receiver / defender rows and computing 14 geometric features per play
 (/root/reference/src/data_processing/training/features.py:63-150).
-Here the per-group loop becomes three role-filtered frames joined wide
-on the play key (INNER, so plays missing a role drop exactly like the
-reference's ``except IndexError: continue``), and the feature math is
-the pure-Column library in ``functions/scalar.py`` — whole-stage
-codegen, no Python worker.
+Here the per-group loop becomes one ``groupBy`` on the play(-frame)
+key that picks each role's row as ``min(when(role, struct(nfl_id,
+...)))`` (the lowest ``nfl_id`` of the role). A key missing a role gets
+a null pick and drops, exactly like the reference's ``except
+IndexError: continue``. The feature math is the pure-Column library in
+``functions/scalar.py`` — whole-stage codegen, no Python worker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+from operator import and_
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import (
@@ -24,19 +28,13 @@ from ..functions.scalar import (
 
 PLAY_KEY = ["game_id", "play_id"]
 
-
-def last_frame_per_player(df: DataFrame) -> DataFrame:
-    """A7 (create_datasets.py:16-25): the at-throw snapshot — last frame
-    of each player in each play, ordered explicitly by frame_id
-    (pandas ``tail(1)`` leans on file order; Spark must not)."""
-    w = Window.partitionBy("game_id", "play_id", "nfl_id").orderBy(
-        F.desc("frame_id")
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+#: Each role's pick: the lowest-``nfl_id`` player whose column == value.
+_ROLES = {
+    "qb": ("player_role", "Passer"),
+    "rec": ("player_role", "Targeted Receiver"),
+    "def": ("player_side", "Defense"),
+}
+_PLAYER = ["nfl_id", "x", "y", "s", "dir", "o"]
 
 
 def build_features(
@@ -47,38 +45,33 @@ def build_features(
     """Engineered feature table: one row per play (training/test) or
     per play-frame (inference, ``per_frame=True``).
 
-    Scale: three shuffles on the play(-frame) key replaced the per-play
-    Python loop; all feature math is Column arithmetic. Targets:
-    training gets binary is-non-completion (F9), inference keeps the
-    raw pass_result (reference inference/create_dataset.py:73-103).
+    Scale: one shuffle on the play(-frame) key picks all three roles;
+    at play grain one more, on the player, first takes each player's
+    at-throw snapshot (A7, create_datasets.py:16-25: their last frame,
+    by ``max_by`` on frame_id, not file order). All feature math is
+    Column arithmetic. Targets: training gets binary is-non-completion
+    (F9), inference keeps the raw pass_result (reference
+    inference/create_dataset.py:73-103).
     """
-    snap = tracking if per_frame else last_frame_per_player(tracking)
     key = [*PLAY_KEY, "frame_id"] if per_frame else PLAY_KEY
-
-    def role_slice(cond, prefix: str) -> DataFrame:
-        cols = [
-            F.col("nfl_id").alias(f"{prefix}_nfl_id"),
-            F.col("x").alias(f"{prefix}_x"),
-            F.col("y").alias(f"{prefix}_y"),
-            F.col("s").alias(f"{prefix}_s"),
-            F.col("dir").alias(f"{prefix}_dir"),
-            F.col("o").alias(f"{prefix}_o"),
-        ]
-        w = Window.partitionBy(*key).orderBy(F.asc("nfl_id"))
-        return (
-            snap.where(cond)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(*key, *cols)
+    cols = ["player_role", "player_side", *_PLAYER]
+    snap = tracking.select(*PLAY_KEY, "frame_id", *cols)
+    if not per_frame:
+        snap = (
+            snap.groupBy(*PLAY_KEY, "nfl_id")
+            .agg(F.max_by(F.struct(*cols), "frame_id").alias("last"))
+            .select(*PLAY_KEY, "last.*")
         )
 
-    qb = role_slice(F.col("player_role") == "Passer", "qb")
-    rec = role_slice(F.col("player_role") == "Targeted Receiver", "rec")
-    deff = role_slice(F.col("player_side") == "Defense", "def")
-
-    wide = qb.join(rec, key, "inner").join(deff, key, "inner")
-    wide = wide.join(
-        F.broadcast(plays.select(*PLAY_KEY, "pass_result")), PLAY_KEY, "left"
+    # A key missing a role has a null pick and drops (see module docstring).
+    player = F.struct(*_PLAYER)
+    picks = snap.groupBy(*key).agg(
+        *[F.min(F.when(F.col(c) == v, player)).alias(r) for r, (c, v) in _ROLES.items()]
+    )
+    wide = (
+        picks.where(reduce(and_, [F.col(c).isNotNull() for c in [*key, *_ROLES]]))
+        .select(*key, *[F.col(f"{r}.{c}").alias(f"{r}_{c}") for r in _ROLES for c in _PLAYER])
+        .join(F.broadcast(plays.select(*PLAY_KEY, "pass_result")), PLAY_KEY, "left")
     )
 
     air_yards = F.col("rec_x") - F.col("qb_x")

@@ -18,10 +18,10 @@ def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str] | None = None,
-    mode: str = "overwrite",
     sort_within_partitions: Sequence[str] | None = None,
 ) -> None:
-    """Parquet sink; optional hive-style partitioning + in-file ordering.
+    """Parquet sink (overwrites ``path``); optional hive-style
+    partitioning + in-file ordering.
 
     ``sort_within_partitions`` keeps row-group ordering (e.g. by
     (game_id, play_id, frame_id)) so min/max statistics stay selective
@@ -30,7 +30,7 @@ def write_parquet(
     """
     if sort_within_partitions:
         df = df.sortWithinPartitions(*sort_within_partitions)
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

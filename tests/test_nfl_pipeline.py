@@ -175,6 +175,138 @@ def test_features_values_match_reference_formulas(spark, cleaned):
     assert rows[2]["target"] == 1
 
 
+def test_clean_tracking_keeps_before_and_after_in_sync(spark, nfl):
+    """Every non-passer player of before_clean is an after_clean player
+    and the reverse, even with an after-only player in the raw input
+    (it carries no role or side, so no filter keeps it)."""
+    before, after, plays = nfl
+    stray = [
+        dict(r, nfl_id=99, x=r["x"] + 0.5) for r in make_tracking_after()
+        if r["play_id"] == 1 and r["nfl_id"] == 2
+    ]
+    after = after.unionByName(
+        spark.createDataFrame(
+            [tuple(r[f.name] for f in TRACKING_AFTER_SCHEMA.fields) for r in stray],
+            TRACKING_AFTER_SCHEMA,
+        )
+    )
+    cleaned_plays = clean_plays(plays, before)
+    before_clean, after_clean = clean_tracking(
+        before, after, cleaned_plays, plays, create_players_dim(before)
+    )
+
+    def keys(df):
+        return {tuple(r) for r in df.select("game_id", "play_id", "nfl_id").collect()}
+
+    after_keys = keys(after_clean)
+    assert after_keys == keys(before_clean.where(F.col("player_role") != "Passer"))
+    assert after_keys == {(1001, 1, 2), (1001, 1, 3), (1001, 2, 5), (1001, 2, 6)}
+
+
+def test_build_features_is_grouped_aggregates(spark, nfl):
+    """The features stage picks each key's roles in one aggregate: no
+    window, one join (the broadcast plays), and one hash shuffle on the
+    key, plus one on the player for the play-grain last frame."""
+    before, _, plays = nfl
+    for per_frame, shuffles in ((False, 2), (True, 1)):
+        feats = build_features(before, plays, per_frame=per_frame)
+        plan = feats._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, plan
+        assert plan.count("Join") == 1, plan
+        assert plan.count("Exchange hashpartitioning") == shuffles, plan
+
+
+def _role_pick_reference(rows, per_frame):
+    """Pure-Python role picks: per key the lowest-nfl_id Passer,
+    Targeted Receiver and Defense player (at play grain, each
+    player's last frame); keys missing a role drop."""
+    if per_frame:
+        snap = rows
+    else:
+        last = {}
+        for r in rows:
+            k = (r["game_id"], r["play_id"], r["nfl_id"])
+            if k not in last or r["frame_id"] > last[k]["frame_id"]:
+                last[k] = r
+        snap = list(last.values())
+    groups = {}
+    for r in snap:
+        k = (r["game_id"], r["play_id"]) + ((r["frame_id"],) if per_frame else ())
+        groups.setdefault(k, []).append(r)
+    out = {}
+    for k, rs in groups.items():
+        qb, rec, deff = (
+            min((r for r in rs if r[col] == val), key=lambda r: r["nfl_id"], default=None)
+            for col, val in (
+                ("player_role", "Passer"),
+                ("player_role", "Targeted Receiver"),
+                ("player_side", "Defense"),
+            )
+        )
+        if qb and rec and deff:
+            air = None if None in (rec["x"], qb["x"]) else rec["x"] - qb["x"]
+            out[k] = (rec["nfl_id"], deff["nfl_id"], qb["s"], rec["s"], deff["s"], air)
+    return out
+
+
+def test_build_features_role_picks_match_reference(spark):
+    """Role picks equal the pure-Python reference on random plays with
+    several players per role, staggered last frames, null ``x`` and
+    missing roles, at play and at frame grain."""
+    rng = np.random.default_rng(11)
+    roles = [
+        ("Passer", "Offense"),
+        ("Targeted Receiver", "Offense"),
+        ("Other Route Runner", "Offense"),
+        ("Defensive Coverage", "Defense"),
+        ("Pass Rusher", "Defense"),
+    ]
+    rows, plays = [], []
+    for play_id in range(1, 121):
+        game_id = 3001 + play_id % 4
+        plays.append((game_id, play_id, str(rng.choice(["C", "I", "IN"]))))
+        n_players = int(rng.integers(1, 9))
+        for nfl_id in rng.choice(np.arange(1, 60), size=n_players, replace=False):
+            role, side = roles[int(rng.integers(0, len(roles)))]
+            first = int(rng.integers(1, 8))
+            for frame_id in range(first, first + int(rng.integers(1, 8))):
+                rows.append(
+                    dict(
+                        game_id=game_id,
+                        play_id=play_id,
+                        nfl_id=int(nfl_id),
+                        frame_id=frame_id,
+                        player_role=role,
+                        player_side=side,
+                        x=None if rng.random() < 0.1 else float(rng.integers(0, 120)),
+                        y=float(rng.integers(0, 54)),
+                        s=int(rng.integers(0, 1000)) / 100,
+                        dir=float(rng.integers(0, 360)),
+                        o=float(rng.integers(0, 360)),
+                    )
+                )
+    cols = list(rows[0])
+    tracking = spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows],
+        "game_id long, play_id long, nfl_id long, frame_id long, player_role string,"
+        " player_side string, x double, y double, s double, dir double, o double",
+    )
+    plays_df = spark.createDataFrame(plays, "game_id long, play_id long, pass_result string")
+
+    for per_frame in (False, True):
+        key = ["game_id", "play_id"] + (["frame_id"] if per_frame else [])
+        expected = _role_pick_reference(rows, per_frame)
+        got = {
+            tuple(r[c] for c in key): (
+                r["receiver_id"], r["defender_id"], r["qb_speed"],
+                r["rec_speed"], r["def_speed"], r["air_yards"],
+            )
+            for r in build_features(tracking, plays_df, per_frame=per_frame).collect()
+        }
+        assert got == expected
+        assert 0 < len({k[:2] for k in expected}) < len(plays)  # some plays drop
+
+
 def test_pelt_matches_bruteforce_optimum():
     """PELT must reach the same optimal cost as exhaustive search over
     the jump-lattice segmentations."""

@@ -59,3 +59,40 @@ def test_assert_values_in(spark):
     bad = spark.createDataFrame([("C",), ("X",)], "pass_result string")
     with pytest.raises(DataQualityError, match="outside"):
         assert_values_in(bad, "pass_result", ["C", "I", "IN"])
+
+
+def test_checks_run_one_job_each(spark):
+    """Each key and domain check is one Spark job, passing or failing,
+    however many partitions its input has (a ``limit(...).collect()``
+    would scan partition batches in successive jobs). AQE off, as
+    AQE runs each shuffle stage as its own job."""
+    sc = spark.sparkContext
+    wide = spark.range(0, 400, numPartitions=8).selectExpr(
+        "id", "id % 3 AS k", "CASE WHEN id = 397 THEN 'X' ELSE 'C' END AS pass_result"
+    )
+
+    def jobs(check, *args):
+        group = f"quality-{check.__name__}-{args}"
+        sc.setJobGroup(group, group)
+        try:
+            check(wide, *args)
+            raised = None
+        except DataQualityError as exc:
+            raised = str(exc)
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), raised
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert jobs(assert_unique_key, ["id"]) == (1, None)
+        assert jobs(assert_values_in, "k", [0, 1, 2]) == (1, None)
+        assert jobs(assert_unique_key, ["k"]) == (
+            1, "frame: key ['k'] not unique, e.g. {'k': 0} appears 134 times"
+        )
+        assert jobs(assert_values_in, "pass_result", ["C"]) == (
+            1, "frame: pass_result outside ['C']: ['X']"
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
