@@ -20,11 +20,8 @@ def left_semi_keys(fact: DataFrame, keys_df: DataFrame, on: Sequence[str]) -> Da
     return fact.join(keys_df.select(*on).dropDuplicates(list(on)), list(on), "left_semi")
 
 
-def broadcast_left_join(
-    fact: DataFrame, dim: DataFrame, on: Sequence[str], dedup_dim: bool = True
-) -> DataFrame:
+def broadcast_left_join(fact: DataFrame, dim: DataFrame, on: Sequence[str]) -> DataFrame:
     """m:1 dimension enrichment: dedup the dim side (the semantic guard
     the reference encodes as validate='many_to_one') and broadcast it.
     """
-    d = dim.dropDuplicates(list(on)) if dedup_dim else dim
-    return fact.join(F.broadcast(d), list(on), "left")
+    return fact.join(F.broadcast(dim.dropDuplicates(list(on))), list(on), "left")

@@ -10,7 +10,9 @@ as lazy DataFrame transforms:
 - the row-wise team resolver (tracking.py:124-138 ``df.apply``)
   becomes an F.when expression;
 - pandas idxmin/tail(1)/pivot first — all physical-row-order dependent
-  — become explicit window/orderings with deterministic tie-breaks.
+  — become ordered aggregates with deterministic tie-breaks: ``min``
+  of a ``(value, nfl_id, ...)`` struct for idxmin, ``max_by(...,
+  frame_id)`` for the last position (``play_picks``).
 
 Everything here is a pure ``DataFrame -> DataFrame`` function, so the
 whole DAG stays one lazy plan: Catalyst prunes columns across stage
@@ -19,7 +21,7 @@ boundaries the reference materializes as CSV.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import (
@@ -69,6 +71,13 @@ def _core(df: DataFrame) -> DataFrame:
     return df.select(*[c for c in _TRACKING_CORE if c in df.columns])
 
 
+def _mirror(col: str, extent: float) -> Column:
+    """F1 (tracking.py:168-201): ``col`` on the left-to-right field,
+    to 2 decimals."""
+    is_left = F.col("play_direction") == "left"
+    return F.round(flip_coordinate(F.col(col), extent, is_left), 2)
+
+
 def create_players_dim(before: DataFrame) -> DataFrame:
     """Players dimension from tracking (reference players.py:87-122).
 
@@ -106,14 +115,9 @@ def clean_plays(raw_plays: DataFrame, raw_before: DataFrame) -> DataFrame:
         )
     )
     joined = plays.join(tracking_cols, PLAY_KEY, "inner")
-    is_left = F.col("play_direction") == "left"
     return joined.withColumn(
-        "ball_land_x",
-        F.round(flip_coordinate(F.col("ball_land_x"), FIELD_LENGTH, is_left), 2),
-    ).withColumn(
-        "ball_land_y",
-        F.round(flip_coordinate(F.col("ball_land_y"), FIELD_WIDTH, is_left), 2),
-    )
+        "ball_land_x", _mirror("ball_land_x", FIELD_LENGTH)
+    ).withColumn("ball_land_y", _mirror("ball_land_y", FIELD_WIDTH))
 
 
 def carry_before_cols_to_after(before: DataFrame, after: DataFrame) -> DataFrame:
@@ -135,10 +139,8 @@ def add_player_info(df: DataFrame, players: DataFrame) -> DataFrame:
 def add_team_info(df: DataFrame, raw_plays: DataFrame) -> DataFrame:
     """J3 (tracking.py:141-165): team from player side — the
     reference's row-wise ``df.apply`` resolver as one F.when column."""
-    teams = raw_plays.select(
-        *PLAY_KEY, "possession_team", "defensive_team"
-    ).dropDuplicates(PLAY_KEY)
-    joined = broadcast_left_join(df, teams, PLAY_KEY, dedup_dim=False)
+    teams = raw_plays.select(*PLAY_KEY, "possession_team", "defensive_team")
+    joined = broadcast_left_join(df, teams, PLAY_KEY)
     return joined.withColumn(
         "team",
         F.when(F.col("player_side") == "Defense", F.col("defensive_team")).when(
@@ -147,120 +149,97 @@ def add_team_info(df: DataFrame, raw_plays: DataFrame) -> DataFrame:
     ).drop("possession_team", "defensive_team")
 
 
-def sync_players(before: DataFrame, after: DataFrame) -> DataFrame:
-    """J4/J5 (tracking.py:204-266): keep rows whose (game, play, player)
-    still exists on the other stage — authored as LEFT SEMI."""
-    return left_semi_keys(before, after, PLAYER_KEY)
+def play_picks(
+    after: DataFrame, players: DataFrame, cleaned_plays: DataFrame
+) -> DataFrame:
+    """J6/J7/J8 (tracking.py:269-453): the ``(game_id, play_id,
+    nfl_id)`` of the targeted receiver and the closest defender of
+    every play the reference's three filters keep, from one aggregate
+    per player and one per play over the post-throw rows.
 
-
-def closest_defender(df: DataFrame) -> DataFrame:
-    """J8/A2/A3 (tracking.py:390-453): per play, keep only the defender
-    with the lowest mean frame-distance to the targeted receiver, plus
-    the receiver's own rows.
-
-    pandas idxmin keeps the first index on ties; here the row_number
-    is ordered by (mean_distance, nfl_id) — explicit and stable.
+    - Closest defender (J8): the Defense player, with at least one
+      frame shared with a receiver, of lowest mean frame distance to
+      it, ties to the lowest ``nfl_id``: ``min`` of a ``(mean, nfl_id,
+      ...)`` struct, whose order puts a null mean (no non-null
+      distance) first.
+    - One receiver, one DB (J6): the lowest receiver id is the highest,
+      and the closest defender's position is a DB's.
+    - Ball landing (J7): the ball lands within 3 yd of the receiver's or
+      the defender's last position, a side counting only when its last
+      frame is the play's (the reference's pivot of the play's last
+      frame by ``player_side``).
     """
-    receiver = df.where(F.col("player_role") == "Targeted Receiver")
-    rec_coords = receiver.select(
+    is_rec = F.col("player_role") == "Targeted Receiver"
+    rows = after.where(is_rec | (F.col("player_side") == "Defense"))
+    receiver_xy = rows.where(is_rec).select(
         *PLAY_KEY,
         "frame_id",
         F.col("x").alias("x_rec"),
         F.col("y").alias("y_rec"),
+        F.lit(True).alias("matched"),
     )
-    defenders = df.where(F.col("player_side") == "Defense")
-    dists = defenders.join(rec_coords, [*PLAY_KEY, "frame_id"], "inner").withColumn(
-        "distance",
-        euclidean_distance(F.col("x"), F.col("y"), F.col("x_rec"), F.col("y_rec")),
-    )
-    mean_dist = dists.groupBy(*PLAYER_KEY).agg(
-        F.avg("distance").alias("mean_distance")
-    )
-    w = Window.partitionBy(*PLAY_KEY).orderBy(
-        F.asc("mean_distance"), F.asc("nfl_id")
-    )
-    closest_keys = (
-        mean_dist.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(*PLAYER_KEY)
-    )
-    closest_rows = left_semi_keys(defenders, closest_keys, PLAYER_KEY)
-    return closest_rows.unionByName(receiver)
-
-
-def one_receiver_one_db(df: DataFrame) -> DataFrame:
-    """J6/A1 (tracking.py:269-315): keep plays with exactly one targeted
-    receiver and exactly one defensive back — one pass of conditional
-    distinct counts instead of two groupbys + two joins + fillna."""
-    counts = df.groupBy(*PLAY_KEY).agg(
-        F.countDistinct(
-            F.when(F.col("player_role") == "Targeted Receiver", F.col("nfl_id"))
-        ).alias("receiver_count"),
-        F.countDistinct(
-            F.when(
-                (F.col("player_side") == "Defense")
-                & F.col("player_position").isin(*DB_POSITIONS),
-                F.col("nfl_id"),
-            )
-        ).alias("db_count"),
-    )
-    keys = counts.where(
-        (F.col("receiver_count") == 1) & (F.col("db_count") == 1)
-    ).select(*PLAY_KEY)
-    return left_semi_keys(df, keys, PLAY_KEY)
-
-
-def ball_landing_filter(df: DataFrame, cleaned_plays: DataFrame) -> DataFrame:
-    """J7/A4/A6 (tracking.py:318-387): keep plays whose ball lands
-    within 3 yards of the receiver's or defender's LAST position.
-
-    'Last position' pivoted wide by player_side — the pandas
-    aggfunc='first' pivot relies on row order; with one player per
-    side post-closest-defender, first == min and is order-free.
-    """
-    last_frames = df.groupBy(*PLAY_KEY).agg(F.max("frame_id").alias("frame_id"))
-    last_pos = df.join(last_frames, [*PLAY_KEY, "frame_id"], "inner")
-    pivoted = (
-        last_pos.groupBy(*PLAY_KEY)
-        .pivot("player_side", ["Offense", "Defense"])
-        .agg(F.min("x").alias("x"), F.min("y").alias("y"))
-        .withColumnsRenamed(
-            {
-                "Offense_x": "x_rec_last",
-                "Offense_y": "y_rec_last",
-                "Defense_x": "x_def_last",
-                "Defense_y": "y_def_last",
-            }
+    per_player = (
+        rows.join(receiver_xy, [*PLAY_KEY, "frame_id"], "left")
+        .groupBy(*PLAYER_KEY)
+        .agg(
+            F.min("player_role").alias("role"),
+            F.min("player_side").alias("side"),
+            F.max("frame_id").alias("last"),
+            F.max_by(
+                F.struct(
+                    _mirror("x", FIELD_LENGTH).alias("x"),
+                    _mirror("y", FIELD_WIDTH).alias("y"),
+                ),
+                "frame_id",
+            ).alias("pos"),
+            F.count("matched").alias("matched"),
+            F.avg(
+                euclidean_distance(F.col("x"), F.col("y"), F.col("x_rec"), F.col("y_rec"))
+            ).alias("mean"),
         )
     )
-    with_ball = pivoted.join(
-        F.broadcast(
-            cleaned_plays.select(*PLAY_KEY, "ball_land_x", "ball_land_y")
-        ),
-        PLAY_KEY,
-        "inner",
+    per_player = broadcast_left_join(
+        per_player, players.select("nfl_id", "player_position"), ["nfl_id"]
     )
-    dist_rec = euclidean_distance(
-        F.col("x_rec_last"), F.col("y_rec_last"), F.col("ball_land_x"), F.col("ball_land_y")
+    rec = F.col("role") == "Targeted Receiver"
+    defender = (F.col("side") == "Defense") & (F.col("matched") > 0)
+    per_play = per_player.groupBy(*PLAY_KEY).agg(
+        F.min(F.when(rec, F.struct("nfl_id", "last", "pos"))).alias("rec"),
+        F.max(F.when(rec, F.col("nfl_id"))).alias("rec_max"),
+        F.min(
+            F.when(defender, F.struct("mean", "nfl_id", "last", "pos", "player_position"))
+        ).alias("def"),
     )
-    dist_def = euclidean_distance(
-        F.col("x_def_last"), F.col("y_def_last"), F.col("ball_land_x"), F.col("ball_land_y")
+    ball = cleaned_plays.select(*PLAY_KEY, "ball_land_x", "ball_land_y")
+    with_ball = per_play.join(F.broadcast(ball), PLAY_KEY, "inner")
+    last = F.greatest("rec.last", "def.last")
+
+    def near(pick: str) -> Column:
+        dist = euclidean_distance(
+            F.col(f"{pick}.pos.x"),
+            F.col(f"{pick}.pos.y"),
+            F.col("ball_land_x"),
+            F.col("ball_land_y"),
+        )
+        return (F.col(f"{pick}.last") == last) & (dist < 3)
+
+    kept = with_ball.where(
+        (F.col("rec.nfl_id") == F.col("rec_max"))
+        & F.col("def.player_position").isin(*DB_POSITIONS)
+        & (near("rec") | near("def"))
     )
-    keys = with_ball.where((dist_rec < 3) | (dist_def < 3)).select(*PLAY_KEY)
-    return left_semi_keys(df, keys, PLAY_KEY)
+    return kept.select(
+        *PLAY_KEY,
+        F.explode(F.array("rec.nfl_id", "def.nfl_id")).alias("nfl_id"),
+    )
 
 
 def normalize_direction(df: DataFrame) -> DataFrame:
     """F1/F2 (tracking.py:168-201): mirror left-direction plays to a
     canonical left-to-right field; drops play_direction."""
     is_left = F.col("play_direction") == "left"
-    out = (
-        df.withColumn(
-            "x", F.round(flip_coordinate(F.col("x"), FIELD_LENGTH, is_left), 2)
-        )
-        .withColumn(
-            "y", F.round(flip_coordinate(F.col("y"), FIELD_WIDTH, is_left), 2)
-        )
+    out = df.withColumn("x", _mirror("x", FIELD_LENGTH)).withColumn(
+        "y", _mirror("y", FIELD_WIDTH)
     )
     for ang in ("o", "dir"):
         if ang in df.columns:
@@ -293,43 +272,33 @@ def clean_tracking(
     over the partitioned tables instead of a per-week driver loop.
     Returns (before_clean, after_clean).
 
-    Each of the three ``localCheckpoint`` calls truncates lineage at a
-    frame later stages reuse (before-enriched, post-closest-defender,
-    post-filters). Without it, every reuse re-embeds the upstream
-    subtree and the logical plan grows combinatorially — Catalyst
-    analysis alone can OOM a default-sized driver. This mirrors the
-    reference's CSV materialization between stages; a reliable stage
-    for clusters (checkpoint dir or parquet) is ROADMAP.md direction 2.
+    ``play_picks`` keys the receiver and closest DB of every kept play,
+    and both outputs semi-join on it: the post-throw rows directly,
+    the pre-throw rows before the play's passer rows join them for the
+    three-roles filter. The reference's player syncs (J4/J5) change no
+    row here: after rows get a role or side only from ``before``, so
+    every picked player has rows on both stages.
 
-    The reference's mid-way syncs (J4/J5 after the closest-defender
-    pick) change no row, so they are absent: after rows get a role or
-    side only from ``before``, and ``closest_defender`` keeps only rows
-    with one, so every after key is a before key; the final
-    ``sync_players(before, after)`` does the before side's filtering.
+    The picks are the one ``localCheckpoint``: both outputs read them,
+    and without it each output's plan re-embeds (and each write
+    recomputes) the whole picks subtree. At 2 rows per kept play the
+    checkpoint is small. A reliable stage for clusters (checkpoint dir
+    or parquet) is ROADMAP.md direction 2.
     """
-    qb = add_team_info(
-        add_player_info(
-            _core(raw_before.where(F.col("player_role") == "Passer")), players
-        ),
-        raw_plays,
+    after = carry_before_cols_to_after(raw_before, raw_after)
+    picks = F.broadcast(
+        play_picks(after, players, cleaned_plays).localCheckpoint(eager=False)
     )
 
-    before = _core(sync_players(raw_before, raw_after))
-    before = add_team_info(add_player_info(before, players), raw_plays)
-    before = before.localCheckpoint(eager=False)
+    def enrich(df: DataFrame) -> DataFrame:
+        return add_team_info(add_player_info(df, players), raw_plays)
 
-    after = carry_before_cols_to_after(before, raw_after)
-    after = closest_defender(after).localCheckpoint(eager=False)
-
-    after = normalize_direction(after)
-    after = add_team_info(add_player_info(after, players), raw_plays)
-    after = one_receiver_one_db(after)
-    after = ball_landing_filter(after, cleaned_plays).localCheckpoint(eager=False)
-
-    before = sync_players(before, after)
-    before = before.unionByName(qb, allowMissingColumns=True)
-    before = exactly_three_roles(before)
-    before = normalize_direction(before)
+    after = enrich(normalize_direction(after.join(picks, PLAYER_KEY, "left_semi")))
+    before = _core(raw_before)
+    before = before.join(picks, PLAYER_KEY, "left_semi").unionByName(
+        before.where(F.col("player_role") == "Passer")
+    )
+    before = normalize_direction(exactly_three_roles(enrich(before)))
     return before, after
 
 

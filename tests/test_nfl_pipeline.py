@@ -4,6 +4,7 @@ on the constructed fixtures (each play targets one filter)."""
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -27,6 +28,7 @@ from big_data_bowl_2026_analytics_spark.schemas import (
     TRACKING_AFTER_SCHEMA,
     TRACKING_BEFORE_SCHEMA,
 )
+from big_data_bowl_2026_analytics_spark.schemas.tracking import DB_POSITIONS, KEPT_ROUTES
 
 from fixtures_nfl import (
     make_inference_results,
@@ -454,3 +456,354 @@ def test_play_timeline_rebases_frames(spark, cleaned):
     # starts at the passer's last position, ends at the landing spot
     assert (bf[0]["ball_x"], bf[0]["ball_y"]) == (20.4, 25.0)
     assert (bf[-1]["ball_x"], bf[-1]["ball_y"]) == (50.0, 20.0)
+
+
+_DEF_POSITIONS = ("CB", "FS", "SS", "DB", "LB", "DE")
+#: Pythagorean offsets (0.25-yd grid): a defender and its mirror image
+#: at one of these keep an exactly equal, exactly summable distance.
+_TIE_OFFSETS = ((0.75, 1.0), (1.5, 2.0), (1.25, 3.0), (2.25, 3.0))
+
+
+def _random_season(seed, n_plays):
+    """Raw (before, after, plays) rows of a seeded random season that
+    exercises every cleaning filter: 0-2 passers, 0-2 targeted
+    receivers and 0-4 defenders (DB and LB/DE positions, some pairs
+    at exactly tied mean distances), staggered after-frame ranges,
+    3% null ``x``, left plays, SLANT plays, plays and players without
+    after rows, and after-only players with no before rows. Coordinates
+    sit on a 0.25-yd grid, so every rounding step is exact."""
+    rng = np.random.default_rng(seed)
+    template = make_plays()[0]
+    before, after, plays = [], [], []
+
+    def grid(lo, hi):
+        return float(rng.integers(int(lo * 4), int(hi * 4) + 1)) / 4
+
+    def maybe_null(v):
+        return None if rng.random() < 0.03 else v
+
+    for play_id in range(1, n_plays + 1):
+        game_id = 5001 + play_id % 7
+        week = 1 + play_id % 4
+        direction = "left" if rng.random() < 0.5 else "right"
+        n_frames = int(rng.integers(2, 6))
+        rec_start = (grid(10, 100), grid(5, 45))
+        rec_step = (grid(-1, 1), grid(-1, 1))
+        roster = []  # (nfl_id, role, side, position, path, after frames)
+
+        def after_range():
+            first = int(rng.integers(1, 3))
+            return range(first, first + int(rng.integers(1, 6)))
+
+        ids = iter(rng.permutation(np.arange(10, 60)).tolist())
+        for _ in range(int(rng.choice(3, p=[0.1, 0.85, 0.05]))):
+            qb_id = int(rng.integers(1, 10))
+            if all(p[0] != qb_id for p in roster):
+                pos = (grid(20, 40), grid(20, 30))
+                roster.append((qb_id, "Passer", "Offense", "QB", lambda f, p=pos: p, after_range()))
+        n_rec = int(rng.choice(3, p=[0.08, 0.8, 0.12]))
+        for i in range(n_rec):
+            if i == 0:
+                start, step = rec_start, rec_step
+            else:
+                start, step = (grid(10, 100), grid(5, 45)), (grid(-1, 1), grid(-1, 1))
+            path = lambda f, s=start, d=step: (s[0] + d[0] * f, s[1] + d[1] * f)
+            roster.append((next(ids), "Targeted Receiver", "Offense", "WR", path, after_range()))
+        if rng.random() < 0.3:
+            pos = (grid(10, 100), grid(5, 45))
+            roster.append((next(ids), "Other Route Runner", "Offense", "WR", lambda f, p=pos: p, after_range()))
+        rec_path = lambda f: (rec_start[0] + rec_step[0] * f, rec_start[1] + rec_step[1] * f)
+        def_ids = iter(rng.permutation(np.arange(100, 160)).tolist())
+        n_def = int(rng.integers(0, 5))
+        while n_def > 0:
+            role = "Pass Rusher" if rng.random() < 0.2 else "Defensive Coverage"
+            if n_def >= 2 and rng.random() < 0.25:
+                ox, oy = _TIE_OFFSETS[int(rng.integers(0, len(_TIE_OFFSETS)))]
+                frames = after_range()
+                for sign in (1.0, -1.0):
+                    nfl_id = next(def_ids)
+                    path = lambda f, s=sign, o=(ox, oy): (
+                        rec_path(f)[0] + s * o[0], rec_path(f)[1] + s * o[1]
+                    )
+                    roster.append((nfl_id, role, "Defense", _DEF_POSITIONS[nfl_id % 6], path, frames))
+                n_def -= 2
+            else:
+                nfl_id = next(def_ids)
+                off = [(grid(-6, 6), grid(-6, 6)) for _ in range(12)]
+                path = lambda f, o=off: (rec_path(f)[0] + o[f][0], rec_path(f)[1] + o[f][1])
+                roster.append((nfl_id, role, "Defense", _DEF_POSITIONS[nfl_id % 6], path, after_range()))
+                n_def -= 1
+
+        has_after = rng.random() < 0.95
+        after_rows = []
+        for nfl_id, role, side, position, path, frames in roster:
+            if not has_after or rng.random() < 0.08:
+                continue
+            for f in frames:
+                x, y = path(n_frames + f)
+                after_rows.append(
+                    dict(game_id=game_id, play_id=play_id, nfl_id=nfl_id, frame_id=f,
+                         x=maybe_null(x), y=y, s=grid(0, 10), a=grid(0, 3),
+                         dir=float(rng.integers(0, 360)), o=float(rng.integers(0, 360)),
+                         week=week)
+                )
+        if has_after and rng.random() < 0.1:  # after-only player: no role or side
+            for f in after_range():
+                x, y = rec_path(n_frames + f)
+                after_rows.append(
+                    dict(game_id=game_id, play_id=play_id, nfl_id=200 + play_id % 50,
+                         frame_id=f, x=x + 0.25, y=y, s=1.0, a=0.0, dir=0.0, o=0.0,
+                         week=week)
+                )
+        after += after_rows
+
+        # Ball near one player's last after position (so the 3-yd test
+        # cuts both ways), or anywhere.
+        anchors = [r for r in after_rows if r["x"] is not None and r["nfl_id"] >= 10]
+        if anchors and rng.random() < 0.85:
+            nfl_id = anchors[int(rng.integers(0, len(anchors)))]["nfl_id"]
+            last = max((r for r in anchors if r["nfl_id"] == nfl_id), key=lambda r: r["frame_id"])
+            ball = (last["x"] + grid(-2.5, 2.5), last["y"] + grid(-2.5, 2.5))
+        else:
+            ball = (grid(0, 120), grid(0, 53))
+        for nfl_id, role, side, position, path, _ in roster:
+            for f in range(1, n_frames + 1):
+                x, y = path(f)
+                before.append(
+                    dict(game_id=game_id, play_id=play_id, nfl_id=nfl_id, frame_id=f,
+                         play_direction=direction, player_side=side, player_role=role,
+                         player_name=f"Player {nfl_id}", player_height="6-1",
+                         player_weight=180.0 + nfl_id, player_birth_date="1996-05-01",
+                         player_position=position, x=maybe_null(x), y=y,
+                         s=grid(0, 10), a=grid(0, 3), dir=float(rng.integers(0, 360)),
+                         o=float(rng.integers(0, 360)), absolute_yardline_number=40.0,
+                         ball_land_x=ball[0], ball_land_y=ball[1], week=week)
+                )
+        route = "SLANT" if rng.random() < 0.1 else str(rng.choice(["IN", "OUT", "HITCH"]))
+        plays.append(
+            dict(template, game_id=game_id, play_id=play_id, week=week,
+                 route_of_targeted_receiver=route,
+                 possession_team=f"T{play_id % 5}", defensive_team=f"T{play_id % 5 + 5}",
+                 pass_result=str(rng.choice(["C", "I", "IN"])))
+        )
+    return before, after, plays
+
+
+def _flip(v, extent, left):
+    return None if v is None else round(extent - v if left else v, 2)
+
+
+def _flip_angle(a, left):
+    return None if a is None else round((a + 180.0) % 360.0 if left else a, 2)
+
+
+def _distance(x1, y1, x2, y2):
+    if None in (x1, y1, x2, y2):
+        return None
+    return math.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))
+
+
+def _clean_tracking_reference(before, after, plays):
+    """Pure-Python model of the reference cleaning's four filters
+    (tracking.py:269-549), in its order: closest defender (lowest mean
+    frame distance to the targeted receiver, ties to the lowest
+    ``nfl_id``, a null mean first), exactly one receiver and one DB,
+    the 3-yd ball-landing test on each side's position at the play's
+    last frame, and exactly three roles on the pre-throw side (with
+    every passer row). Returns (before_clean, after_clean) row dicts.
+
+    Assumes ``(game_id, play_id, nfl_id, frame_id)`` is unique, that
+    bio, side, role and direction are constant per player, and that a
+    passer or targeted receiver is on offense, as in the tracking
+    data."""
+    play = lambda r: (r["game_id"], r["play_id"])  # noqa: E731
+    player = lambda r: (r["game_id"], r["play_id"], r["nfl_id"])  # noqa: E731
+    dim = {r["nfl_id"]: (r["player_name"], r["player_position"]) for r in before}
+    carried = {
+        player(r): (r["player_side"], r["player_role"], r["play_direction"]) for r in before
+    }
+    teams = {play(p): (p["possession_team"], p["defensive_team"]) for p in plays}
+    first_before = {}
+    for r in before:
+        first_before.setdefault(play(r), r)
+    ball = {}
+    for p in plays:
+        r = first_before.get(play(p))
+        if r is not None and p["route_of_targeted_receiver"] in KEPT_ROUTES:
+            left = r["play_direction"] == "left"
+            ball[play(p)] = (
+                _flip(r["ball_land_x"], 120.0, left),
+                _flip(r["ball_land_y"], 53.3, left),
+            )
+
+    def finish(r):
+        """normalize_direction + player and team enrichment."""
+        left = r["play_direction"] == "left"
+        name, position = dim.get(r["nfl_id"], (None, None))
+        offense, defense = teams.get(play(r), (None, None))
+        side = r["player_side"]
+        out = dict(
+            r,
+            x=_flip(r["x"], 120.0, left),
+            y=_flip(r["y"], 53.3, left),
+            dir=_flip_angle(r["dir"], left),
+            o=_flip_angle(r["o"], left),
+            player_name=name,
+            player_position=position,
+            team=defense if side == "Defense" else offense if side == "Offense" else None,
+        )
+        del out["play_direction"]
+        return out
+
+    by_play = {}
+    for r in after:
+        side, role, direction = carried.get(player(r), (None, None, None))
+        by_play.setdefault(play(r), []).append(
+            dict(r, player_side=side, player_role=role, play_direction=direction)
+        )
+    after_clean = []
+    for key, rows in by_play.items():
+        receivers = [r for r in rows if r["player_role"] == "Targeted Receiver"]
+        defenders = [r for r in rows if r["player_side"] == "Defense"]
+        at_frame = {}
+        for r in receivers:
+            at_frame.setdefault(r["frame_id"], []).append(r)
+        dists = {}
+        for d in defenders:
+            for r in at_frame.get(d["frame_id"], []):
+                dists.setdefault(d["nfl_id"], []).append(
+                    _distance(d["x"], d["y"], r["x"], r["y"])
+                )
+        means = {}
+        for nfl_id, ds in dists.items():
+            vals = [v for v in ds if v is not None]
+            means[nfl_id] = sum(vals) / len(vals) if vals else None
+        closest = min(
+            means,
+            key=lambda i: (0, 0.0, i) if means[i] is None else (1, means[i], i),
+            default=None,
+        )
+        picked = [
+            finish(r)
+            for r in receivers + [d for d in defenders if d["nfl_id"] == closest]
+        ]
+        n_receivers = len({r["nfl_id"] for r in picked if r["player_role"] == "Targeted Receiver"})
+        n_dbs = len({
+            r["nfl_id"] for r in picked
+            if r["player_side"] == "Defense" and r["player_position"] in DB_POSITIONS
+        })
+        if n_receivers != 1 or n_dbs != 1 or key not in ball:
+            continue
+        last = max(r["frame_id"] for r in picked)
+        near = False
+        for side in ("Offense", "Defense"):
+            at_last = [r for r in picked if r["frame_id"] == last and r["player_side"] == side]
+            xs = [r["x"] for r in at_last if r["x"] is not None]
+            ys = [r["y"] for r in at_last if r["y"] is not None]
+            d = _distance(min(xs, default=None), min(ys, default=None), *ball[key])
+            near = near or (d is not None and d < 3)
+        if near:
+            after_clean += picked
+
+    kept = {player(r) for r in after_clean}
+    core = [
+        "game_id", "play_id", "nfl_id", "frame_id", "play_direction", "player_side",
+        "player_role", "x", "y", "s", "a", "dir", "o", "week",
+    ]
+    candidates = [
+        finish({c: r[c] for c in core}) for r in before
+        if player(r) in kept or r["player_role"] == "Passer"
+    ]
+    roles = {}
+    for r in candidates:
+        if r["player_role"] is not None:
+            roles.setdefault(play(r), set()).add(r["player_role"])
+    before_clean = [r for r in candidates if len(roles.get(play(r), ())) == 3]
+    return before_clean, after_clean
+
+
+def _as_counter(rows):
+    return Counter(tuple(sorted(r.items())) for r in rows)
+
+
+def test_clean_tracking_matches_reference(spark):
+    """Both cleaned outputs equal, row for row and with exact floats,
+    the pure-Python reference of the four cleaning filters on a seeded
+    random season that hits every filter both ways. Assumes
+    ``(game_id, play_id, nfl_id, frame_id)`` is unique."""
+    before, after, plays = _random_season(seed=15, n_plays=400)
+    raw_before = spark.createDataFrame(
+        [tuple(r[f.name] for f in TRACKING_BEFORE_SCHEMA.fields) for r in before],
+        TRACKING_BEFORE_SCHEMA,
+    )
+    raw_after = spark.createDataFrame(
+        [tuple(r[f.name] for f in TRACKING_AFTER_SCHEMA.fields) for r in after],
+        TRACKING_AFTER_SCHEMA,
+    )
+    raw_plays = spark.createDataFrame(
+        [tuple(p[f.name] for f in PLAYS_SCHEMA.fields) for p in plays], PLAYS_SCHEMA
+    )
+    before_clean, after_clean = clean_tracking(
+        raw_before,
+        raw_after,
+        clean_plays(raw_plays, raw_before),
+        raw_plays,
+        create_players_dim(raw_before),
+    )
+    expected_before, expected_after = _clean_tracking_reference(before, after, plays)
+
+    assert after_clean.columns == [
+        "game_id", "play_id", "nfl_id", "frame_id", "x", "y", "s", "a", "dir", "o",
+        "week", "player_side", "player_role", "player_name", "player_position", "team",
+    ]
+    assert before_clean.columns == [
+        "game_id", "play_id", "nfl_id", "frame_id", "player_side", "player_role",
+        "x", "y", "s", "a", "dir", "o", "week", "player_name", "player_position", "team",
+    ]
+    assert _as_counter(r.asDict() for r in after_clean.collect()) == _as_counter(expected_after)
+    assert _as_counter(r.asDict() for r in before_clean.collect()) == _as_counter(expected_before)
+    # Some plays survive, most do not; the after side keeps passer-less plays.
+    kept_after = {(r["game_id"], r["play_id"]) for r in expected_after}
+    kept_before = {(r["game_id"], r["play_id"]) for r in expected_before}
+    assert 40 < len(kept_after) < 200
+    assert kept_before < kept_after
+
+
+def test_clean_tracking_picks_in_one_pass(spark, nfl, monkeypatch):
+    """Cleaning picks each play's receiver and closest DB in one pass:
+    building ``clean_tracking``'s plans runs at most 5 Spark jobs (the
+    broadcasts under its one ``localCheckpoint``), and no plan it
+    builds, a checkpointed frame's included, holds a window. AQE is
+    off, as AQE runs each shuffle stage as its own job."""
+    before, after, plays = nfl
+    checkpointed = []
+    frame_type = type(before)
+    checkpoint = frame_type.localCheckpoint
+
+    def recording(df, *args, **kwargs):
+        checkpointed.append(df)
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", recording)
+    sc = spark.sparkContext
+    group = "clean-tracking-construction"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        cleaned_plays = clean_plays(plays, before)
+        players = create_players_dim(before)
+        sc.setJobGroup(group, group)
+        try:
+            outputs = clean_tracking(before, after, cleaned_plays, plays, players)
+        finally:
+            sc.setJobGroup(None, None)
+        plans = [
+            df._jdf.queryExecution().executedPlan().toString()
+            for df in [*outputs, *checkpointed]
+        ]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    assert len(checkpointed) == 1
+    for plan in plans:
+        assert "Window" not in plan, plan
