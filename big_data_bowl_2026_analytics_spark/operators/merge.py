@@ -7,9 +7,9 @@ in the engine: the CDC-batch-applied snapshot
     merged = (base ANTI⋉ update_keys)  ∪  inserts(updates)
 
 i.e. update rows win whole-row, unmatched base rows survive, rows
-flagged as deletes disappear. Combined with
-``pipeline/incremental.py``'s dynamic-partition-overwrite writer this
-is the idempotent apply-changes loop of a warehouse pipeline.
+flagged as deletes disappear. Combined with a dynamic-partition-
+overwrite writer (``partitionOverwriteMode=dynamic``) this is the
+idempotent apply-changes loop of a warehouse pipeline.
 
 Scale: one anti join on the merge key — broadcast when the CDC batch
 is small (the common case; Catalyst picks it from sizes), shuffle

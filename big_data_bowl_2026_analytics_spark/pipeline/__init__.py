@@ -4,6 +4,7 @@ from .cleaning import (
     clean_tracking,
     create_players_dim,
     filter_plays_with_tracking,
+    player_plays,
 )
 from .features import build_features, train_test_split_by_week
 from .multimodal import extract_features, sample_frames
@@ -21,6 +22,7 @@ __all__ = [
     "extract_features",
     "extreme_plays",
     "filter_plays_with_tracking",
+    "player_plays",
     "receiver_rankings",
     "run_pipeline",
     "sample_frames",

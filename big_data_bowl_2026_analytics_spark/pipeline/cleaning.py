@@ -12,7 +12,12 @@ as lazy DataFrame transforms:
 - pandas idxmin/tail(1)/pivot first — all physical-row-order dependent
   — become ordered aggregates with deterministic tie-breaks: ``min``
   of a ``(value, nfl_id, ...)`` struct for idxmin, ``max_by(...,
-  frame_id)`` for the last position (``play_picks``).
+  frame_id)`` for the last position (``play_picks``);
+- everything the reference takes from the pre-throw frames as a
+  per-player or per-play fact (bio, direction, side, role, ball
+  landing) comes from one per-player summary, ``player_plays``: the
+  players dim, the plays' ball columns, the J1 carry and the
+  three-roles test read its rows, not the frames.
 
 Everything here is a pure ``DataFrame -> DataFrame`` function, so the
 whole DAG stays one lazy plan: Catalyst prunes columns across stage
@@ -78,6 +83,33 @@ def _mirror(col: str, extent: float) -> Column:
     return F.round(flip_coordinate(F.col(col), extent, is_left), 2)
 
 
+#: per-player facts of the pre-throw frames, constant per player and
+#: play in valid data: ``player_plays`` keeps their ``min``
+_PLAYER_FACTS = [
+    "play_direction",
+    "player_side",
+    "player_role",
+    "ball_land_x",
+    "ball_land_y",
+]
+
+
+def player_plays(raw_before: DataFrame) -> DataFrame:
+    """One row per ``(game_id, play_id, nfl_id)`` of the pre-throw
+    frames: the ``min`` of the bio struct (flattened back to its
+    columns) and of each ``_PLAYER_FACTS`` column. Every later reader
+    takes a ``min`` or a constant of these per player or per play, and
+    a min of mins is the min, so this summary stands in for the frames
+    in ``create_players_dim``, ``clean_plays`` and ``clean_tracking``'s
+    carry and three-roles test."""
+    bio = F.struct(*[F.col(c) for c in _PLAYER_COLS[1:]])
+    return (
+        raw_before.groupBy(*PLAYER_KEY)
+        .agg(F.min(bio).alias("bio"), *[F.min(c).alias(c) for c in _PLAYER_FACTS])
+        .select(*PLAYER_KEY, "bio.*", *_PLAYER_FACTS)
+    )
+
+
 def create_players_dim(before: DataFrame) -> DataFrame:
     """Players dimension from tracking (reference players.py:87-122).
 
@@ -120,12 +152,13 @@ def clean_plays(raw_plays: DataFrame, raw_before: DataFrame) -> DataFrame:
     ).withColumn("ball_land_y", _mirror("ball_land_y", FIELD_WIDTH))
 
 
-def carry_before_cols_to_after(before: DataFrame, after: DataFrame) -> DataFrame:
+def carry_before_cols_to_after(per_player: DataFrame, after: DataFrame) -> DataFrame:
     """J1 (tracking.py:48-90): attach player_side/role/direction from
-    the pre-throw stage onto post-throw rows (m:1, dim side deduped)."""
-    slice_df = before.select(
+    the pre-throw stage onto post-throw rows (m:1: ``player_plays``
+    has one row per player key)."""
+    slice_df = per_player.select(
         *PLAYER_KEY, "player_side", "player_role", "play_direction"
-    ).dropDuplicates(PLAYER_KEY)
+    )
     return after.join(slice_df, PLAYER_KEY, "left")
 
 
@@ -179,7 +212,7 @@ def play_picks(
         F.lit(True).alias("matched"),
     )
     per_player = (
-        rows.join(receiver_xy, [*PLAY_KEY, "frame_id"], "left")
+        rows.join(F.broadcast(receiver_xy), [*PLAY_KEY, "frame_id"], "left")
         .groupBy(*PLAYER_KEY)
         .agg(
             F.min("player_role").alias("role"),
@@ -249,16 +282,23 @@ def normalize_direction(df: DataFrame) -> DataFrame:
     return out.drop("play_direction")
 
 
-def exactly_three_roles(df: DataFrame) -> DataFrame:
-    """A5 (tracking.py:523-528): keep plays carrying exactly three
-    distinct roles (QB + receiver + defender)."""
-    keys = (
-        df.groupBy(*PLAY_KEY)
-        .agg(F.countDistinct("player_role").alias("n_roles"))
-        .where(F.col("n_roles") == 3)
-        .select(*PLAY_KEY)
+def exactly_three_roles(per_player: DataFrame, picks: DataFrame) -> DataFrame:
+    """A5 (tracking.py:523-528): the player keys of the picked players
+    and the passers (``player_plays`` rows) of every play whose keys
+    carry exactly three distinct roles (QB + receiver + defender), from
+    one aggregate per play."""
+    keys = per_player.join(picks, PLAYER_KEY, "left_semi").unionByName(
+        per_player.where(F.col("player_role") == "Passer")
     )
-    return left_semi_keys(df, keys, PLAY_KEY)
+    return (
+        keys.groupBy(*PLAY_KEY)
+        .agg(
+            F.collect_list("player_role").alias("roles"),
+            F.collect_list("nfl_id").alias("ids"),
+        )
+        .where(F.size(F.array_distinct("roles")) == 3)
+        .select(*PLAY_KEY, F.explode("ids").alias("nfl_id"))
+    )
 
 
 def clean_tracking(
@@ -267,25 +307,28 @@ def clean_tracking(
     cleaned_plays: DataFrame,
     raw_plays: DataFrame,
     players: DataFrame,
+    per_player: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
     """The full tracking cleaning DAG (reference tracking.py:456-549),
     over the partitioned tables instead of a per-week driver loop.
-    Returns (before_clean, after_clean).
+    ``per_player`` is ``player_plays(raw_before)``. Returns
+    (before_clean, after_clean).
 
-    ``play_picks`` keys the receiver and closest DB of every kept play,
-    and both outputs semi-join on it: the post-throw rows directly,
-    the pre-throw rows before the play's passer rows join them for the
-    three-roles filter. The reference's player syncs (J4/J5) change no
-    row here: after rows get a role or side only from ``before``, so
-    every picked player has rows on both stages.
+    ``play_picks`` keys the receiver and closest DB of every kept play.
+    The post-throw output semi-joins on it directly; the pre-throw
+    output semi-joins on ``exactly_three_roles``' keys (the picks and
+    the passers of the plays with three roles), so the pre-throw frames
+    are read once, for the output rows. The reference's player syncs
+    (J4/J5) change no row here: after rows get a role or side only from
+    ``before``, so every picked player has rows on both stages.
 
     The picks are the one ``localCheckpoint``: both outputs read them,
     and without it each output's plan re-embeds (and each write
     recomputes) the whole picks subtree. At 2 rows per kept play the
     checkpoint is small. A reliable stage for clusters (checkpoint dir
-    or parquet) is ROADMAP.md direction 2.
+    or parquet) is ROADMAP.md direction 5.
     """
-    after = carry_before_cols_to_after(raw_before, raw_after)
+    after = carry_before_cols_to_after(per_player, raw_after)
     picks = F.broadcast(
         play_picks(after, players, cleaned_plays).localCheckpoint(eager=False)
     )
@@ -294,12 +337,9 @@ def clean_tracking(
         return add_team_info(add_player_info(df, players), raw_plays)
 
     after = enrich(normalize_direction(after.join(picks, PLAYER_KEY, "left_semi")))
-    before = _core(raw_before)
-    before = before.join(picks, PLAYER_KEY, "left_semi").unionByName(
-        before.where(F.col("player_role") == "Passer")
-    )
-    before = normalize_direction(exactly_three_roles(enrich(before)))
-    return before, after
+    keys = F.broadcast(exactly_three_roles(per_player, picks))
+    before = _core(raw_before).join(keys, PLAYER_KEY, "left_semi")
+    return normalize_direction(enrich(before)), after
 
 
 def filter_plays_with_tracking(

@@ -7,6 +7,11 @@ both the reference's CSV hand-offs and what a 100 TB run needs anyway:
 restartability, lineage truncation, and partition-pruned downstream
 reads (a week-range predicate prunes files instead of scanning 18
 weeks to keep 9).
+
+The pre-throw frames are read twice: once into the per-player
+``player_plays`` stage, which the players dim, the cleaned plays and
+tracking cleaning's carry and three-roles test read in their place,
+and once for the cleaned pre-throw rows themselves.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from .cleaning import (
     clean_tracking,
     create_players_dim,
     filter_plays_with_tracking,
+    player_plays,
 )
 from .features import build_features, train_test_split_by_week
 from .scores import compute_scores
@@ -92,8 +98,15 @@ def run_pipeline(
         assert_values_in,
     )
 
+    # Per-player facts of the pre-throw frames (bio, direction, side,
+    # role, ball landing), one row per (game, play, player): stages 1-3
+    # read these rows instead of the frames.
+    per_player = player_plays(raw_before)
+    write_parquet(per_player, os.path.join(workdir, "player_plays"))
+    per_player = spark.read.parquet(os.path.join(workdir, "player_plays"))
+
     # Stage 1 — players dimension (reference players.py:87-122).
-    players = create_players_dim(raw_before)
+    players = create_players_dim(per_player)
     write_parquet(players, os.path.join(workdir, "players"))
     players = spark.read.parquet(os.path.join(workdir, "players"))
     if validate:
@@ -101,14 +114,15 @@ def run_pipeline(
         assert_no_nulls(players, ["nfl_id"], label="players dim")
 
     # Stage 2 — cleaned plays (reference plays.py:198-229).
-    cleaned_plays = clean_plays(raw_plays, raw_before)
+    cleaned_plays = clean_plays(raw_plays, per_player)
     write_parquet(cleaned_plays, os.path.join(workdir, "plays_cleaned"))
     cleaned_plays = spark.read.parquet(os.path.join(workdir, "plays_cleaned"))
 
     # Stage 3 — cleaned tracking, week-partitioned for pruned reads
-    # (reference tracking.py:456-549 writes per-week CSVs).
+    # (reference tracking.py:456-549 writes per-week CSVs); its
+    # pre-throw output is the second and last read of the frames.
     before_clean, after_clean = clean_tracking(
-        raw_before, raw_after, cleaned_plays, raw_plays, players
+        raw_before, raw_after, cleaned_plays, raw_plays, players, per_player
     )
     write_parquet(
         before_clean,

@@ -1087,8 +1087,8 @@ def q87_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one anti join on the merge key (broadcast for small CDC
     batches) + a shuffle-free union — the apply-changes step of an
-    idempotent warehouse loop (pairs with pipeline/incremental.py's
-    dynamic-partition-overwrite writer).
+    idempotent warehouse loop (pairs with a dynamic-partition-overwrite
+    writer).
     """
     orders = read_table(
         spark, sf_dir, "orders", ["o_orderkey", "o_orderstatus", "o_totalprice"]

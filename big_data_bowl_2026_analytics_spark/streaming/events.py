@@ -220,8 +220,8 @@ def stream_merge_into_parquet(
     against the snapshot + a rewrite. The rewrite covers the whole
     snapshot (fine for dimension-sized tables); at fact scale the same
     ``foreachBatch`` body targets partitions via dynamic partition
-    overwrite (pipeline/incremental.py) or a MERGE-capable table
-    format. exactly-once comes from the checkpoint: a replayed batch
+    overwrite (``partitionOverwriteMode=dynamic``) or a MERGE-capable
+    table format. exactly-once comes from the checkpoint: a replayed batch
     re-merges idempotently into the same version directory.
     """
     from ..operators.merge import merge_upsert

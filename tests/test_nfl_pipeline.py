@@ -21,6 +21,7 @@ from big_data_bowl_2026_analytics_spark.pipeline import (
     compute_scores,
     create_players_dim,
     filter_plays_with_tracking,
+    player_plays,
 )
 from big_data_bowl_2026_analytics_spark.schemas import (
     INFERENCE_RESULTS_SCHEMA,
@@ -89,7 +90,7 @@ def cleaned(spark, nfl):
     cleaned_plays = clean_plays(plays, before).cache()
     players = create_players_dim(before).cache()
     before_clean, after_clean = clean_tracking(
-        before, after, cleaned_plays, plays, players
+        before, after, cleaned_plays, plays, players, player_plays(before)
     )
     before_clean = before_clean.cache()
     after_clean = after_clean.cache()
@@ -194,7 +195,12 @@ def test_clean_tracking_keeps_before_and_after_in_sync(spark, nfl):
     )
     cleaned_plays = clean_plays(plays, before)
     before_clean, after_clean = clean_tracking(
-        before, after, cleaned_plays, plays, create_players_dim(before)
+        before,
+        after,
+        cleaned_plays,
+        plays,
+        create_players_dim(before),
+        player_plays(before),
     )
 
     def keys(df):
@@ -749,6 +755,7 @@ def test_clean_tracking_matches_reference(spark):
         clean_plays(raw_plays, raw_before),
         raw_plays,
         create_players_dim(raw_before),
+        player_plays(raw_before),
     )
     expected_before, expected_after = _clean_tracking_reference(before, after, plays)
 
@@ -767,6 +774,16 @@ def test_clean_tracking_matches_reference(spark):
     kept_before = {(r["game_id"], r["play_id"]) for r in expected_before}
     assert 40 < len(kept_after) < 200
     assert kept_before < kept_after
+    # Stages 1-2 read the per-player summary where they read the frames.
+    summary = player_plays(raw_before)
+    for from_summary, from_frames in [
+        (create_players_dim(summary), create_players_dim(raw_before)),
+        (clean_plays(raw_plays, summary), clean_plays(raw_plays, raw_before)),
+    ]:
+        assert from_summary.columns == from_frames.columns
+        assert Counter(map(tuple, from_summary.collect())) == Counter(
+            map(tuple, from_frames.collect())
+        )
 
 
 def test_clean_tracking_picks_in_one_pass(spark, nfl, monkeypatch):
@@ -794,7 +811,9 @@ def test_clean_tracking_picks_in_one_pass(spark, nfl, monkeypatch):
         players = create_players_dim(before)
         sc.setJobGroup(group, group)
         try:
-            outputs = clean_tracking(before, after, cleaned_plays, plays, players)
+            outputs = clean_tracking(
+                before, after, cleaned_plays, plays, players, player_plays(before)
+            )
         finally:
             sc.setJobGroup(None, None)
         plans = [
@@ -807,3 +826,67 @@ def test_clean_tracking_picks_in_one_pass(spark, nfl, monkeypatch):
     assert len(checkpointed) == 1
     for plan in plans:
         assert "Window" not in plan, plan
+
+
+def test_stages_1_to_3_read_the_pre_throw_frames_twice(spark, nfl, tmp_path, monkeypatch):
+    """Built as ``run_pipeline`` builds them, from parquet, stages 1-3
+    scan the pre-throw table twice: once for the ``player_plays``
+    summary and once for the cleaned pre-throw rows. The players dim,
+    the cleaned plays, the checkpointed picks and the post-throw output
+    read the summary instead. AQE is off, so each plan is final."""
+    before, after, plays = nfl
+
+    def path(name):
+        return str(tmp_path / name)
+
+    for name, df in [("raw_before", before), ("raw_after", after), ("raw_plays", plays)]:
+        df.write.parquet(path(name))
+    raw_before, raw_after, raw_plays = (
+        spark.read.parquet(path(name)) for name in ("raw_before", "raw_after", "raw_plays")
+    )
+
+    def stage(df, name):
+        df.write.parquet(path(name))
+        return spark.read.parquet(path(name))
+
+    checkpointed = []
+    frame_type = type(before)
+    checkpoint = frame_type.localCheckpoint
+
+    def recording(df, *args, **kwargs):
+        checkpointed.append(df)
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", recording)
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.maxMetadataStringLength": "10000",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        summary = player_plays(raw_before)
+        per_player = stage(summary, "player_plays")
+        players = create_players_dim(per_player)
+        players_read = stage(players, "players")
+        cleaned_plays = clean_plays(raw_plays, per_player)
+        cleaned_read = stage(cleaned_plays, "plays_cleaned")
+        outputs = clean_tracking(
+            raw_before, raw_after, cleaned_read, raw_plays, players_read, per_player
+        )
+        plans = [
+            df._jdf.queryExecution().executedPlan().toString()
+            for df in [summary, players, cleaned_plays, *outputs, *checkpointed]
+        ]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(checkpointed) == 1
+    scans = [
+        line
+        for plan in plans
+        for line in plan.splitlines()
+        if "FileScan" in line and path("raw_before") in line
+    ]
+    assert len(scans) == 2, "\n".join(scans)

@@ -42,7 +42,6 @@ COLLECT_ALLOWLIST = {
     "operators/quality.py",  # observe() metrics, no extra pass
     "viz/__main__.py",  # single-play CLI render
     "ml/train.py",  # deliberately tiny training frame (SURVEY U6)
-    "pipeline/incremental.py",  # distinct week set (partition listing)
     "operators/graph.py",  # bounded_components: config-sized graph, bound ENFORCED
 }
 
