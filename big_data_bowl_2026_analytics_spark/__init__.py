@@ -4,7 +4,7 @@ A brand-new Spark-first engine with the query and data-processing
 capabilities of the reference NFL Big Data Bowl 2026 pipeline
 (``miguelmendesduarte/big-data-bowl-2026-analytics``), plus the
 large-scale training-data-pipeline operators (dedup, similarity
-search, text analysis, multimodal plumbing) the reference lacks.
+search, text analysis, binary-column metadata) the reference lacks.
 
 Layout:
 
@@ -18,7 +18,7 @@ Layout:
 - ``pipeline``   the reference-parity cleaning/feature pipelines
 - ``metrics``    deception (change-point) / recovery scoring
 - ``ml``         numpy logistic model, distributed scoring, eval
-- ``streaming``  Structured Streaming over the events stream
+- ``viz``        distributed play rendering (BMP frames, APNG/GIF clips)
 """
 
 __version__ = "0.1.0"

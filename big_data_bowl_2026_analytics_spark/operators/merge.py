@@ -50,28 +50,6 @@ def merge_upsert(
     return survivors.unionByName(inserts)
 
 
-def merge_key_condition(keys: Sequence[str], left: str = "t", right: str = "u") -> str:
-    """The equi-join merge condition ``t.k1 = u.k1 AND ...``."""
-    return " AND ".join(f"{left}.{k} = {right}.{k}" for k in keys)
-
-
-def merge_into_sql(
-    target_table: str, source_table: str, keys: Sequence[str], delete_col: str | None = None
-) -> str:
-    """Engine-neutral ``MERGE INTO`` SQL (Delta and Iceberg catalogs
-    accept it) with exactly :func:`merge_upsert`'s semantics."""
-    if delete_col is None:
-        clauses = ["WHEN MATCHED THEN UPDATE SET *", "WHEN NOT MATCHED THEN INSERT *"]
-    else:
-        clauses = [
-            f"WHEN MATCHED AND u.{delete_col} THEN DELETE",
-            "WHEN MATCHED THEN UPDATE SET *",
-            f"WHEN NOT MATCHED AND NOT u.{delete_col} THEN INSERT *",
-        ]
-    head = f"MERGE INTO {target_table} t\nUSING {source_table} u\nON {merge_key_condition(keys)}"
-    return "\n".join([head, *clauses])
-
-
 def snapshot_diff(
     before: DataFrame,
     after: DataFrame,

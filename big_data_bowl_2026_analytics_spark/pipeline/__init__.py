@@ -7,7 +7,6 @@ from .cleaning import (
     player_plays,
 )
 from .features import build_features, train_test_split_by_week
-from .multimodal import extract_features, sample_frames
 from .run import PipelineResult, run_pipeline
 from .scores import compute_scores
 
@@ -19,12 +18,10 @@ __all__ = [
     "compute_scores",
     "create_players_dim",
     "defender_quadrants",
-    "extract_features",
     "extreme_plays",
     "filter_plays_with_tracking",
     "player_plays",
     "receiver_rankings",
     "run_pipeline",
-    "sample_frames",
     "train_test_split_by_week",
 ]

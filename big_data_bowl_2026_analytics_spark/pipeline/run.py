@@ -17,10 +17,12 @@ and once for the cleaned pre-throw rows themselves.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..ml.inference import score_dataframe
 from ..ml.model import LogisticModel
@@ -47,6 +49,26 @@ class PipelineResult:
     test: DataFrame
     model: LogisticModel
     scores: DataFrame
+
+
+def _stage(
+    spark: SparkSession,
+    df: DataFrame,
+    workdir: str,
+    name: str,
+    partition_by: Sequence[str] = (),
+    sort_within_partitions: Sequence[str] | None = None,
+) -> DataFrame:
+    """Write ``df`` as the parquet stage ``name`` under ``workdir`` and
+    reread it. The reread carries the schema just written, laid out as
+    a parquet read lays it out (partition columns last, every field
+    nullable), so it runs no schema-inference job."""
+    path = os.path.join(workdir, name)
+    write_parquet(df, path, partition_by, sort_within_partitions)
+    fields = [f for f in df.schema if f.name not in partition_by]
+    fields += [df.schema[c] for c in partition_by]
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in fields])
+    return spark.read.schema(schema).parquet(path)
 
 
 def score_frames(
@@ -101,22 +123,18 @@ def run_pipeline(
     # Per-player facts of the pre-throw frames (bio, direction, side,
     # role, ball landing), one row per (game, play, player): stages 1-3
     # read these rows instead of the frames.
-    per_player = player_plays(raw_before)
-    write_parquet(per_player, os.path.join(workdir, "player_plays"))
-    per_player = spark.read.parquet(os.path.join(workdir, "player_plays"))
+    per_player = _stage(spark, player_plays(raw_before), workdir, "player_plays")
 
     # Stage 1 — players dimension (reference players.py:87-122).
-    players = create_players_dim(per_player)
-    write_parquet(players, os.path.join(workdir, "players"))
-    players = spark.read.parquet(os.path.join(workdir, "players"))
+    players = _stage(spark, create_players_dim(per_player), workdir, "players")
     if validate:
         assert_unique_key(players, ["nfl_id"], label="players dim")
         assert_no_nulls(players, ["nfl_id"], label="players dim")
 
     # Stage 2 — cleaned plays (reference plays.py:198-229).
-    cleaned_plays = clean_plays(raw_plays, per_player)
-    write_parquet(cleaned_plays, os.path.join(workdir, "plays_cleaned"))
-    cleaned_plays = spark.read.parquet(os.path.join(workdir, "plays_cleaned"))
+    cleaned_plays = _stage(
+        spark, clean_plays(raw_plays, per_player), workdir, "plays_cleaned"
+    )
 
     # Stage 3 — cleaned tracking, week-partitioned for pruned reads
     # (reference tracking.py:456-549 writes per-week CSVs); its
@@ -124,26 +142,22 @@ def run_pipeline(
     before_clean, after_clean = clean_tracking(
         raw_before, raw_after, cleaned_plays, raw_plays, players, per_player
     )
-    write_parquet(
-        before_clean,
-        os.path.join(workdir, "tracking_before_cleaned"),
-        partition_by=["week"],
-        sort_within_partitions=["game_id", "play_id", "frame_id"],
+    frame_key = ["game_id", "play_id", "frame_id"]
+    before_clean = _stage(
+        spark, before_clean, workdir, "tracking_before_cleaned", ["week"], frame_key
     )
-    write_parquet(
-        after_clean,
-        os.path.join(workdir, "tracking_after_cleaned"),
-        partition_by=["week"],
-        sort_within_partitions=["game_id", "play_id", "frame_id"],
+    after_clean = _stage(
+        spark, after_clean, workdir, "tracking_after_cleaned", ["week"], frame_key
     )
-    before_clean = spark.read.parquet(os.path.join(workdir, "tracking_before_cleaned"))
-    after_clean = spark.read.parquet(os.path.join(workdir, "tracking_after_cleaned"))
 
     # Final plays ⋉ tracking sync (reference plays.py:232-300) — to a
     # NEW location, then reread: never overwrite a path being read.
-    final_plays = filter_plays_with_tracking(cleaned_plays, before_clean)
-    write_parquet(final_plays, os.path.join(workdir, "plays_final"))
-    final_plays = spark.read.parquet(os.path.join(workdir, "plays_final"))
+    final_plays = _stage(
+        spark,
+        filter_plays_with_tracking(cleaned_plays, before_clean),
+        workdir,
+        "plays_final",
+    )
     if validate:
         assert_unique_key(final_plays, ["game_id", "play_id"], label="final plays")
         assert_values_in(
@@ -154,10 +168,8 @@ def run_pipeline(
     # (reference create_datasets.py:94-111).
     features = build_features(before_clean, final_plays)
     train, test = train_test_split_by_week(features, final_plays, train_weeks)
-    write_parquet(train, os.path.join(workdir, "train"))
-    write_parquet(test, os.path.join(workdir, "test"))
-    train = spark.read.parquet(os.path.join(workdir, "train"))
-    test = spark.read.parquet(os.path.join(workdir, "test"))
+    train = _stage(spark, train, workdir, "train")
+    test = _stage(spark, test, workdir, "test")
 
     # Stage 5 — grid-search training (reference train.py:125-181).
     fit = grid_search(train, test)
@@ -168,14 +180,11 @@ def run_pipeline(
     results = score_frames(
         before_clean.where(F.col("week") > train_weeks), final_plays, fit.model
     )
-    write_parquet(results, os.path.join(workdir, "inference_results"))
-    results = spark.read.parquet(os.path.join(workdir, "inference_results"))
+    results = _stage(spark, results, workdir, "inference_results")
 
     # Stage 7 — deception + recovery scores
     # (reference compute_scores.py:13-50).
-    scores = compute_scores(results)
-    write_parquet(scores, os.path.join(workdir, "scores"))
-    scores = spark.read.parquet(os.path.join(workdir, "scores"))
+    scores = _stage(spark, compute_scores(results), workdir, "scores")
 
     return PipelineResult(
         players=players,

@@ -181,7 +181,7 @@ def q145_weighted_median_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFr
     """Exact quantity-weighted median price per return flag via a
     GROUPED-AGGREGATE pandas UDF — the one Arrow boundary flavor the
     taxonomy did not yet exercise (arrow-eval q50, grouped-map q28,
-    map-iter q39/multimodal, stateful streaming): the whole group's
+    map-iter q55): the whole group's
     (value, weight) arrays arrive as pandas Series, one scalar leaves.
 
     Engine-exactness: quantities are integer-valued doubles, so every

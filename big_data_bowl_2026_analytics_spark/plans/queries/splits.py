@@ -16,13 +16,27 @@ are integer-exact, so every row membership decision is engine-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...functions.scalar import fround
-from ...operators.sketches import _HEX, _hash16
 from ...sources.readers import read_table
 from ..registry import query
+
+_HEX = "0123456789abcdef"
+
+
+def _hash16(seed: str, key: Column) -> Column:
+    """First 16 bits of md5(seed || key) as an integer, decoded one
+    hex nibble at a time with instr (the engine-exact q34 pattern);
+    ``_hash16_sql`` is the same expression in DuckDB SQL."""
+    h = F.md5(F.concat(F.lit(seed), key.cast("string")))
+    v = F.lit(0)
+    for i in range(4):
+        nib = F.instr(F.lit(_HEX), F.substring(h, i + 1, 1)) - 1
+        v = v * 16 + nib
+    return v
+
 
 def _hash16_sql(seed: str, key: str) -> str:
     h = f"md5('{seed}' || CAST({key} AS VARCHAR))"

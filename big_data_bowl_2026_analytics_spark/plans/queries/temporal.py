@@ -281,15 +281,13 @@ def q180_last_touch_attribution(
 ) -> DataFrame:
     """Last-touch revenue attribution: each purchase credits the same
     user's most recent click IF it happened within the 30-minute
-    attribution window — the batch twin (and oracle-checked contract)
-    of the streaming interval join
-    ``streaming/events.py::purchase_click_attribution``. Daily rows:
-    purchases, attributed count/value, attribution rate.
+    attribution window. Daily rows: purchases, attributed count/value,
+    attribution rate.
 
     The window test is an integer-microsecond comparison on the as-of
-    gap — exactly the bound the streaming join's state eviction uses —
-    so membership is engine-exact; money columns use the round-of-sum
-    pattern.
+    gap — the same bound a streaming interval join would evict its
+    state by — so membership is engine-exact; money columns use the
+    round-of-sum pattern.
 
     Scale: the as-of composition is one union + ordered window on
     user_id (no join node); the daily rollup reduces matched

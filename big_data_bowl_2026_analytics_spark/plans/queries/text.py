@@ -4,7 +4,7 @@ These are the training-data-pipeline operators (BASELINE.json north
 star) as first-class engine queries, each oracle-checked: exact dedup,
 MinHash signatures + LSH banding + candidate pairs, SimHash, blocked
 n-gram Jaccard, language ID, quality scoring, token statistics,
-fingerprinting, and binary-column (multimodal) metadata plumbing.
+fingerprinting, and binary-column metadata plumbing.
 
 Hashing is md5 on both engines, so signatures match bit-for-bit; all
 similarity ratios are integer-count divisions (engine-exact doubles).
@@ -295,8 +295,9 @@ FROM documents
 def q39_multimodal_blob_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary column plumbing: treat content as a blob, compute
     typed metadata (byte length, content hash) next to it — the schema
-    pattern for image/audio payload tables (decode itself lives in
-    ``pipeline/multimodal.py`` as a mapInPandas stage)."""
+    pattern for image/audio payload tables (the rendered BMP frames of
+    ``viz/render.py`` carry their width, height and media type the
+    same way)."""
     docs = read_table(spark, sf_dir, "documents")
     blob = F.encode(F.col("text"), "UTF-8")
     return docs.select(

@@ -1,7 +1,7 @@
-"""Event-time windowed aggregation — the batch face of the streaming
-module. The reference has no streaming surface (SURVEY §2.10); these
-queries define the tumbling-window semantics that
-``streaming/events.py`` reproduces incrementally with watermarks.
+"""Event-time windowed aggregation over the events table: tumbling
+windows, sessions and lateness audits as batch queries. The reference
+has no streaming surface, and Structured Streaming is out of scope
+(SURVEY §2.10).
 """
 
 from __future__ import annotations
@@ -172,8 +172,8 @@ def q27_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessions via the native merging session_window
     operator — same semantics as the q24 lag/cumsum composition (the
     oracle IS that composition), but executed by the engine's
-    session-merge state operator, which is also the streaming form
-    (streaming/events.py::session_aggregates)."""
+    session-merge state operator, which is also what a Structured
+    Streaming ``session_window`` aggregate runs."""
     ev = read_table(spark, sf_dir, "events", ["user_id", "ts", "value"])
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -548,8 +548,8 @@ def q159_out_of_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-watermark do events arrive? ``late_us`` is the gap between an
     event's timestamp and the running max timestamp in ARRIVAL order
     (event_id = ingest sequence) — exactly the statistic that sizes a
-    Structured Streaming ``withWatermark`` delay (streaming/events.py):
-    a watermark below ``max_late_us`` silently drops rows.
+    Structured Streaming ``withWatermark`` delay: a watermark below
+    ``max_late_us`` silently drops rows.
 
     Scale: the running max partitions by source (per-source watermark,
     the production shape) — no global ordering, no single-partition

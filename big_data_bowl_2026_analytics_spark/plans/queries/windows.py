@@ -169,10 +169,10 @@ GROUP BY user_id, session_id
 def q24_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity): lag -> boundary
     flag -> running sum as session id -> per-session aggregates. The
-    batch twin of the streaming session-window operator in
-    ``streaming/``; this composition is how engines without a session
-    primitive express it at scale (one shuffle on user_id, both windows
-    and the final agg share it).
+    batch twin of the native session-window operator (q27); this
+    composition is how engines without a session primitive express it
+    at scale (one shuffle on user_id, both windows and the final agg
+    share it).
     """
     ev = read_table(spark, sf_dir, "events", ["user_id", "event_id", "ts", "value"])
     epoch = F.col("ts").cast("double")

@@ -216,8 +216,8 @@ def read_table(
             raise ValueError(
                 f"events.ts loaded as unexpected dtype {ts_type!r} — "
                 "the testdata encoding changed again; extend "
-                "read_table's dtype branch (and the streaming probe) "
-                "before running any events query."
+                "read_table's dtype branch before running any events "
+                "query."
             )
     else:
         if cached_schema is not None:

@@ -26,65 +26,16 @@ def write_parquet(
     ``sort_within_partitions`` keeps row-group ordering (e.g. by
     (game_id, play_id, frame_id)) so min/max statistics stay selective
     for point lookups — the scalable replacement for the reference's
-    sorted CSV output (tracking.py:529-536).
+    sorted CSV output (tracking.py:529-536). The sort leads with the
+    partition columns: a partitioned write sorts its input by them,
+    and a sort on other columns alone would be dropped under that one.
     """
     if sort_within_partitions:
-        df = df.sortWithinPartitions(*sort_within_partitions)
+        df = df.sortWithinPartitions(*(partition_by or ()), *sort_within_partitions)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet write — the layout side of
-    ``OPTIMIZE ZORDER BY (x, y)``: quantize both columns against their
-    global min/max, Morton-interleave (operators/layout.py), range-
-    partition into ``n_files`` files by the z-value and sort rows by
-    it inside each file. Every file then covers a compact rectangle of
-    (x, y) space, so parquet min/max statistics prune files for
-    predicates on EITHER column (measured as the q126 chunk-span
-    audit; asserted against real file footers in tests/test_layout.py).
-
-    Scale: one stats pass (two tiny aggregate rows broadcast back),
-    one range-exchange on the z key — the same cost shape as any
-    global sort write. ``repartitionByRange`` samples the z
-    distribution, so file row counts stay balanced under skew."""
-    from pyspark.sql import functions as F
-
-    from ..operators.layout import quantize, zorder_value
-
-    stats = df.agg(
-        F.min(x_col).alias("_minx"),
-        F.max(x_col).alias("_maxx"),
-        F.min(y_col).alias("_miny"),
-        F.max(y_col).alias("_maxy"),
-    )
-    z = (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_z",
-            zorder_value(
-                quantize(F.col(x_col), F.col("_minx"), F.col("_maxx") - F.col("_minx")),
-                quantize(F.col(y_col), F.col("_miny"), F.col("_maxy") - F.col("_miny")),
-            ),
-        )
-        .drop("_minx", "_maxx", "_miny", "_maxy")
-    )
-    (
-        z.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -5,12 +5,13 @@ from .anim import (
     encode_apng,
     encode_gif,
 )
-from .render import encode_bmp, render_play_frames
+from .render import decode_bmp, encode_bmp, render_play_frames
 from .scatter import heatmap_bmp, quadrant_counts, scatter_bins
 
 __all__ = [
     "animate_plays",
     "decode_apng",
+    "decode_bmp",
     "decode_gif",
     "encode_apng",
     "encode_gif",

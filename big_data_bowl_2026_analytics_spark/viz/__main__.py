@@ -50,7 +50,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from ..core import get_spark
-    from .render import render_play_frames
+    from .render import decode_bmp, render_play_frames
 
     spark = get_spark("viz-render")
     before = spark.read.parquet(args.before)
@@ -77,8 +77,6 @@ def main(argv: list[str] | None = None) -> int:
                 img.write(bytes(r.image))
             w.writerow([r.frame_id, r.phase, r.ball_x, r.ball_y, r.n_players])
     if args.apng or args.gif:
-        from ..pipeline.multimodal import decode_bmp
-
         imgs = [decode_bmp(bytes(r.image)) for r in frames]
     if args.apng:
         from .anim import encode_apng

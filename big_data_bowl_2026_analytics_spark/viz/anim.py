@@ -3,9 +3,9 @@ renderer's frames — the engine-side counterpart of the reference's
 matplotlib FuncAnimation clips (reference src/visualization/play.py:
 330-351, assets/clips/).
 
-Same philosophy as pipeline/multimodal.py's BMP/WAV codecs: a real,
-self-contained, pure-python + stdlib-zlib implementation of a narrow,
-deterministic profile — 8-bit truecolor RGB, filter 0 on every
+Same philosophy as viz/render.py's BMP codec: a real, self-contained,
+pure-python + stdlib-zlib implementation of a narrow, deterministic
+profile — 8-bit truecolor RGB, filter 0 on every
 scanline, full-frame fcTL rectangles, dispose/blend 0 — with
 ``decode_apng`` the exact inverse of ``encode_apng`` (pixel equality
 pinned in tests/test_viz_anim.py). No imaging library involved.
@@ -13,10 +13,9 @@ pinned in tests/test_viz_anim.py). No imaging library involved.
 ``animate_plays`` assembles one APNG per play DISTRIBUTEDLY: the
 rendered BMP frames (viz/render.py::render_play_frames) group by play
 and each group zips into one animation blob inside a single
-``applyInPandas`` — blobs never leave the executors, exactly like the
-multimodal decode path. A play's clip is bounded (~70 frames x a
-fixed-canvas raster), so the group size is a model constant, never
-data-sized.
+``applyInPandas`` — blobs never leave the executors. A play's clip is
+bounded (~70 frames x a fixed-canvas raster), so the group size is a
+model constant, never data-sized.
 """
 
 from __future__ import annotations
@@ -169,7 +168,7 @@ def animate_plays(
     ``"apng"`` (default) or ``"gif"`` (the reference's container;
     requires the renderer's bounded palette — encode_gif raises past
     256 distinct colors rather than quantizing)."""
-    from ..pipeline.multimodal import decode_bmp
+    from .render import decode_bmp
 
     if container not in ("apng", "gif"):
         raise ValueError(f"unknown container: {container!r}")

@@ -7,9 +7,7 @@ frame-rebase, np.linspace ball flight, then a matplotlib FuncAnimation
 (play.py:37-162, 182-351). Here rendering is a batch operator: one
 ``applyInPandas`` over (game_id, play_id) groups rasterizes EVERY
 play's frames in parallel and emits them as a binary BMP column with
-typed metadata — the same opaque-media contract the multimodal
-pipeline consumes (pipeline/multimodal.py), so rendered frames flow
-straight back into decode / feature-extract / frame-sample. No
+typed metadata (``decode_bmp`` reads a frame back to pixels). No
 matplotlib, no driver loop, no collect: a group is one play (bounded:
 ~22 players x ~100 frames), so per-task memory is constant and the
 operator scales with the number of plays, not their total size.
@@ -81,8 +79,8 @@ RENDER_SCHEMA = T.StructType(
 def encode_bmp(img: np.ndarray) -> bytes:
     """Pure-numpy encode of an ``(height, width, 3)`` uint8 RGB array
     to an uncompressed bottom-up 24-bpp BMP — the exact inverse of
-    ``pipeline.multimodal.decode_bmp`` (round-trip pinned by test).
-    Rows are stored bottom-up, BGR, padded to 4 bytes."""
+    ``decode_bmp`` (round-trip pinned by test). Rows are stored
+    bottom-up, BGR, padded to 4 bytes."""
     if img.ndim != 3 or img.shape[2] != 3 or img.dtype != np.uint8:
         raise ValueError("expected (h, w, 3) uint8 RGB")
     h, w, _ = img.shape
@@ -95,6 +93,29 @@ def encode_bmp(img: np.ndarray) -> bytes:
         "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0
     )
     return header + info + pixels
+
+
+def decode_bmp(blob: bytes) -> np.ndarray:
+    """Pure-numpy decode of an uncompressed 24-bpp BMP (the public
+    BITMAPINFOHEADER layout) to an ``(height, width, 3)`` uint8 RGB
+    array. Handles bottom-up (positive height) and top-down rows and
+    the 4-byte row padding. No imaging library involved."""
+    if blob[:2] != b"BM" or len(blob) < 54:
+        raise ValueError("not a BMP blob")
+    pixel_off = int.from_bytes(blob[10:14], "little")
+    width = int.from_bytes(blob[18:22], "little", signed=True)
+    height = int.from_bytes(blob[22:26], "little", signed=True)
+    bpp = int.from_bytes(blob[28:30], "little")
+    compression = int.from_bytes(blob[30:34], "little")
+    if bpp != 24 or compression != 0 or width <= 0 or height == 0:
+        raise ValueError("only uncompressed 24-bpp BMP supported")
+    h = abs(height)
+    row_bytes = (width * 3 + 3) & ~3
+    data = np.frombuffer(blob, np.uint8, count=row_bytes * h, offset=pixel_off)
+    rows = data.reshape(h, row_bytes)[:, : width * 3].reshape(h, width, 3)
+    if height > 0:  # bottom-up storage
+        rows = rows[::-1]
+    return rows[..., ::-1]  # stored BGR -> RGB
 
 
 def _px(v: float, scale: int) -> int:
@@ -194,8 +215,8 @@ def render_play_frames(
 
     Scale: the shuffle key is the play — groups are bounded
     (~22 players x ~100 frames), the raster is ``scale``-quadratic
-    but play-count-linear overall, and the output binary column feeds
-    the multimodal operators unchanged. Point lookups (the reference
+    but play-count-linear overall, and each binary frame decodes back
+    to pixels with ``decode_bmp``. Point lookups (the reference
     CLI's one-play mode) are a filter on the result or on the inputs.
     """
     b = before.select(

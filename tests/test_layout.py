@@ -89,53 +89,6 @@ def test_z_adjacency_implies_dimension_locality(spark):
     assert all(r.sx == 8 and r.sy == 8 for r in chunks)
 
 
-def test_write_zordered_files_cover_compact_rectangles(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from big_data_bowl_2026_analytics_spark.sources.writers import (
-        write_parquet,
-        write_zordered,
-    )
-
-    # full 64x64 grid in row-major (natural) order
-    df = spark.createDataFrame(
-        [(x, y) for x in range(64) for y in range(64)], "x long, y long"
-    ).coalesce(4)
-
-    zpath = str(tmp_path / "zord")
-    npath = str(tmp_path / "nat")
-    write_zordered(df, zpath, "x", "y", n_files=16)
-    write_parquet(df.repartitionByRange(16, "x", "y"), npath)
-
-    def spans(path):
-        got = (
-            spark.read.parquet(path)
-            .select("x", "y", F.input_file_name().alias("f"))
-            .groupBy("f")
-            .agg(
-                (F.max("x") - F.min("x") + 1).alias("sx"),
-                (F.max("y") - F.min("y") + 1).alias("sy"),
-            )
-            .collect()
-        )
-        n = len(got)
-        return (
-            sum(r.sx for r in got) / n,
-            sum(r.sy for r in got) / n,
-            n,
-        )
-
-    zx, zy, zn = spans(zpath)
-    nx, ny, nn = spans(npath)
-    assert zn == 16 and nn == 16
-    # z-order: every file's rectangle is tight in BOTH dims; the
-    # range-by-(x,y) layout is tight in x but spans all of y.
-    assert zx <= 20 and zy <= 20
-    assert ny >= 60
-    # schema untouched (the _z key never reaches the files)
-    assert set(spark.read.parquet(zpath).columns) == {"x", "y"}
-
-
 def _hilbert_model(n, x, y):
     """Canonical Wikipedia xy2d (rot-n variant) — the pinned model."""
     d, s = 0, n // 2

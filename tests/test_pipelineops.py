@@ -162,28 +162,6 @@ class TestMergeUpsert:
         updates = spark.createDataFrame([(1, "A")], "k long, v string")
         assert merge_upsert(base, updates, ["k"]).collect()[0].v == "A"
 
-    def test_merge_sql_matches_relational_semantics(self):
-        from big_data_bowl_2026_analytics_spark.operators.merge import merge_into_sql
-
-        sql = merge_into_sql("base", "cdc", ["k1", "k2"], delete_col="deleted")
-        assert "MERGE INTO base t" in sql
-        assert "USING cdc u" in sql
-        assert "ON t.k1 = u.k1 AND t.k2 = u.k2" in sql
-        assert "WHEN MATCHED AND u.deleted THEN DELETE" in sql
-        assert "WHEN MATCHED THEN UPDATE SET *" in sql
-        assert "WHEN NOT MATCHED AND NOT u.deleted THEN INSERT *" in sql
-        plain = merge_into_sql("base", "cdc", ["k"])
-        assert "DELETE" not in plain
-        assert "WHEN NOT MATCHED THEN INSERT *" in plain
-
-    def test_key_condition_quoting_free_identifiers(self):
-        from big_data_bowl_2026_analytics_spark.operators.merge import (
-            merge_key_condition,
-        )
-
-        assert merge_key_condition(["a"]) == "t.a = u.a"
-        assert merge_key_condition(["a", "b"], "x", "y") == "x.a = y.a AND x.b = y.b"
-
 
 class TestWeightedSample:
     def test_deterministic_and_weight_biased(self, spark):

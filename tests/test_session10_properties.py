@@ -1,77 +1,9 @@
-"""Session-10 property tests: the Misra-Gries merge theorem pinned
-against exact counts on arbitrary streams, splits, and k — the pure
-math behind streaming/stateful.py::heavy_hitter_summaries, tested
-without Spark.
+"""Session-10 property tests: the Viterbi operator
+(operators/markov.py::viterbi_paths) pinned against an exhaustive
+all-paths decode, ties included.
 """
 
 from __future__ import annotations
-
-from hypothesis import given, settings, strategies as st
-
-from big_data_bowl_2026_analytics_spark.streaming.stateful import mg_merge
-
-
-@st.composite
-def _stream_and_batches(draw):
-    items = draw(
-        st.lists(st.integers(min_value=0, max_value=12), min_size=1,
-                 max_size=200)
-    )
-    # arbitrary batching: cut points anywhere (order-free guarantee)
-    n_cuts = draw(st.integers(min_value=0, max_value=6))
-    cuts = sorted(
-        draw(
-            st.lists(
-                st.integers(min_value=0, max_value=len(items)),
-                min_size=n_cuts,
-                max_size=n_cuts,
-            )
-        )
-    )
-    bounds = [0, *cuts, len(items)]
-    batches = [
-        items[a:b] for a, b in zip(bounds, bounds[1:]) if b > a
-    ]
-    k = draw(st.integers(min_value=1, max_value=16))
-    return items, batches, k
-
-
-@given(_stream_and_batches())
-@settings(max_examples=300, deadline=None)
-def test_mg_merge_theorem(case):
-    """For ANY stream, ANY batching, ANY k: the folded MG summary has
-    <= k keys; the cumulative decrement D obeys (k+1)*D <= n - S;
-    every estimate under-counts by at most D (absent keys count at
-    most D); and when distinct items <= k the summary is exact."""
-    items, batches, k = case
-    true: dict[int, int] = {}
-    for x in items:
-        true[x] = true.get(x, 0) + 1
-
-    summary: dict[int, int] = {}
-    total_dec = 0
-    for batch in batches:
-        add: dict[int, int] = {}
-        for x in batch:
-            add[x] = add.get(x, 0) + 1
-        summary, d = mg_merge(summary, add, k)
-        assert len(summary) <= k
-        total_dec += d
-
-    n = len(items)
-    s = sum(summary.values())
-    assert (k + 1) * total_dec <= n - s
-    for x, t in true.items():
-        est = summary.get(x, 0)
-        assert est <= t <= est + total_dec
-    for x in summary:
-        assert x in true  # never invents keys
-    if len(true) <= k:
-        assert total_dec == 0 and summary == true
-    # heavy-hitter containment: true count > D => present
-    for x, t in true.items():
-        if t > total_dec:
-            assert x in summary
 
 
 def _brute_viterbi(emit, trans, init, states, T):

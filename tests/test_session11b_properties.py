@@ -220,117 +220,6 @@ def test_jt_tie_corrected_variance_reduces_to_classic_when_tie_free(
     assert var_lehmann == var_classic
 
 
-# ------------------------------------------- streaming minhash merge
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.integers(min_value=0, max_value=10**6), min_size=1,
-             max_size=60),
-    st.integers(min_value=1, max_value=59),
-)
-def test_minhash_signature_is_merge_closed(users, cut):
-    """The signature of a union equals the elementwise min of the
-    parts' signatures — for ANY partition of the input (the property
-    that makes hourly_minhash_signatures micro-batch/order invariant),
-    and two equal user SETS give equal signatures regardless of
-    multiplicity."""
-    import hashlib
-
-    def h(seed, u):
-        return hashlib.md5(f"{seed}|{u}".encode()).hexdigest()
-
-    def sig(us):
-        return tuple(
-            min(h(s, u) for u in us) for s in range(8)
-        )
-
-    cut = min(cut, len(users))
-    a, b = users[:cut] or users, users[cut:] or users
-    merged = tuple(min(x, y) for x, y in zip(sig(a), sig(b)))
-    assert merged == sig(a + b)
-    assert sig(users) == sig(sorted(set(users)))
-
-
-# ------------------------------------------------- streaming kmv/theta
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.integers(min_value=0, max_value=10**6), min_size=1,
-             max_size=200),
-    st.lists(st.integers(min_value=0, max_value=10**6), min_size=1,
-             max_size=200),
-    st.sampled_from([4, 8, 16]),
-)
-def test_kmv_truncation_is_lossless_for_set_algebra(a_users, b_users, k):
-    """The k smallest hashes of A ∪ B all lie inside the k smallest
-    of A or the k smallest of B (the KMV merge theorem), so
-    kmv_union_intersection over TRUNCATED sketches equals the same
-    computation over the full hash sets — and when |A ∪ B| < k
-    (STRICTLY: a full sketch cannot know it saw everything, so at
-    exactly k the estimator path fires) every estimate is EXACT."""
-    from big_data_bowl_2026_analytics_spark.streaming.stateful import (
-        _kmv_hash,
-        kmv_union_intersection,
-    )
-
-    ha = {_kmv_hash(u) for u in a_users}
-    hb = {_kmv_hash(u) for u in b_users}
-    truncated = kmv_union_intersection(
-        sorted(ha)[:k], sorted(hb)[:k], k
-    )
-    full = kmv_union_intersection(sorted(ha), sorted(hb), k)
-    assert truncated == full
-    sa, sb = set(a_users), set(b_users)
-    if len(sa | sb) < k:
-        assert truncated["union_est"] == len(sa | sb)
-        assert truncated["intersection_est"] == len(sa & sb)
-
-
-# --------------------------------------------------- streaming ams/f2
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.integers(min_value=0, max_value=10**5), min_size=1,
-             max_size=80),
-    st.integers(min_value=0, max_value=79),
-    st.integers(min_value=1, max_value=200),
-    st.integers(min_value=1, max_value=200),
-)
-def test_ams_rows_are_additive_and_exact_on_shared_singletons(
-    users, cut, fa, fb
-):
-    """S_j = Σ sign_j(user) is additive over ANY stream split (the
-    windowed-sum merge closure behind hourly_ams_sketch's drain ==
-    batch), and for two windows whose events all carry the SAME
-    single user the inner-product estimator is EXACT: sign² = 1, so
-    mean_j(S_j^A · S_j^B) = f_A · f_B with zero variance."""
-    import hashlib
-
-    def sign(j, u):
-        nib = int(
-            hashlib.md5(f"ams{j}|{u}".encode()).hexdigest()[0], 16
-        )
-        return 1 if nib % 2 == 0 else -1
-
-    n_rows = 8
-    cut = min(cut, len(users))
-    a, b = users[:cut], users[cut:]
-    for j in range(n_rows):
-        sa = sum(sign(j, u) for u in a)
-        sb = sum(sign(j, u) for u in b)
-        assert sa + sb == sum(sign(j, u) for u in users)
-
-    u = users[0]
-    est = (
-        sum((fa * sign(j, u)) * (fb * sign(j, u)) for j in range(n_rows))
-        / n_rows
-    )
-    assert est == fa * fb
-
-
 @settings(max_examples=200, deadline=None)
 @given(
     st.lists(

@@ -231,3 +231,37 @@ def test_local_frame_restores_arrow_conf(spark):
         assert [tuple(r) for r in df.orderBy("k").collect()] == [(1, 0.5, "a"), (2, 1.5, "b")]
     finally:
         spark.conf.set(key, prior)
+
+
+def test_blob_metadata_query_matches_scan(spark):
+    # q39 exposes the binary plumbing over documents as blobs
+    from big_data_bowl_2026_analytics_spark.plans import all_queries
+
+    sf = "/root/testdata/sf0.001"
+    q39 = all_queries()["q39_multimodal_blob_metadata"].builder(spark, sf)
+    row = q39.orderBy("doc_id").first()
+    doc = read_table(spark, sf, "documents").orderBy("doc_id").first()
+    assert row["n_bytes"] == len(doc["text"].encode())
+
+
+def test_partitioned_write_keeps_in_file_sort(spark, tmp_path):
+    """A partitioned write sorted within partitions leaves every file in
+    sort order: the partition-column sort the write plans must not
+    replace the requested one."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    ids = list(range(2000))
+    random.Random(3).shuffle(ids)
+    df = spark.createDataFrame(
+        [(i % 3, i) for i in ids], "week int, id long"
+    ).repartition(4)
+    out = tmp_path / "sorted"
+    write_parquet(df, str(out), partition_by=["week"], sort_within_partitions=["id"])
+    files = sorted(out.rglob("*.parquet"))
+    assert len(files) >= 3
+    for f in files:
+        got = pq.read_table(f).column("id").to_pylist()
+        assert got == sorted(got), f.name
+    assert sorted(r.id for r in spark.read.parquet(str(out)).collect()) == list(range(2000))

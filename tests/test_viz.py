@@ -8,7 +8,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from big_data_bowl_2026_analytics_spark.pipeline.multimodal import decode_bmp
 from big_data_bowl_2026_analytics_spark.schemas import (
     TRACKING_AFTER_SCHEMA,
     TRACKING_BEFORE_SCHEMA,
@@ -22,6 +21,7 @@ from big_data_bowl_2026_analytics_spark.viz.render import (
     LAND_MARK,
     LINE,
     OFFENSE,
+    decode_bmp,
     encode_bmp,
     render_play_frames,
 )
@@ -29,7 +29,7 @@ from fixtures_nfl import make_tracking_after, make_tracking_before
 
 
 def test_encode_bmp_roundtrips_through_decode_bmp():
-    """encode_bmp is the exact inverse of multimodal.decode_bmp,
+    """encode_bmp is the exact inverse of decode_bmp,
     including the 4-byte row padding (odd widths) and bottom-up row
     order."""
     rng = np.random.default_rng(7)
@@ -40,6 +40,36 @@ def test_encode_bmp_roundtrips_through_decode_bmp():
         back = decode_bmp(blob)
         assert back.shape == (h, w, 3)
         assert np.array_equal(back, img)
+
+
+def _bmp_bytes(pixels, top_down=False):
+    """Hand-rolled uncompressed 24-bpp BMP encoder, independent of
+    encode_bmp: pixels is an (H, W, 3) uint8 RGB array; ``top_down``
+    writes a negative height and rows in display order."""
+    import struct
+
+    h, w, _ = pixels.shape
+    row_bytes = (w * 3 + 3) & ~3
+    body = bytearray()
+    rows = pixels if top_down else pixels[::-1]
+    for row in rows:
+        line = bytes(row[:, ::-1].astype("uint8").tobytes())  # RGB -> BGR
+        body += line + b"\x00" * (row_bytes - len(line))
+    height = -h if top_down else h
+    header = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, height, 1, 24, 0, len(body), 0, 0, 0, 0)
+    return bytes(header + dib + body)
+
+
+def test_decode_bmp_real_bytes():
+    # 3x2 gradient with asymmetric channels; odd width forces row padding
+    px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3) * 10
+    for top_down in (False, True):
+        out = decode_bmp(_bmp_bytes(px, top_down=top_down))
+        assert out.shape == (2, 3, 3)
+        assert np.array_equal(out, px)
+    with pytest.raises(ValueError):
+        decode_bmp(b"NOTABMP" + b"\x00" * 64)
 
 
 @pytest.fixture(scope="module")
@@ -154,29 +184,6 @@ def test_render_deterministic(spark):
     assert one == two
 
 
-def test_rendered_frames_feed_multimodal_pipeline(spark, rendered):
-    """Rendered blobs flow through the multimodal feature extractor
-    unchanged — the renderer's output IS the opaque-media contract
-    (binary column + magic-byte dispatch)."""
-    from big_data_bowl_2026_analytics_spark.pipeline.multimodal import (
-        FEATURE_DIM,
-        extract_features,
-    )
-
-    rows = [
-        (r.play_id * 1000 + r.frame_id, "image", bytes(r.image))
-        for r in rendered
-        if r.play_id == 1
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, media_type string, blob binary"
-    )
-    feats = extract_features(media).collect()
-    assert len(feats) == len(rows)
-    for f in feats:
-        assert len(f.features) == FEATURE_DIM
-
-
 def test_scatter_bins_exact_and_bounded(spark):
     """Pixel binning is exact: hand-computable points land in the
     expected pixels with exact counts; the boundary x==x_max clamps to
@@ -205,7 +212,7 @@ def test_scatter_bins_exact_and_bounded(spark):
 def test_heatmap_bmp_pixels(spark):
     """The rasterized heatmap puts the densest bin at the dark ramp
     end, singleton bins lighter, background white, py=0 at the bottom
-    row — decoded back through multimodal.decode_bmp."""
+    row — decoded back through decode_bmp."""
     from big_data_bowl_2026_analytics_spark.viz.scatter import (
         BACKGROUND,
         RAMP_HI,

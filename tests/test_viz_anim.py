@@ -12,7 +12,6 @@ import zlib
 import numpy as np
 import pytest
 
-from big_data_bowl_2026_analytics_spark.pipeline.multimodal import decode_bmp
 from big_data_bowl_2026_analytics_spark.schemas import (
     TRACKING_AFTER_SCHEMA,
     TRACKING_BEFORE_SCHEMA,
@@ -20,6 +19,7 @@ from big_data_bowl_2026_analytics_spark.schemas import (
 from big_data_bowl_2026_analytics_spark.viz import (
     animate_plays,
     decode_apng,
+    decode_bmp,
     encode_apng,
     render_play_frames,
 )

@@ -217,33 +217,6 @@ def main() -> None:
             df, "x", "y", 0.0, 1000.0, 0.0, 1000.0, width=240, height=160
         )
 
-    def q_sketchgrid(k: int) -> DataFrame:
-        # the streaming/events.py mergeable-sketch class (CMS grid /
-        # AMS rows / MinHash mins as batch twins): input rows grow kx
-        # and each row fans out x n_rows, but the groupBy key space is
-        # capped at windows x n_rows — CONSTANT-sized shuffle output,
-        # the bounded-state claim of the windowed-sketch family,
-        # measured.
-        from big_data_bowl_2026_analytics_spark.streaming.events import (
-            _ams_sign_dyn,
-        )
-
-        n_rows = 16
-        df = _multiply(ev, k, "user_id").select(
-            "ts",
-            F.col("user_id").alias("kk"),
-            F.explode(
-                F.array(*[F.lit(j) for j in range(n_rows)])
-            ).alias("j"),
-        )
-        return (
-            df.select(
-                "ts", "j", _ams_sign_dyn("j", F.col("kk"), n_rows).alias("sgn")
-            )
-            .groupBy(F.window("ts", "1 hour").alias("w"), "j")
-            .agg(F.sum("sgn").cast("bigint").alias("s"))
-        )
-
     def q_gramjoin(k: int) -> DataFrame:
         # the q410 class (inter-doc duplicated n-grams): distinct
         # (doc, md5(gram)) incidence -> gram-grain doc-frequency
@@ -292,7 +265,6 @@ def main() -> None:
         ("doc_grain_spectrum", q_docspectrum),
         ("message_passing_round", q_msground),
         ("pixel_binned_scatter", q_pixelbin),
-        ("windowed_sketch_grid", q_sketchgrid),
         ("gram_incidence_joinback", q_gramjoin),
     ]:
         base_rows = None
